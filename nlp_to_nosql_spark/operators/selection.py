@@ -202,34 +202,6 @@ def _bucket_ratios_from(feats: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def dsir_bucket_ratios(
-    df: DataFrame,
-    target: Column,
-    n_buckets: int = 4096,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-bucket importance log-ratios of target vs pool distributions.
-
-    Returns ``(bucket, tc, pc, lr_micro)``: the BIGINT target and pool
-    feature counts and ``floor(1e6 * (ln p̂_target(b) − ln p̂_pool(b)))``
-    under add-one smoothing, i.e. the micro-floored value of::
-
-        ln((tc+1) × (Tp+B)) − ln((pc+1) × (Tt+B))
-
-    — a DIFFERENCE OF TWO lns of exact integer PRODUCTS (each factor an
-    exact BIGINT cast to double, the product one correctly-rounded IEEE
-    multiply), so a mathematically-exact ratio of 1 yields bit-identical
-    ln arguments and an exact 0 in every engine (the r12 four-ln chain
-    flipped the floor at such boundaries between JVM and Python libm).
-    At most ``n_buckets`` rows — the fitted "model", cheap to broadcast.
-    """
-    return _bucket_ratios_from(
-        _feature_buckets(df, target, n_buckets, text_col, id_col),
-        n_buckets,
-    )
-
-
 def dsir_select(
     df: DataFrame,
     target: Column,
@@ -2129,28 +2101,6 @@ def unigram_encode_len_trained_ctes(
         f"FROM {table} d LEFT JOIN agg a USING ({id_col}))"
     )
     return ", ".join(parts)
-
-
-def unigram_encode_len_trained_sql(
-    max_piece_len: int = 4,
-    min_count: int = 2,
-    n_iters: int = 2,
-    max_pieces: int | None = None,
-    scale: int = 1_000_000,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
-    """DuckDB twin of :func:`unigram_encode_len_trained`."""
-    return (
-        "WITH RECURSIVE "
-        + unigram_encode_len_trained_ctes(
-            max_piece_len, min_count, n_iters, max_pieces, scale,
-            table, text_col, id_col,
-        )
-        + f" SELECT {id_col}, CAST(n_tokens AS BIGINT) AS n_tokens "
-        "FROM encoded"
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -18,17 +18,31 @@ deterministic instead of depending on micro-batch boundaries.
 The replay input is written as a SINGLE parquet file so ``availableNow``
 processes it in one micro-batch: within a batch the operator sorts each
 user's events, so replay order is deterministic regardless of how the
-source shuffled them.
+source shuffled them.  The ``foreachBatch`` replays (CDC upsert sink,
+sketch accumulators) instead stage TWO files read one per trigger, so
+their fold into persistent state is exercised across a batch boundary.
+
+Every replay runs through :func:`_run_available_now`, which sets
+``spark.sql.shuffle.partitions`` for the run by one of two rules:
+
+* 4 — the floor for replays whose work stays in the JVM (native
+  stateful operators, stream-stream joins, and the ``foreachBatch``
+  folds, which are plain batch merges with no keyed state store);
+* ``clamp(cores/2, 4, 16)`` (:func:`_replay_partitions`) — only for the
+  ``applyInPandasWithState`` replays, whose per-key Python dispatch
+  parallelizes across state partitions.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from nlp_to_nosql_spark.functions.time import epoch_us
 from nlp_to_nosql_spark.operators.sessions import sessionize_stream
@@ -54,67 +68,29 @@ def _work_dir(tag: str) -> str:
     selfcheck/bench processes at the same SF previously shared a fixed
     per-tag path and could clobber each other's staging between the
     batch write and the stream replay — silently wrong results, the r13
-    advice item).  Within one process the path is stable, which the
-    crash-recovery replays rely on (they re-open the same staging
-    table/checkpoint across simulated restarts in a single session)."""
+    advice item)."""
     return os.path.join(
         tempfile.gettempdir(), f"spark_graft_replay_{os.getpid()}_{tag}"
     )
 
 
-#: Shuffle partitions for the foreachBatch replays (CDC upsert sink,
-#: sketch folds): per-micro-batch BATCH merges with no keyed state store
-#: and no per-key Python dispatch, so the measured 4-partition floor
-#: from the JVM-stateful replays applies (see _replay_partitions).
-_FOREACH_BATCH_PARTITIONS = 4
-
-#: Conf override for the replay state-partition derivation below.
-_REPLAY_PARTITIONS_CONF = "spark.nlp2nosql.replay.partitions"
-
-#: Per-process memo of the resolved replay partition count (see
-#: _replay_partitions — re-opened checkpoints must see the count they
-#: were created with).
-_REPLAY_PARTITIONS_CACHE: dict[str, int] = {}
-
-
 def _replay_partitions(spark: SparkSession) -> int:
-    """State/shuffle partition count for replay runs — scale-adaptive.
+    """State/shuffle partition count for the ``applyInPandasWithState``
+    replays — scale-adaptive: ``clamp(cores/2, 4, 16)``.
 
     Stateful streaming pays two opposing per-micro-batch costs: the
     per-KEY Python dispatch of ``applyInPandasWithState`` (parallelizes
     across state partitions, bounded by cores) and the per-PARTITION
     state-store commit (serial overhead that grows with the partition
-    count).  A bounded replay therefore sizes partitions from the
-    session's parallelism rather than a constant: ``clamp(cores/2, 4,
-    16)``.  Measured at sf0.1 (1 500 keys, warm, this host): the CDC
-    replay runs 5.7 s at 2 partitions, 4.6 at 4, 3.1 at 8, 2.8 at 16;
-    the sessionize replay 3.5 at 4, 3.0 at 8, 2.8 at 16 — dispatch
-    parallelism dominates up to ~cores/2, and past 16 the extra commits
-    buy nothing on replays this size (an earlier round measured 32
-    partitions 3× SLOWER than 8 on the same replay).  A production
-    deployment over unbounded input raises the cap with executor count
-    via ``spark.nlp2nosql.replay.partitions``.
+    count).  Measured at sf0.1 (1 500 keys, warm): the CDC replay runs
+    5.7 s at 2 partitions, 4.6 at 4, 3.1 at 8, 2.8 at 16; the sessionize
+    replay 3.5 at 4, 3.0 at 8, 2.8 at 16 — dispatch parallelism
+    dominates up to ~cores/2, and past 16 the extra commits buy nothing
+    on replays this size (an earlier round measured 32 partitions 3×
+    SLOWER than 8 on the same replay).  Replays with no per-key Python
+    dispatch keep :func:`_run_available_now`'s floor of 4.
     """
-    cached = _REPLAY_PARTITIONS_CACHE.get("n")
-    if cached is not None:
-        return cached
-    conf = spark.conf.get(_REPLAY_PARTITIONS_CONF, "")
-    if conf:
-        try:
-            n = max(1, int(conf))
-        except ValueError as exc:
-            raise ValueError(
-                f"{_REPLAY_PARTITIONS_CONF}={conf!r} is not an integer"
-            ) from exc
-    else:
-        cores = spark.sparkContext.defaultParallelism
-        n = max(4, min(16, cores // 2))
-    # Resolve ONCE per process: state-store checkpoints fix their
-    # partition count at creation, and the crash-recovery replays
-    # re-open the same pid-stable checkpoint dir — a mid-process conf
-    # change would otherwise mismatch them.
-    _REPLAY_PARTITIONS_CACHE["n"] = n
-    return n
+    return max(4, min(16, spark.sparkContext.defaultParallelism // 2))
 
 
 #: Serializes the shuffle-partition conf swap below: the conf is
@@ -124,29 +100,106 @@ def _replay_partitions(spark: SparkSession) -> int:
 _REPLAY_CONF_LOCK = threading.Lock()
 
 
-def _run_to_memory(
-    stream_df: DataFrame,
-    name: str,
-    output_mode: str,
-    partitions: int | None = None,
+def _run_available_now(
+    spark: SparkSession, writer: DataStreamWriter, partitions: int = 4
 ) -> None:
-    spark = stream_df.sparkSession
-    if partitions is None:
-        partitions = _replay_partitions(spark)
+    """Run ``writer`` to completion under an ``availableNow`` trigger
+    with ``spark.sql.shuffle.partitions`` set to ``partitions`` for the
+    run.  The default 4 is the measured floor for JVM-side replays: the
+    stream-stream join is stable at 4 and degrades badly past it (5-36 s
+    at 16 on sf0.1 — per-partition store init/commit × 2 stores).  A
+    failure inside the query (e.g. a ``foreachBatch`` fold raising)
+    surfaces from ``awaitTermination`` with the conf restored and the
+    lock released."""
     with _REPLAY_CONF_LOCK:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
         try:
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+            writer.trigger(availableNow=True).start().awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _run_to_memory(
+    stream_df: DataFrame,
+    name: str,
+    output_mode: str,
+    partitions: int = 4,
+) -> None:
+    _run_available_now(
+        stream_df.sparkSession,
+        stream_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode),
+        partitions,
+    )
+
+
+def _run_folded(
+    spark: SparkSession, src: DataFrame, schema: str, tag: str, fold
+) -> str:
+    """Replay ``src`` as TWO micro-batches through ``foreachBatch``:
+    stage it as two parquet files read one per trigger, clear the
+    checkpoint and the output directory, and call ``fold(table, batch,
+    batch_id)`` per micro-batch.  Returns the output directory
+    ``table`` the folds maintain."""
+    in_path = _work_dir(f"{tag}_in")
+    src.repartition(2).write.mode("overwrite").parquet(in_path)
+    table = _work_dir(f"{tag}_table")
+    ckpt = _work_dir(f"{tag}_ckpt")
+    shutil.rmtree(table, ignore_errors=True)
+    shutil.rmtree(ckpt, ignore_errors=True)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in_path)
+    )
+    _run_available_now(
+        spark,
+        stream.writeStream.foreachBatch(
+            lambda batch, batch_id: fold(table, batch, batch_id)
+        ).option("checkpointLocation", ckpt),
+    )
+    return table
+
+
+def _merge_into(spark: SparkSession, table: str, schema, merge) -> None:
+    """One fold step into a persistent parquet table: recover any
+    crash-parked state, write ``merge(cur)`` (``cur`` = the current table
+    read with ``schema``, or None before the first batch) to ``_next``,
+    then promote it with a crash-safe directory swap.
+
+    Crash RECOVERY first: a crash between the two ``os.replace`` calls in
+    the swap leaves the live state parked at ``_old`` with no table dir.
+    Restore it before reading — otherwise a checkpoint retry would merge
+    from the batch alone and the swap's first ``rmtree(old)`` would
+    delete the sole copy of prior state (round-6 advice).
+
+    Swap order: move the live table ASIDE, promote the new one, drop the
+    old.  A crash leaves the state recoverable on disk at either
+    ``table`` or ``_old`` — the table path itself is briefly absent
+    between the two renames, which is exactly the window the recovery
+    block closes.  (rmtree-then-replace had a true loss window:
+    checkpoint replay would rebuild from a single micro-batch and
+    silently drop earlier keys.)  Every merge this module passes is
+    idempotent, so ``foreachBatch``'s at-least-once re-delivery of a
+    batch is absorbed.
+    """
+    old = table + "_old"
+    if not os.path.isdir(table) and os.path.isdir(old):
+        os.replace(old, table)
+    cur = (
+        spark.read.schema(schema).parquet(table)
+        if os.path.isdir(table)
+        else None
+    )
+    nxt = table + "_next"
+    merge(cur).write.mode("overwrite").parquet(nxt)
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(table):
+        os.replace(table, old)
+    os.replace(nxt, table)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def _sentinels(src: DataFrame, max_ts) -> DataFrame:
@@ -194,6 +247,7 @@ def replay_sessionize(
         sessionize_stream(stream, gap_minutes=gap_minutes, watermark="0 seconds"),
         name,
         "append",
+        _replay_partitions(spark),
     )
 
     out = spark.table(name).filter(F.col("session_start") <= F.lit(max_ts))
@@ -266,11 +320,7 @@ def replay_native_session_window(
         )
     )
     name = f"replay_{tag}_native_sessions"
-    # JVM-native stateful op: no per-key Python dispatch, so state
-    # partitions stay at the measured 4-partition floor (see
-    # _replay_partitions - the auto rule is for applyInPandasWithState
-    # replays whose per-key dispatch parallelizes).
-    _run_to_memory(rolled, name, "append", partitions=4)
+    _run_to_memory(rolled, name, "append")
     return (
         spark.table(name)
         .filter(F.col("session_window.start") <= F.lit(max_ts))
@@ -300,10 +350,7 @@ def replay_windowed_counts(
         "event_id long, ts timestamp, event_type string, value double"
     ).parquet(path)
     name = f"replay_{tag}_windows"
-    _run_to_memory(
-        windowed_event_counts(stream, window=window), name, "complete",
-        partitions=4,
-    )
+    _run_to_memory(windowed_event_counts(stream, window=window), name, "complete")
     return spark.table(name)
 
 
@@ -330,10 +377,7 @@ def replay_dedup_distinct(
 
     stream = spark.readStream.schema("doc_id long, fp string").parquet(path)
     name = f"replay_{tag}_distinct"
-    _run_to_memory(
-        stream.dropDuplicates(["fp"]).select("fp"), name, "append",
-        partitions=4,
-    )
+    _run_to_memory(stream.dropDuplicates(["fp"]).select("fp"), name, "append")
     return spark.table(name)
 
 
@@ -379,7 +423,7 @@ def replay_dim_join(
         )
     )
     name = f"replay_{tag}_dimjoin"
-    _run_to_memory(rolled, name, "complete", partitions=4)
+    _run_to_memory(rolled, name, "complete")
     return spark.table(name)
 
 
@@ -423,11 +467,10 @@ def replay_latest_state(
         .parquet(path)
     )
     name = f"replay_{tag}_latest"
-    # State partitions from _replay_partitions: the per-key Python
-    # dispatch (|keys| calls per micro-batch) parallelizes across state
-    # partitions — measured 5.7 s at 2 partitions vs 2.8 s at 16 on the
-    # sf0.1 replay (1 500 keys, warm).
-    _run_to_memory(latest_state_stream(stream, keys=keys), name, "update")
+    _run_to_memory(
+        latest_state_stream(stream, keys=keys), name, "update",
+        _replay_partitions(spark),
+    )
 
     out = spark.table(name)
     w = Window.partitionBy(*keys).orderBy(
@@ -441,49 +484,21 @@ def replay_latest_state(
 
 
 def _compact_upsert(spark: SparkSession, table: str, batch: DataFrame) -> None:
-    """One CDC compaction step: recover any crash-parked state, merge the
-    batch into the current table under latest-wins, then promote the
-    merged table with a crash-safe directory swap.
-
-    Crash RECOVERY first: a crash between the two ``os.replace`` calls in
-    the swap leaves the live state parked at ``_old`` with no table dir.
-    Restore it before reading — otherwise a checkpoint retry would merge
-    from the batch alone and the swap's first ``rmtree(old)`` would
-    delete the sole copy of prior compacted state (round-6 advice).
-
-    Swap order: move the live table ASIDE, promote the new one, drop the
-    old.  A crash leaves the compacted state recoverable on disk at
-    either ``table`` or ``_old`` — the table path itself is briefly
-    absent between the two renames, which is exactly the window the
-    recovery block closes.  (rmtree-then-replace had a true loss window:
-    checkpoint replay would rebuild from a single micro-batch and
-    silently drop earlier keys.)
-    """
-    import shutil
-
+    """One CDC compaction step: merge the batch into the compacted table
+    under latest-wins, via :func:`_merge_into`'s crash-safe swap."""
     from nlp_to_nosql_spark.operators.changelog import latest_wins
 
-    old = table + "_old"
-    if not os.path.isdir(table) and os.path.isdir(old):
-        os.replace(old, table)
-    cur = (
-        spark.read.schema(batch.schema).parquet(table)
-        if os.path.isdir(table)
-        else None
+    _merge_into(
+        spark,
+        table,
+        batch.schema,
+        lambda cur: latest_wins(
+            batch if cur is None else cur.unionByName(batch),
+            ["user_id", "event_type"],
+            ["ts", "event_id"],
+            ["value"],
+        ),
     )
-    merged = latest_wins(
-        batch if cur is None else cur.unionByName(batch),
-        ["user_id", "event_type"],
-        ["ts", "event_id"],
-        ["value"],
-    )
-    nxt = table + "_next"
-    merged.write.mode("overwrite").parquet(nxt)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(table):
-        os.replace(table, old)
-    os.replace(nxt, table)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def replay_cdc_upsert_sink(
@@ -508,47 +523,16 @@ def replay_cdc_upsert_sink(
     state-store formulation (``replay_latest_state``), proving the two
     CDC implementations (keyed state vs batch-merge sink) agree.
     """
-    import shutil
-
-    from nlp_to_nosql_spark.operators.changelog import latest_wins
-
-    src = events.select("user_id", "event_type", "ts", "event_id", "value")
-    in_path = _work_dir(f"{tag}_in")
-    src.repartition(2).write.mode("overwrite").parquet(in_path)
-
-    table = _work_dir(f"{tag}_table")
-    shutil.rmtree(table, ignore_errors=True)
-    ckpt = _work_dir(f"{tag}_ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
-
     # TIMESTAMP_NTZ round-trips through the staged parquet unchanged; no
     # watermark is involved, so no LTZ cast is needed on this path.
-    stream = (
-        spark.readStream.schema(
-            "user_id long, event_type string, ts timestamp_ntz, "
-            "event_id long, value double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
+    table = _run_folded(
+        spark,
+        events.select("user_id", "event_type", "ts", "event_id", "value"),
+        "user_id long, event_type string, ts timestamp_ntz, "
+        "event_id long, value double",
+        tag,
+        lambda table, batch, _batch_id: _compact_upsert(spark, table, batch),
     )
-
-    def upsert(batch: DataFrame, _batch_id: int) -> None:
-        _compact_upsert(spark, table, batch)
-
-    with _REPLAY_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_FOREACH_BATCH_PARTITIONS))
-        try:
-            q = (
-                stream.writeStream.foreachBatch(upsert)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
     return spark.read.parquet(table).select(
         "user_id", "event_type", "event_id", "value"
     )
@@ -581,10 +565,9 @@ def replay_running_totals(
     )
 
     name = f"replay_{tag}_running"
-    # Two micro-batches x one Python dispatch per key: state partitions
-    # from _replay_partitions (dispatch parallelism beats per-partition
-    # commit overhead at this key count — see the derivation note).
-    _run_to_memory(running_totals_stream(stream), name, "update")
+    _run_to_memory(
+        running_totals_stream(stream), name, "update", _replay_partitions(spark)
+    )
 
     # Update-mode sink holds one row per (user, batch-they-appeared-in);
     # n_events strictly increases per user, so rank 1 by n_events desc is
@@ -658,11 +641,7 @@ def replay_click_purchase_join(
     )
 
     name = f"replay_{tag}_ssjoin"
-    # The join keeps TWO state stores and no per-key Python dispatch:
-    # measured at sf0.1 it is stable at 4 partitions (2.5 s min-of-5)
-    # and degrades badly past that (5-36 s at 16 — per-partition store
-    # init/commit x2 stores dominates), so it pins the JVM-replay floor.
-    _run_to_memory(joined, name, "append", partitions=4)
+    _run_to_memory(joined, name, "append")
     return spark.table(name)
 
 
@@ -697,7 +676,6 @@ def replay_dedup_within_watermark(
         ),
         name,
         "append",
-        partitions=4,
     )
     return spark.table(name)
 
@@ -747,7 +725,7 @@ def replay_incremental_admission(
         corpus_fps, "fp", "left_anti"
     )
     name = f"replay_{tag}_admission"
-    _run_to_memory(admitted.select("fp"), name, "append", partitions=4)
+    _run_to_memory(admitted.select("fp"), name, "append")
     return spark.table(name)
 
 
@@ -814,81 +792,91 @@ def replay_paragraph_admission(
         .join(corpus_fps, "fp", "left_anti")
     )
     name = f"replay_{tag}_para_admission"
-    _run_to_memory(admitted.select("fp"), name, "append", partitions=4)
+    _run_to_memory(admitted.select("fp"), name, "append")
     return spark.table(name)
 
 
 def _fold_registers(
-    spark: SparkSession, table: str, batch: DataFrame, m: int = 64
-) -> None:
-    """One HLL fold step: recover crash-parked state, MAX-merge the
-    batch's register table into the current one, promote with the
-    crash-safe move-aside swap (same discipline as
-    :func:`_compact_upsert`).  MAX merge is idempotent, so foreachBatch
-    re-delivery is a no-op (pinned by test)."""
-    import shutil
-
-    from nlp_to_nosql_spark.operators.sketch import hll_registers
-
-    old = table + "_old"
-    if not os.path.isdir(table) and os.path.isdir(old):
-        os.replace(old, table)
-    regs = hll_registers(batch, "text", m=m)
-    if os.path.isdir(table):
-        cur = spark.read.schema("reg int, max_rho int").parquet(table)
-        regs = (
-            cur.unionByName(regs)
-            .groupBy("reg")
-            .agg(F.max("max_rho").alias("max_rho"))
-        )
-    nxt = table + "_next"
-    regs.write.mode("overwrite").parquet(nxt)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(table):
-        os.replace(table, old)
-    os.replace(nxt, table)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _fold_registers_by(
     spark: SparkSession,
     table: str,
     batch: DataFrame,
-    key_col: str,
+    key_cols: tuple = (),
     m: int = 64,
 ) -> None:
-    """Keyed :func:`_fold_registers`: MAX-merge the batch's GROUPED
-    register table (one sketch per ``key_col`` value) into the
-    persistent one — same idempotent merge, same crash-safe swap."""
-    import shutil
-
+    """One HLL fold step: MAX-merge the batch's register table — one
+    sketch per ``key_cols`` value when keys are given, else one global
+    sketch — into the persistent one via :func:`_merge_into`.  MAX merge
+    is idempotent, so foreachBatch re-delivery is a no-op (pinned by
+    test)."""
     from nlp_to_nosql_spark.operators.sketch import (
+        hll_registers,
         hll_registers_by,
         tokens_by,
     )
 
-    old = table + "_old"
-    if not os.path.isdir(table) and os.path.isdir(old):
-        os.replace(old, table)
-    regs = hll_registers_by(
-        tokens_by(batch, [key_col], "text"), [key_col], "tok", m=m
+    keys = list(key_cols)
+    regs = (
+        hll_registers_by(tokens_by(batch, keys, "text"), keys, "tok", m=m)
+        if keys
+        else hll_registers(batch, "text", m=m)
     )
-    if os.path.isdir(table):
-        cur = spark.read.schema(
-            f"{key_col} string, reg int, max_rho int"
-        ).parquet(table)
-        regs = (
+    schema = ", ".join([f"{k} string" for k in keys] + ["reg int", "max_rho int"])
+
+    def merge(cur: DataFrame | None) -> DataFrame:
+        if cur is None:
+            return regs
+        return (
             cur.unionByName(regs)
-            .groupBy(key_col, "reg")
+            .groupBy(*keys, "reg")
             .agg(F.max("max_rho").alias("max_rho"))
         )
-    nxt = table + "_next"
-    regs.write.mode("overwrite").parquet(nxt)
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.isdir(table):
-        os.replace(table, old)
-    os.replace(nxt, table)
-    shutil.rmtree(old, ignore_errors=True)
+
+    _merge_into(spark, table, schema, merge)
+
+
+def _fold_kmv(
+    spark: SparkSession,
+    table: str,
+    batch: DataFrame,
+    key_col: str,
+    k: int = 64,
+) -> None:
+    """One KMV fold step: union the batch's distinct ``(key_col, h)``
+    token hashes into the persistent bottom-k table and keep the ``k``
+    smallest per key, via :func:`_merge_into`.  Idempotent: a
+    re-delivered batch only unions in hashes already present or already
+    above the k-th."""
+    from nlp_to_nosql_spark.operators.dedup import md5_hash60
+    from nlp_to_nosql_spark.operators.sketch import tokens_by
+
+    rows = tokens_by(batch, [key_col], "text").select(
+        key_col, md5_hash60(F.col("tok")).alias("h")
+    )
+
+    def merge(cur: DataFrame | None) -> DataFrame:
+        hashes = (rows if cur is None else cur.unionByName(rows)).groupBy(
+            key_col, "h"
+        ).agg(F.lit(1))
+        w = Window.partitionBy(key_col).orderBy("h")
+        return (
+            hashes.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= k)
+            .select(key_col, "h")
+        )
+
+    _merge_into(spark, table, f"{key_col} string, h long", merge)
+
+
+def _fold_cms(
+    parts: str, batch: DataFrame, batch_id: int, depth: int = 4, width: int = 1024
+) -> None:
+    """One CMS fold step: write the batch's partial sketch to its OWN
+    ``batch_id=N`` directory — overwrite there is retry-idempotent."""
+    from nlp_to_nosql_spark.operators.sketch import cms_cells
+
+    cms_cells(batch, "text", depth=depth, width=width).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(parts, f"batch_id={batch_id}"))
 
 
 def replay_hll_by_accumulate(
@@ -906,40 +894,15 @@ def replay_hll_by_accumulate(
     split equals the batch grouped sketch over the whole corpus
     (test-pinned), so the final NDV projection shares ``sketch3``'s
     oracle verbatim."""
-    import shutil
-
-    src = docs.select("doc_id", key_col, "text")
-    in_path = _work_dir(f"{tag}_in")
-    src.repartition(2).write.mode("overwrite").parquet(in_path)
-
-    table = _work_dir(f"{tag}_table")
-    shutil.rmtree(table, ignore_errors=True)
-    ckpt = _work_dir(f"{tag}_ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(f"doc_id long, {key_col} string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
+    table = _run_folded(
+        spark,
+        docs.select("doc_id", key_col, "text"),
+        f"doc_id long, {key_col} string, text string",
+        tag,
+        lambda table, batch, _batch_id: _fold_registers(
+            spark, table, batch, (key_col,), m=m
+        ),
     )
-
-    def fold(batch: DataFrame, _batch_id: int) -> None:
-        _fold_registers_by(spark, table, batch, key_col, m=m)
-
-    with _REPLAY_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_FOREACH_BATCH_PARTITIONS))
-        try:
-            q = (
-                stream.writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
     return spark.read.parquet(table).select(key_col, "reg", "max_rho")
 
 
@@ -961,48 +924,21 @@ def replay_hll_accumulate(
     State is ``m`` int rows regardless of corpus size — the sketch never
     grows, so this runs forever on an unbounded crawl stream where the
     exact-distinct formulation (``dropDuplicates`` keyed state) grows
-    O(vocabulary).  The table promote reuses the crash-safe move-aside
-    swap discipline of :func:`_compact_upsert` (recovery first, never a
-    moment with both copies gone).
+    O(vocabulary).  The table promote is :func:`_merge_into`'s crash-safe
+    move-aside swap (recovery first, never a moment with both copies
+    gone).
 
     Replayed over two micro-batches; returns the final ``(reg,
     max_rho)`` table — oracle shared verbatim with the batch
     ``sketch1_hll_registers`` query.
     """
-    import shutil
-
-    src = docs.select("doc_id", "text")
-    in_path = _work_dir(f"{tag}_in")
-    src.repartition(2).write.mode("overwrite").parquet(in_path)
-
-    table = _work_dir(f"{tag}_table")
-    shutil.rmtree(table, ignore_errors=True)
-    ckpt = _work_dir(f"{tag}_ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
+    table = _run_folded(
+        spark,
+        docs.select("doc_id", "text"),
+        "doc_id long, text string",
+        tag,
+        lambda table, batch, _batch_id: _fold_registers(spark, table, batch, m=m),
     )
-
-    def fold(batch: DataFrame, _batch_id: int) -> None:
-        _fold_registers(spark, table, batch, m=m)
-
-    with _REPLAY_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_FOREACH_BATCH_PARTITIONS))
-        try:
-            q = (
-                stream.writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
     return spark.read.parquet(table).select("reg", "max_rho")
 
 
@@ -1016,11 +952,11 @@ def replay_kmv_accumulate(
     """Streaming per-key KMV accumulation — the bottom-k twin of
     :func:`replay_hll_accumulate`: fold each arriving micro-batch's
     distinct token hashes into a persistent ``(key, h)`` bottom-k table
-    via union + re-rank.  Like the HLL MAX merge (and unlike CMS SUM),
-    the bottom-k merge is IDEMPOTENT — re-delivering a batch unions in
-    hashes that are already present (or already above the k-th), so
-    foreachBatch's at-least-once semantics are absorbed for free and no
-    batch-id keyed partials are needed.
+    via union + re-rank (:func:`_fold_kmv`).  Like the HLL MAX merge (and
+    unlike CMS SUM), the bottom-k merge is IDEMPOTENT — re-delivering a
+    batch unions in hashes that are already present (or already above
+    the k-th), so foreachBatch's at-least-once semantics are absorbed
+    for free and no batch-id keyed partials are needed.
 
     State is ≤ ``|keys| · k`` int rows regardless of corpus size.  The
     final table reassembles through the SAME
@@ -1029,74 +965,15 @@ def replay_kmv_accumulate(
     sketch BY CONSTRUCTION and shares its DuckDB oracle verbatim
     (``kmv_by_sql``).
     """
-    import shutil
+    from nlp_to_nosql_spark.operators.sketch import kmv_assemble
 
-    from nlp_to_nosql_spark.operators.dedup import md5_hash60
-    from nlp_to_nosql_spark.operators.sketch import kmv_assemble, tokens_by
-
-    src = docs.select("doc_id", key_col, "text")
-    in_path = _work_dir(f"{tag}_in")
-    src.repartition(2).write.mode("overwrite").parquet(in_path)
-
-    table = _work_dir(f"{tag}_table")
-    shutil.rmtree(table, ignore_errors=True)
-    ckpt = _work_dir(f"{tag}_ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema(f"doc_id long, {key_col} string, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
+    table = _run_folded(
+        spark,
+        docs.select("doc_id", key_col, "text"),
+        f"doc_id long, {key_col} string, text string",
+        tag,
+        lambda table, batch, _batch_id: _fold_kmv(spark, table, batch, key_col, k),
     )
-
-    def fold(batch: DataFrame, _batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        old = table + "_old"
-        if not os.path.isdir(table) and os.path.isdir(old):
-            os.replace(old, table)
-        rows = (
-            tokens_by(batch, [key_col], "text")
-            .select(key_col, md5_hash60(F.col("tok")).alias("h"))
-            .groupBy(key_col, "h")
-            .agg(F.lit(1))
-            .select(key_col, "h")
-        )
-        if os.path.isdir(table):
-            cur = spark.read.schema(f"{key_col} string, h long").parquet(
-                table
-            )
-            rows = cur.unionByName(rows).groupBy(key_col, "h").agg(
-                F.lit(1)
-            ).select(key_col, "h")
-        w = Window.partitionBy(key_col).orderBy("h")
-        trimmed = (
-            rows.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select(key_col, "h")
-        )
-        nxt = table + "_next"
-        trimmed.write.mode("overwrite").parquet(nxt)
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(table):
-            os.replace(table, old)
-        os.replace(nxt, table)
-        shutil.rmtree(old, ignore_errors=True)
-
-    with _REPLAY_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_FOREACH_BATCH_PARTITIONS))
-        try:
-            q = (
-                stream.writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
     final = spark.read.schema(f"{key_col} string, h long").parquet(table)
     return kmv_assemble(final, [key_col], k)
 
@@ -1117,58 +994,29 @@ def replay_cms_accumulate(
     directory keyed by the checkpoint's ``batch_id``
     (``.../batch_id=N``, mode=overwrite) — a retry of batch N overwrites
     its own partial instead of adding to it — and the read side folds
-    the partials with one cell-wise SUM.  (stream11's latest-wins merge
-    absorbs re-delivery by idempotence; this absorbs it by keying writes
-    on the replayable batch id — the two halves of Spark's official
-    foreachBatch exactly-once recipe.)
+    the partials with one cell-wise SUM (:func:`_fold_cms`).  (stream11's
+    latest-wins merge absorbs re-delivery by idempotence; this absorbs
+    it by keying writes on the replayable batch id — the two halves of
+    Spark's official foreachBatch exactly-once recipe.)
 
     State is ≤ depth × width ints per batch directory; compaction of old
     partials into a base sketch is the same SUM, left to the caller.
     Returns the folded ``(row, col, cnt)`` table — oracle shared with
     the batch :func:`~nlp_to_nosql_spark.operators.sketch.cms_cells`.
     """
-    import shutil
-
-    from nlp_to_nosql_spark.operators.sketch import cms_cells
-
-    src = docs.select("doc_id", "text")
-    in_path = _work_dir(f"{tag}_in")
-    src.repartition(2).write.mode("overwrite").parquet(in_path)
-
-    parts = _work_dir(f"{tag}_parts")
-    shutil.rmtree(parts, ignore_errors=True)
-    ckpt = _work_dir(f"{tag}_ckpt")
-    shutil.rmtree(ckpt, ignore_errors=True)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_path)
+    parts = _run_folded(
+        spark,
+        docs.select("doc_id", "text"),
+        "doc_id long, text string",
+        tag,
+        lambda parts, batch, batch_id: _fold_cms(
+            parts, batch, batch_id, depth, width
+        ),
     )
-
-    def fold(batch: DataFrame, batch_id: int) -> None:
-        # overwrite of the batch's OWN directory = retry-idempotent
-        cms_cells(batch, "text", depth=depth, width=width).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(parts, f"batch_id={batch_id}"))
-
-    with _REPLAY_CONF_LOCK:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(_FOREACH_BATCH_PARTITIONS))
-        try:
-            q = (
-                stream.writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
     return (
         spark.read.option("basePath", parts)
         .parquet(parts)
         .groupBy("row", "col")
         .agg(F.sum("cnt").alias("cnt"))
     )
+

@@ -323,38 +323,111 @@ def test_native_session_window_stream_equals_batch(spark, events):
     assert len(got) == 3  # users 1 (two sessions) + 2 (one)
 
 
-def test_compact_upsert_recovers_crash_parked_state(spark, tmp_path):
-    """Crash window of the CDC upsert swap: after a crash between the
-    two os.replace calls the live table sits at ``_old`` with no table
-    dir.  A retry must restore it and merge BOTH prior and batch keys —
-    round-6 advice showed the retry otherwise deletes the sole copy of
-    prior compacted state and silently drops its keys."""
-    import os
-
-    from nlp_to_nosql_spark.streaming.replay import _compact_upsert
-
-    table = str(tmp_path / "cdc_table")
-    b1 = spark.createDataFrame(
-        [(1, "click", __import__("datetime").datetime(2024, 1, 1), 10, 1.0)],
+def _cdc_batch(spark, rows):
+    return spark.createDataFrame(
+        rows,
         "user_id long, event_type string, ts timestamp_ntz, "
         "event_id long, value double",
     )
-    _compact_upsert(spark, table, b1)
+
+
+def _docs_batch(spark, lo, hi):
+    return spark.createDataFrame(
+        [(i, "en" if i % 3 else "fr", f"tok{i} tok{i % 4}") for i in range(lo, hi)],
+        "doc_id long, lang string, text string",
+    )
+
+
+def _fold_cases():
+    from nlp_to_nosql_spark.streaming import replay as r
+
+    cdc_rows = (
+        [(1, "click", datetime.datetime(2024, 1, 1), 10, 1.0)],
+        [(2, "view", datetime.datetime(2024, 1, 2), 11, 2.0)],
+    )
+    return {
+        "cdc": (
+            lambda spark, table, b: r._compact_upsert(spark, table, b),
+            lambda spark, i: _cdc_batch(spark, cdc_rows[i]),
+        ),
+        "hll": (
+            lambda spark, table, b: r._fold_registers(spark, table, b),
+            lambda spark, i: _docs_batch(spark, 20 * i, 20 * i + 20),
+        ),
+        "hll_by": (
+            lambda spark, table, b: r._fold_registers(
+                spark, table, b, ("lang",)
+            ),
+            lambda spark, i: _docs_batch(spark, 20 * i, 20 * i + 20),
+        ),
+        "kmv": (
+            lambda spark, table, b: r._fold_kmv(spark, table, b, "lang", 8),
+            lambda spark, i: _docs_batch(spark, 20 * i, 20 * i + 20),
+        ),
+    }
+
+
+@pytest.mark.parametrize("fold_name", ["cdc", "hll", "hll_by", "kmv"])
+def test_fold_recovers_crash_parked_state(spark, tmp_path, fold_name):
+    """Crash window of the fold swap: after a crash between the two
+    os.replace calls the live table sits at ``_old`` with no table dir.
+    A retry must restore it and merge BOTH prior state and batch —
+    round-6 advice showed the retry otherwise deletes the sole copy of
+    prior state and silently drops its keys."""
+    import os
+
+    fold, batch = _fold_cases()[fold_name]
+
+    def state(path):
+        return sorted(tuple(r) for r in spark.read.parquet(path).collect())
+
+    table = str(tmp_path / "table")
+    fold(spark, table, batch(spark, 0))
     # Simulate the crash: table promoted aside, promotion of _next lost.
     os.replace(table, table + "_old")
     assert not os.path.isdir(table)
+    fold(spark, table, batch(spark, 1))  # the checkpoint retry
 
-    b2 = spark.createDataFrame(
-        [(2, "view", __import__("datetime").datetime(2024, 1, 2), 11, 2.0)],
-        b1.schema,
-    )
-    _compact_upsert(spark, table, b2)  # the checkpoint retry
-    got = {
-        (r["user_id"], r["event_type"], r["value"])
-        for r in spark.read.parquet(table).collect()
-    }
-    assert got == {(1, "click", 1.0), (2, "view", 2.0)}
+    clean = str(tmp_path / "clean")
+    fold(spark, clean, batch(spark, 0))
+    fold(spark, clean, batch(spark, 1))
+    second_only = str(tmp_path / "second_only")
+    fold(spark, second_only, batch(spark, 1))
+
+    assert state(table) == state(clean)
+    assert state(table) != state(second_only)  # prior state really merged
     assert not os.path.isdir(table + "_old")
+
+
+def test_failing_fold_propagates_and_restores_conf(spark, monkeypatch):
+    """A foreachBatch fold that raises fails the replay call itself, the
+    shuffle-partition conf is restored and the replay lock released, so
+    the next replay runs normally."""
+    from nlp_to_nosql_spark.operators.sketch import hll_registers
+    from nlp_to_nosql_spark.streaming import replay as r
+
+    docs = _docs_batch(spark, 0, 20)
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        def boom(*_args, **_kwargs):
+            raise RuntimeError("fold exploded")
+
+        with monkeypatch.context() as m:
+            m.setattr(r, "_fold_registers", boom)
+            with pytest.raises(Exception, match="fold exploded"):
+                r.replay_hll_accumulate(spark, docs, tag="failfold")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "7"
+        assert not r._REPLAY_CONF_LOCK.locked()
+
+        got = {
+            tuple(x) for x in r.replay_hll_accumulate(
+                spark, docs, tag="failfold"
+            ).collect()
+        }
+        assert got == {tuple(x) for x in hll_registers(docs).collect()}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prior)
 
 
 def test_hll_accumulate_stream_equals_batch_sketch(spark):
@@ -412,19 +485,19 @@ def test_hll_by_refold_is_idempotent(spark, tmp_path):
         hll_registers_by,
         tokens_by,
     )
-    from nlp_to_nosql_spark.streaming.replay import _fold_registers_by
+    from nlp_to_nosql_spark.streaming.replay import _fold_registers
 
     docs = spark.createDataFrame(
         [(i, "en" if i % 2 else "de", f"gamma tok{i}") for i in range(20)],
         ["doc_id", "lang", "text"],
     )
     table = str(tmp_path / "regs_by")
-    _fold_registers_by(spark, table, docs, "lang")
+    _fold_registers(spark, table, docs, ("lang",))
     once = {
         (r["lang"], r["reg"], r["max_rho"])
         for r in spark.read.parquet(table).collect()
     }
-    _fold_registers_by(spark, table, docs, "lang")  # redelivery
+    _fold_registers(spark, table, docs, ("lang",))  # redelivery
     twice = {
         (r["lang"], r["reg"], r["max_rho"])
         for r in spark.read.parquet(table).collect()
@@ -490,30 +563,21 @@ def test_cms_accumulate_stream_equals_batch_sketch(spark):
 def test_cms_accumulate_batch_retry_is_idempotent(spark, tmp_path):
     # a retried batch OVERWRITES its own batch_id directory instead of
     # adding to it — the exactly-once half of the additive-merge sink
-    import os
-
-    from pyspark.sql import functions as F2
-
     from nlp_to_nosql_spark.operators.sketch import cms_cells
+    from nlp_to_nosql_spark.streaming.replay import _fold_cms
 
     docs = spark.createDataFrame(
         [(i, f"eps tok{i % 3}") for i in range(12)], ["doc_id", "text"]
     )
     parts = str(tmp_path / "parts")
-
-    def write_batch(batch, batch_id):
-        cms_cells(batch, "text").write.mode("overwrite").parquet(
-            os.path.join(parts, f"batch_id={batch_id}")
-        )
-
-    write_batch(docs, 0)
-    write_batch(docs, 0)  # retry of the SAME batch id
+    _fold_cms(parts, docs, 0)
+    _fold_cms(parts, docs, 0)  # retry of the SAME batch id
     folded = {
         (r["row"], r["col"], r["cnt"])
         for r in spark.read.option("basePath", parts)
         .parquet(parts)
         .groupBy("row", "col")
-        .agg(F2.sum("cnt").alias("cnt"))
+        .agg(F.sum("cnt").alias("cnt"))
         .collect()
     }
     want = {
@@ -550,13 +614,8 @@ def test_kmv_accumulate_stream_equals_batch_sketch(spark):
 def test_kmv_fold_redelivery_is_idempotent(spark, tmp_path):
     """Re-merging the same batch into the bottom-k state is a no-op —
     the property that makes foreachBatch at-least-once delivery safe."""
-    import os
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import Window
-
-    from nlp_to_nosql_spark.operators.dedup import md5_hash60
-    from nlp_to_nosql_spark.operators.sketch import tokens_by
+    from nlp_to_nosql_spark.operators.sketch import kmv_assemble, kmv_by
+    from nlp_to_nosql_spark.streaming.replay import _fold_kmv
 
     docs = spark.createDataFrame(
         [(i, "en", f"tok{i} tok{i % 5}") for i in range(30)],
@@ -565,34 +624,17 @@ def test_kmv_fold_redelivery_is_idempotent(spark, tmp_path):
     table = str(tmp_path / "kmv_state")
     k = 8
 
-    def fold(batch):
-        import shutil
+    def state():
+        return sorted(tuple(r) for r in spark.read.parquet(table).collect())
 
-        rows = (
-            tokens_by(batch, ["lang"], "text")
-            .select("lang", md5_hash60(F.col("tok")).alias("h"))
-            .distinct()
-        )
-        if os.path.isdir(table):
-            cur = spark.read.schema("lang string, h long").parquet(table)
-            rows = cur.unionByName(rows).distinct()
-        w = Window.partitionBy("lang").orderBy("h")
-        trimmed = (
-            rows.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= k)
-            .select("lang", "h")
-        )
-        nxt = table + "_next"
-        trimmed.write.mode("overwrite").parquet(nxt)
-        shutil.rmtree(table, ignore_errors=True)
-        os.replace(nxt, table)
-
-    fold(docs)
-    first = sorted(
-        tuple(r) for r in spark.read.parquet(table).collect()
-    )
-    fold(docs)  # redelivery
-    second = sorted(
-        tuple(r) for r in spark.read.parquet(table).collect()
-    )
+    _fold_kmv(spark, table, docs, "lang", k)
+    first = state()
+    _fold_kmv(spark, table, docs, "lang", k)  # redelivery
+    second = state()
     assert first == second and len(first) == k
+    assembled = kmv_assemble(
+        spark.read.schema("lang string, h long").parquet(table), ["lang"], k
+    )
+    assert [tuple(r) for r in assembled.collect()] == [
+        tuple(r) for r in kmv_by(docs, ["lang"], "text", k=k).collect()
+    ]

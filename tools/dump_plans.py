@@ -42,6 +42,12 @@ def _executions_since(spark, min_id: int) -> list:
     return out
 
 
+def _side_label(desc) -> str:
+    """First line of an execution description, cut to 120 chars; empty
+    for a missing or blank description."""
+    return ((desc or "").splitlines() or [""])[0][:120]
+
+
 def _last_execution_id(spark) -> int:
     seq = spark._jsparkSession.sharedState().statusStore().executionsList()
     return seq.apply(seq.size() - 1).executionId() if seq.size() else -1
@@ -85,7 +91,7 @@ def main() -> int:
                 for eid, desc, plan in _executions_since(spark, before_id):
                     f.write(
                         f"\n\n=== side execution {eid}: "
-                        f"{(desc or '').splitlines()[0][:120]} ===\n"
+                        f"{_side_label(desc)} ===\n"
                     )
                     f.write(plan)
                 spark.catalog.clearCache()
