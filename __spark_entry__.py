@@ -3556,25 +3556,13 @@ def _q_paragraph_dedup_quality_sampled(
     (operators/evals.py pair_set_quality_sampled)."""
     from nlp_to_nosql_spark.operators.evals import pair_set_quality_sampled
 
-    from nlp_to_nosql_spark.plans.caching import persisted
-
     docs = register_tables(spark, sf_dir)["documents"]
     reps = dd.distinct_paragraphs(_multiline_docs(docs), "doc_id", "text")
-
-    # Both generators shingle the SAME sampled universe at the same k:
-    # memoize one persisted shingle-set frame per sampled frame object
-    # so the tokenize+shingle pass runs once, not per generator (the
-    # eval11 sharing, one level inside the sampling harness).
-    _sh_cache: dict[int, DataFrame] = {}
-
-    def _shared_sh(s: DataFrame) -> DataFrame:
-        key = id(s)
-        if key not in _sh_cache:
-            _sh_cache[key] = persisted(
-                dd.shingle_arrays(s, "para_key", "para_text", k=3), "tokens"
-            )
-        return _sh_cache[key]
-
+    # Each generator shingles the sampled universe itself.  Sharing one
+    # persisted shingle-set frame between them (eval11's form) showed no
+    # gain beyond run-to-run spread at sf0.1, local[4]: medians 6.99 vs
+    # 6.79 s in one interleaved A/B, 39.5 vs 40.7 s in another on a
+    # 4-vCPU VM (shared runs' IQR 37.3-41.4 s).
     return pair_set_quality_sampled(
         reps,
         "para_key",
@@ -3587,11 +3575,9 @@ def _q_paragraph_dedup_quality_sampled(
             bands=8,
             threshold=0.5,
             sig_fn=dd.minhash_signatures_md5,
-            shingle_arrays=_shared_sh(s),
         ),
         lambda s: dd.ngram_jaccard_pairs(
-            s, "para_key", "para_text", k=3, threshold=0.5,
-            shingle_arrays=_shared_sh(s),
+            s, "para_key", "para_text", k=3, threshold=0.5
         ),
         rate=0.5,
         seed=101,

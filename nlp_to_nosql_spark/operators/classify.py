@@ -9,21 +9,21 @@ al., arXiv:2306.01116; Joulin et al., arXiv:1607.01759).
 
 Model = the hashing trick: token → md5-bucket in ``[0, n_buckets)``,
 bucket → an int64 weight, document score = Σ weight(bucket(token)),
-decision = score > 0.  Everything is ONE zero-shuffle JVM projection —
-tokenize (the house ``normalize_text`` whitespace tokenization, shared
-with ``expl1``), ``transform`` each token to its bucket weight, and
-``aggregate`` the int64 sum.  No explode, no groupBy: per-document cost
-is O(tokens), the plan is a scan + project that pipelines into whatever
-filter consumes ``keep``.
+decision = score > 0.  Everything is ONE zero-shuffle pass — tokenize
+in a JVM projection (the house ``normalize_text`` whitespace
+tokenization, shared with ``expl1``), then map each token to its bucket
+weight and sum the int64s in one Arrow kernel.  No explode, no groupBy:
+per-document cost is O(tokens), the plan is a scan + project that
+pipelines into whatever filter consumes ``keep``.
 
 The CONTRACT configuration derives weights deterministically from the
 bucket id (md5-keyed pseudo-weights, integer in [-scale, +scale]) so the
 score replays bit-exactly in DuckDB (:func:`hashed_linear_score_sql`).
 A REAL trained model drops in without changing the plan via the
 ``weights`` parameter: its coefficient table is ≤ ``n_buckets`` rows,
-collected bounded and baked into the projection as a literal
-array lookup — the rest of the projection is untouched and the plan
-stays exchange-free (test-pinned).
+collected bounded and baked into the scoring kernel as an array
+lookup — the rest of the plan is untouched and stays exchange-free
+(test-pinned).
 
 Determinism discipline: the per-document sum is exact int64 (weights are
 integers, |weight| ≤ scale, docs ≪ 2⁵³ tokens), so partition order can't
@@ -141,7 +141,6 @@ def hashed_linear_score(
     n_buckets: int = 1024,
     scale: int = 1000,
     weights: DataFrame | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Score every document with the hashed linear model.
 
@@ -150,21 +149,14 @@ def hashed_linear_score(
     decision.  Documents with zero tokens are filtered (no decision
     without evidence — and no divide-by-zero in either engine).
 
-    ``impl`` picks the scoring kernel, both producing IDENTICAL values
-    (equivalence-pinned by ``tests/test_classify.py``):
-
-    * ``"arrow"`` (default) — tokenization stays a JVM projection (so
-      tokens are bit-identical to the column form by construction), and
-      the per-token md5 → bucket → weight → sum moves into one
-      ``mapInPandas`` kernel with a per-task token→weight memo: each
-      DISTINCT token in a batch hashes once, vs once per occurrence in
-      the expression interpreter.  Measured at sf0.1×100 (500k docs):
-      3.89 s → 1.61 s, the interpreted-HOF md5+conv per token being the
-      same constant factor the IntSRPLSH signature paid before its
-      Arrow fast path (``similarity.py``).  Still zero-shuffle — the
-      exchange-free plan is test-pinned.
-    * ``"column"`` — the pure Column-expression form, kept as the
-      oracle-shaped twin of :func:`hashed_linear_score_sql`.
+    Scoring kernel: tokenization stays a JVM projection, and the
+    per-token md5 → bucket → weight → sum runs in one ``mapInPandas``
+    kernel with a per-task token→weight memo, so each DISTINCT token in a
+    batch hashes once.  The interpreted-HOF Column form it replaced
+    (``transform``/``aggregate`` over the token array, which hashes every
+    occurrence) measured 3.89 s vs 1.61 s for this kernel at sf0.1×100
+    (500k docs).  Still zero-shuffle — the exchange-free plan is
+    test-pinned.
 
     ``weights`` is the REAL-model path: a ``(bucket, weight)`` frame of
     trained int64 coefficients.  Up to ``spark.nlp2nosql.classify.
@@ -182,9 +174,6 @@ def hashed_linear_score(
     partition-order-free.  When ``weights`` is None the md5-keyed
     pseudo-weights below apply (the oracle-replayable contract config).
     """
-    if impl not in ("arrow", "column"):
-        raise ValueError(f"impl must be 'arrow' or 'column', got {impl!r}")
-    modulus = 2 * scale + 1
     toks = F.filter(
         F.split(tx.normalize_text(F.col(text_col)), " "),
         lambda t: t != F.lit(""),
@@ -223,43 +212,11 @@ def hashed_linear_score(
             seen.add(b)
             wtable[b] = int(r["weight"])
 
-    if impl == "arrow":
-        scored = df.select(id_col, toks.alias("_toks")).mapInPandas(
-            _arrow_scorer(id_col, n_buckets, scale, wtable),
-            f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
-            "n_tokens long, score_sum long",
-        )
-    else:
-        if wtable is not None:
-            lit_table = F.lit(wtable)
-
-            def weight(t: Column) -> Column:
-                bucket = F.pmod(_h15(t), F.lit(n_buckets))
-                return F.element_at(
-                    lit_table, bucket.cast("int") + F.lit(1)
-                ).cast("long")
-
-        else:
-
-            def weight(t: Column) -> Column:
-                bucket = F.pmod(_h15(t), F.lit(n_buckets))
-                return (
-                    F.pmod(
-                        _h15(F.concat(F.lit("qw:"), bucket.cast("string"))),
-                        F.lit(modulus),
-                    )
-                    - F.lit(scale)
-                )
-
-        scored = df.select(
-            id_col,
-            F.size(toks).cast("long").alias("n_tokens"),
-            F.aggregate(
-                F.transform(toks, weight),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("score_sum"),
-        )
+    scored = df.select(id_col, toks.alias("_toks")).mapInPandas(
+        _arrow_scorer(id_col, n_buckets, scale, wtable),
+        f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
+        "n_tokens long, score_sum long",
+    )
     return scored.filter(F.col("n_tokens") > 0).select(
         id_col,
         "n_tokens",

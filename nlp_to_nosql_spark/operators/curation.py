@@ -844,9 +844,9 @@ def bigram_likelihood(
     """
     words = _tokens(df, id_col, text_col)
     # Consumed THREE times (bigram counts, prefix counts, the join back):
-    # persist the exploded gram table — conf ``spark.nlp2nosql.cache.
-    # shingles`` (disk by default; it is the same explosion factor as the
-    # dedup shingle tables) — instead of re-splitting the corpus per use.
+    # persist the exploded gram table as ``shingles`` (disk; it is the
+    # same explosion factor as the dedup shingle tables) instead of
+    # re-splitting the corpus per use.
     doc_grams = persisted(
         words.select(
             F.col(id_col),
@@ -1192,35 +1192,49 @@ def target_lm_fit(
     the small trusted sample by design (the CCNet contract), so the
     extra CPU stays bounded at scale."""
     uni, bi, tri = _lm_count_tables(target, id_col, text_col)
+    _write_artifact(path, {"uni": uni, "bi": bi, "tri": tri})
+
+
+def _write_artifact(path: str, parts: dict) -> None:
+    """Write each ``name → frame`` part to ``path/name`` as parquet.  The
+    writes are independent jobs, so they run CONCURRENTLY, one thread
+    per part."""
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
+    with ThreadPoolExecutor(max_workers=len(parts)) as pool:
         list(
             pool.map(
                 lambda t: t[1].write.mode("overwrite").parquet(
                     f"{path}/{t[0]}"
                 ),
-                (("uni", uni), ("bi", bi), ("tri", tri)),
+                parts.items(),
             )
         )
 
 
-def target_lm_load(path: str, spark) -> tuple:
-    """Load a :func:`target_lm_fit` artifact back into the
-    ``(uni, bi, tri)`` count frames, failing loudly on a missing part
-    or a schema drift (a silently mis-shaped count table would skew
-    every downstream score rather than erroring)."""
+def _load_artifact(path: str, spark, parts: dict, who: str) -> tuple:
+    """Read each part of ``parts`` (name → required columns) back from
+    ``path/name`` in order, failing loudly on a missing part or a
+    schema drift (a silently mis-shaped count table would skew every
+    downstream score rather than erroring)."""
     out = []
-    for name, cols in _LM_ARTIFACT_PARTS.items():
+    for name, cols in parts.items():
         df = spark.read.parquet(f"{path}/{name}")
         missing = [c for c in cols if c not in df.columns]
         if missing:
             raise ValueError(
-                f"target_lm_load: artifact part {name!r} at {path!r} "
+                f"{who}: artifact part {name!r} at {path!r} "
                 f"lacks columns {missing} (expected {list(cols)})"
             )
         out.append(df.select(*cols))
     return tuple(out)
+
+
+def target_lm_load(path: str, spark) -> tuple:
+    """Load a :func:`target_lm_fit` artifact back into the
+    ``(uni, bi, tri)`` count frames (validated by
+    :func:`_load_artifact`)."""
+    return _load_artifact(path, spark, _LM_ARTIFACT_PARTS, "target_lm_load")
 
 
 def target_lm_score_artifact(
@@ -1537,34 +1551,13 @@ def kneser_ney_fit(
     with the smoothing arithmetic.  The two writes are independent
     jobs and run concurrently (see :func:`target_lm_fit` — same A/B)."""
     uni, _bi, tri = _lm_count_tables(target, id_col, text_col)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        list(
-            pool.map(
-                lambda t: t[1].write.mode("overwrite").parquet(
-                    f"{path}/{t[0]}"
-                ),
-                (("uni", uni), ("tri", tri)),
-            )
-        )
+    _write_artifact(path, {"uni": uni, "tri": tri})
 
 
 def kneser_ney_load(path: str, spark) -> tuple:
-    """Load a :func:`kneser_ney_fit` artifact back into ``(uni, tri)``,
-    failing loudly on a missing part or schema drift (lm4's
-    :func:`target_lm_load` discipline)."""
-    out = []
-    for name, cols in _KN_ARTIFACT_PARTS.items():
-        df = spark.read.parquet(f"{path}/{name}")
-        missing = [c for c in cols if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"kneser_ney_load: artifact part {name!r} at {path!r} "
-                f"lacks columns {missing} (expected {list(cols)})"
-            )
-        out.append(df.select(*cols))
-    return tuple(out)
+    """Load a :func:`kneser_ney_fit` artifact back into ``(uni, tri)``
+    (validated by :func:`_load_artifact`)."""
+    return _load_artifact(path, spark, _KN_ARTIFACT_PARTS, "kneser_ney_load")
 
 
 def kneser_ney_score_artifact(

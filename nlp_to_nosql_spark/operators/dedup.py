@@ -206,7 +206,7 @@ def ngram_jaccard_pairs(
     """
     # Reused 3× (stop-shingle census, index join, set sizes) but it is the
     # engine's biggest intermediate — shingle-factor × the documents — so
-    # it defaults to DISK_ONLY, not executor memory (conf-overridable).
+    # it persists DISK_ONLY, not in executor memory.
     index = shingle_table(df, id_col, text_col, k, shingle_arrays=shingle_arrays)
     if hash_keys:
         index = index.select(
@@ -353,12 +353,10 @@ def minhash_signatures(
     text_col: str,
     k: int = 3,
     num_perm: int = 64,
-    hash_fn=None,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
     """(id, sig array<long>) — one xxhash64 family member per permutation.
-    ``hash_fn`` overrides the string→long hash (default ``F.xxhash64``;
-    pass :func:`md5_hash60` for the oracle-reproducible family).
+    :func:`minhash_signatures_md5` is the oracle-reproducible family.
 
     Shuffle-free per-row fold: the signature is an ``aggregate`` over the
     document's distinct shingle array, zip-merging a 64-long running-min
@@ -370,7 +368,6 @@ def minhash_signatures(
     attribute, the fold form is ~5× faster on a cold plan — 64 min-aggs
     generate pathological whole-stage code — and equal warm.)
     """
-    hasher = hash_fn if hash_fn is not None else F.xxhash64
     sh = shingle_arrays
     if sh is None:
         sh = tokenized(df, id_col, text_col).select(
@@ -388,7 +385,7 @@ def minhash_signatures(
                 acc,
                 F.transform(
                     F.sequence(F.lit(0), F.lit(num_perm - 1)),
-                    lambda i: hasher(
+                    lambda i: F.xxhash64(
                         F.concat(F.lit("perm"), i.cast("string"), F.lit(":"), s)
                     ),
                 ),
@@ -416,7 +413,10 @@ def minhash_lsh_pairs(
     verified by estimated Jaccard = fraction of agreeing minhashes, so the
     full shingle sets are never rejoined.  ``sig_fn`` selects the
     signature family (default :func:`minhash_signatures`; pass
-    :func:`minhash_signatures_md5` for the oracle-reproducible form).
+    :func:`minhash_signatures_md5` for the oracle-reproducible form).  It
+    is called as ``sig_fn(df, id_col, text_col, k, num_perm, *,
+    shingle_arrays=None)`` and must return ``(id_col, sig
+    array<long>)`` with ``num_perm`` entries per row.
     ``shingle_arrays`` (a prebuilt :func:`shingle_arrays` frame for the
     same ``df``/``k``) is forwarded to the signature builder so the
     tokenize+shingle pass is shared with other generators.
@@ -431,7 +431,7 @@ def minhash_lsh_pairs(
         )
     rows = num_perm // bands
     # Narrow (id + num_perm longs), reused by banding and verification:
-    # memory with disk spillover (conf-overridable).
+    # memory with disk spillover.
     sig = persisted(
         (sig_fn or minhash_signatures)(
             df, id_col, text_col, k, num_perm, shingle_arrays=shingle_arrays

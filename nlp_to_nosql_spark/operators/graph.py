@@ -369,19 +369,11 @@ def pagerank_micro(
     # The union over the checkpointed leaf is two cache reads — cheap
     # enough to re-derive per consumer, so it needs no checkpoint of
     # its own.  No extra job — the first iteration's action
-    # materializes everything.  ``spark.nlp2nosql.cache.edges = NONE``
-    # restores the un-truncated lazy form (the escape hatch for
-    # one-pass sessions; note the checkpoint is LOCAL — non-reliable
+    # materializes everything.  The checkpoint is LOCAL — non-reliable
     # storage — so on a multi-executor deployment an executor loss
     # mid-iteration recomputes nothing and fails the job; acceptable
-    # for local[...] and retry-at-job-level deployments).
-    use_ckpt = (
-        pairs.sparkSession.conf.get(
-            "spark.nlp2nosql.cache.edges", "MEMORY_AND_DISK"
-        ).upper()
-        != "NONE"
-    )
-    p = pairs.localCheckpoint(eager=False) if use_ckpt else pairs
+    # for local[...] and retry-at-job-level deployments.
+    p = pairs.localCheckpoint(eager=False)
     edges = p.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).unionAll(
@@ -391,9 +383,8 @@ def pagerank_micro(
         edges.groupBy("src")
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
         .select(F.col("src").alias("node"), "deg")
+        .localCheckpoint(eager=False)
     )
-    if use_ckpt:
-        deg = deg.localCheckpoint(eager=False)
     ranks = deg.select("node", "deg", F.lit(1000000).cast("long").alias("r"))
     base = F.lit(150000).cast("long")
     for _ in range(int(iterations)):

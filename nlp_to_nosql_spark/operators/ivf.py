@@ -148,8 +148,7 @@ class IVFIndex:
                         < keep
                     )
 
-        # Re-scanned once per Lloyd's iteration: memory with disk spillover
-        # (conf-overridable via spark.nlp2nosql.cache.vectors).
+        # Re-scanned once per Lloyd's iteration: memory with disk spillover.
         narrow = persisted(train.select(id_col, vec_col), "vectors")
         init_rows = self._init_rows(narrow, id_col, vec_col)
         if len(init_rows) < self.n_lists:

@@ -63,7 +63,7 @@ IMAGE_FEATURE_SCHEMA = T.StructType(
 
 
 def have_pillow() -> bool:
-    """Feature-detect a real image codec (mirrors ``totals.have_tws_runtime``)."""
+    """Feature-detect a real image codec: True when Pillow imports."""
     try:
         import PIL.Image  # noqa: F401
 

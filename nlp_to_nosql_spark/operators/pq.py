@@ -22,13 +22,11 @@ oracle-checkable, and recall vs the exact ranking is a measured number
 (tests/test_pq.py).
 
 Scale shape: the codebook is k·dim micros — a bounded driver collect
-(16×64 here; the same contract as ``IVFIndex.fit``) baked into the plan
-as literals.  Encode is a ZERO-SHUFFLE projection (the 100 TB corpus
-never moves); ADC search is a zero-shuffle projection over the codes
-table + ``TakeOrderedAndProject`` (k rows per partition move, never
-vectors).  The micro array is staged in its own projection so the
-per-centroid aggregate lambdas reference a cheap attribute (Catalyst
-does not CSE across higher-order-function lambda bodies).
+(16×64 here; the same contract as ``IVFIndex.fit``) shipped into the
+encode kernel.  Encode is a ZERO-SHUFFLE ``mapInPandas`` pass (the
+100 TB corpus never moves); ADC search is a zero-shuffle projection
+over the codes table + ``TakeOrderedAndProject`` (k rows per partition
+move, never vectors).
 """
 
 from __future__ import annotations
@@ -117,88 +115,22 @@ def _micro_col(vec_col: str) -> F.Column:
     )
 
 
-def _slice_exprs(model: PQModel, vm_col: str = "_vm") -> list:
-    """Per-subspace slice projections.  Staged into their OWN select
-    before :func:`_code_exprs` references them: Catalyst does not CSE
-    across higher-order-function lambda bodies, so a ``slice(...)``
-    written inline inside the k per-centroid aggregates would be
-    re-evaluated k times per row (the winnowing lesson — see
-    ``dedup.shingles_of_words``)."""
-    d0 = model.sub_dim
-    return [
-        F.slice(F.col(vm_col), s * d0 + 1, d0).alias(f"_s{s}")
-        for s in range(model.m)
-    ]
-
-
-def _code_exprs(model: PQModel, vm_col: str = "_vm") -> list:
-    """Per-subspace nearest-centroid code Column expressions over a
-    staged integer-micro array column (ties → lowest index via
-    first-match ``array_position``).  Expects the per-subspace slices
-    staged as ``_s0.._s{m-1}`` attributes (see :func:`_slice_exprs`)."""
-    d0 = model.sub_dim
-    codes = []
-    for s in range(model.m):
-        sub = F.col(f"_s{s}")
-        dists = F.array(
-            *[
-                F.aggregate(
-                    F.zip_with(
-                        sub,
-                        F.array(
-                            *[
-                                F.lit(c).cast("long")
-                                for c in cent[s * d0 : (s + 1) * d0]
-                            ]
-                        ),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, v: acc + v,
-                )
-                for cent in model.centroids
-            ]
-        )
-        codes.append(
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias(f"_c{s}")
-        )
-    return codes
-
-
 def pq_encode(
     df: DataFrame,
     model: PQModel,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Encode every vector: ``(id, codes array<int>)`` with ``codes[s]``
     = index of the nearest subspace-``s`` centroid by exact integer-
-    micro squared distance (ties → lowest index).  Zero shuffle either
-    way.
+    micro squared distance (ties → lowest index, numpy ``argmin``).
+    Zero shuffle.
 
-    Two value-identical implementations (equality pinned by test):
-
-    * ``impl="arrow"`` (default) — ``mapInPandas``; the m·k·d0 integer
-      ops per row run as numpy C loops over Arrow batches.  Measured
-      4.4× faster than the Column form at sf0.1 (5.3 s → 1.2 s for
-      5 000 × 64-dim, m=4 k=16).
-    * ``impl="column"`` — pure Column expressions (no Python workers);
-      higher-order-function lambdas are interpreted per element, which
-      is exactly the slow path the guide warns about — kept for
-      environments that must stay JVM-only and as the plan-shape
-      reference.  Ties break identically: numpy ``argmin`` and
-      first-match ``array_position`` both take the lowest index.
+    ``mapInPandas``: the m·k·d0 integer ops per row run as numpy C loops
+    over Arrow batches.  Measured 4.4× faster than the interpreted-HOF
+    Column form it replaced at sf0.1 (5.3 s → 1.2 s for 5 000 × 64-dim,
+    m=4 k=16).
     """
-    if impl == "column":
-        staged = df.select(
-            F.col(id_col), _micro_col(vec_col).alias("_vm")
-        ).select(F.col(id_col), *_slice_exprs(model))
-        return staged.select(
-            F.col(id_col), F.array(*_code_exprs(model)).alias("codes")
-        )
     import numpy as np
     import pandas as pd
 
@@ -286,7 +218,6 @@ def ivfpq_topk(
     k_results: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Composed IVF-PQ search — the full Jégou et al. architecture: a
     coarse quantizer partitions the corpus into cells (here a sampled
@@ -299,7 +230,7 @@ def ivfpq_topk(
     same integer-micro arithmetic, ties → lowest cell), ADC — is exact
     BIGINT, so the composition carries an end-to-end DuckDB oracle.
 
-    Plan: one zero-shuffle projection computes the cell AND the fine
+    Plan: one zero-shuffle Arrow pass computes the cell AND the fine
     codes; the cell filter prunes before any ADC work (at rest this is
     a partition-pruned scan when the codes table is written partitioned
     by cell, as ``IVFIndex.write_partitioned`` demonstrates); then
@@ -315,67 +246,50 @@ def ivfpq_topk(
         ]
     ]
     lut = _lut(fine, qm)
-    if impl == "column":
-        staged = df.select(F.col(id_col), _micro_col(vec_col).alias("_vm"))
-        kept = (
-            staged.select(F.col(id_col), F.col("_vm"), *_slice_exprs(coarse))
-            .select(
-                F.col(id_col),
-                F.col("_vm"),
-                _code_exprs(coarse)[0].alias("_cell"),
+    # One Arrow pass does cell assignment, probe filter, and fine
+    # encode — the corpus is scanned once and only survivors are
+    # emitted, with zero shuffle.
+    import numpy as np
+    import pandas as pd
+
+    ccents = np.asarray(coarse.centroids, dtype=np.int64)
+    fcents = np.asarray(fine.centroids, dtype=np.int64)
+    probe_arr = np.asarray(sorted(int(j) for j in probe))
+    m, d0 = fine.m, fine.sub_dim
+
+    def enc(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            vm = np.floor(
+                np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+                * _MICRO
+            ).astype(np.int64)
+            cell = (
+                ((vm[:, None, :] - ccents[None, :, :]) ** 2)
+                .sum(axis=2)
+                .argmin(axis=1)
             )
-            .filter(F.col("_cell").isin([int(j) for j in probe]))
-        )
-        encoded = kept.select(
-            F.col(id_col), *_slice_exprs(fine)
-        ).select(F.col(id_col), F.array(*_code_exprs(fine)).alias("codes"))
-    else:
-        # One Arrow pass does cell assignment, probe filter, and fine
-        # encode — the corpus is scanned once and only survivors are
-        # emitted (same zero-shuffle shape as the Column form).
-        import numpy as np
-        import pandas as pd
+            keep = np.isin(cell, probe_arr)
+            if not keep.any():
+                continue
+            sub = vm[keep]
+            codes = np.empty((int(keep.sum()), m), dtype=np.int32)
+            for s in range(m):
+                vs = sub[:, s * d0 : (s + 1) * d0]
+                cs = fcents[:, s * d0 : (s + 1) * d0]
+                dist = ((vs[:, None, :] - cs[None, :, :]) ** 2).sum(axis=2)
+                codes[:, s] = dist.argmin(axis=1)
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col].to_numpy()[keep],
+                    "codes": list(codes.tolist()),
+                }
+            )
 
-        ccents = np.asarray(coarse.centroids, dtype=np.int64)
-        fcents = np.asarray(fine.centroids, dtype=np.int64)
-        probe_arr = np.asarray(sorted(int(j) for j in probe))
-        m, d0 = fine.m, fine.sub_dim
-
-        def enc(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                vm = np.floor(
-                    np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                    * _MICRO
-                ).astype(np.int64)
-                cell = (
-                    ((vm[:, None, :] - ccents[None, :, :]) ** 2)
-                    .sum(axis=2)
-                    .argmin(axis=1)
-                )
-                keep = np.isin(cell, probe_arr)
-                if not keep.any():
-                    continue
-                sub = vm[keep]
-                codes = np.empty((int(keep.sum()), m), dtype=np.int32)
-                for s in range(m):
-                    vs = sub[:, s * d0 : (s + 1) * d0]
-                    cs = fcents[:, s * d0 : (s + 1) * d0]
-                    dist = ((vs[:, None, :] - cs[None, :, :]) ** 2).sum(
-                        axis=2
-                    )
-                    codes[:, s] = dist.argmin(axis=1)
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].to_numpy()[keep],
-                        "codes": list(codes.tolist()),
-                    }
-                )
-
-        encoded = df.select(id_col, vec_col).mapInPandas(
-            enc, schema=f"{id_col} long, codes array<int>"
-        )
+    encoded = df.select(id_col, vec_col).mapInPandas(
+        enc, schema=f"{id_col} long, codes array<int>"
+    )
     dist = None
     for s in range(fine.m):
         term = F.element_at(

@@ -462,8 +462,7 @@ def semantic_dedup(
     from nlp_to_nosql_spark.plans.caching import persisted
 
     # the assignment frame feeds the cell-size aggregate, the pair search,
-    # and the final keep/drop join — persist so the matmul scan runs once
-    # (storage level conf'd via spark.nlp2nosql.cache.vectors).
+    # and the final keep/drop join — persist so the matmul scan runs once.
     assigned = persisted(
         narrow.withColumn("cluster_id", assign(F.col(vec_col))), "vectors"
     )

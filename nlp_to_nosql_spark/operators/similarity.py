@@ -213,8 +213,7 @@ def embedding_neardup_exact(
         # The sizing pass needs a row count; persist the narrow projection
         # first so the count materializes the SAME frame the blocked
         # compute then reads, instead of running an expensive derived
-        # lineage twice (storage level conf'd via
-        # spark.nlp2nosql.cache.vectors, disk-spilling by default).
+        # lineage twice (``vectors`` level: memory, spilling to disk).
         from nlp_to_nosql_spark.plans.caching import persisted
 
         narrow = persisted(narrow, "vectors")
@@ -491,6 +490,11 @@ class IntSRPLSH(RandomHyperplaneLSH):
     (tests/test_recall.py), which is the contract that matters for a
     candidate generator.  Ties-to-zero dot products clear the bit
     (``> 0``, the simhash convention) identically in both engines.
+
+    Signatures come from :meth:`add_signatures` (Arrow) or
+    :meth:`signature_of` (pure Python); the inherited float
+    :meth:`RandomHyperplaneLSH.signature_col` does not compute this
+    family's integer bits.
     """
 
     def __init__(self, dim: int, nbits: int = 16, seed: int = 42):
@@ -502,93 +506,23 @@ class IntSRPLSH(RandomHyperplaneLSH):
             for b in range(nbits)
         ]
 
-    def signature_col(self, micro_col: str) -> F.Column:
-        """Signature over an ALREADY-STAGED integer-micro array attribute
-        (Catalyst does not CSE across HOF lambdas — the caller projects
-        the micro array once; see :meth:`add_signatures`).
-
-        This is the plan-shape/oracle REFERENCE form (interpreted
-        higher-order-function dot products — nbits·dim integer ops per
-        row in the expression interpreter).  Production callers go
-        through :meth:`add_signatures`'s default ``impl="arrow"`` numpy
-        matmul, measured ~2× faster end-to-end on ann2 at sf0.1; the two
-        are pinned value-equal by tests/test_family_equivalence.py.
-        """
-        bits = []
-        for i, plane in enumerate(self.planes):
-            dot_i = F.aggregate(
-                F.zip_with(
-                    F.col(micro_col),
-                    F.array(*[F.lit(int(c)).cast("long") for c in plane]),
-                    lambda x, y: x * y,
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            )
-            bits.append(
-                F.when(
-                    dot_i > 0, F.shiftleft(F.lit(1).cast("long"), i)
-                ).otherwise(F.lit(0).cast("long"))
-            )
-        out = bits[0]
-        for b in bits[1:]:
-            out = out.bitwiseOR(b)
-        return out
-
     def add_signatures(
-        self, df: DataFrame, vec_col: str = "embedding", impl: str = "arrow"
+        self, df: DataFrame, vec_col: str = "embedding"
     ) -> DataFrame:
-        """Append ``sign_bits`` (long).  Two value-identical
-        implementations (equality pinned by test, the ``pq_encode``
-        pattern):
+        """Append ``sign_bits`` (long) with one ``mapInPandas`` pass: the
+        nbits·dim integer multiply-adds per row run as ONE exact numpy
+        int64 matmul per Arrow batch against the plane matrix (|c| < 2^23,
+        |m| ≤ maxabs·1e6, dim·2^23·maxabs·1e6 ≪ 2^63 for any
+        normalized-ish embedding — no overflow).  Zero shuffle, nothing
+        collected; rows stream through Python workers
+        batch-at-a-time.  Measured ~2× faster end-to-end on ann2 at sf0.1
+        than the interpreted-HOF Column form it replaced; pinned
+        bit-equal to :meth:`signature_of` by tests/test_similarity.py.
 
-        * ``impl="arrow"`` (default) — ``mapInPandas``; the nbits·dim
-          integer multiply-adds per row run as ONE exact numpy int64
-          matmul per Arrow batch against the plane matrix (|c| < 2^23,
-          |m| ≤ maxabs·1e6, dim·2^23·maxabs·1e6 ≪ 2^63 for any
-          normalized-ish embedding — no overflow).  Zero shuffle, zero
-          driver traffic; rows stream through Python workers
-          batch-at-a-time.
-        * ``impl="column"`` — pure Column expressions (no Python
-          workers); interpreted HOF per-element lambdas, the known ~2-4×
-          constant-factor slow path (PERFORMANCE.md), kept as the
-          JVM-only form whose plan the DuckDB oracle replays.
-
-        Both FAIL FAST on ragged input (``len(vec) != dim``): the Column
-        form's fixed-length ``zip_with`` would silently NULL the dot and
-        clear every bit while DuckDB's partial-dot replay would not — the
-        engine-divergence hole flagged in round-6 advice is closed by
-        raising instead.
+        FAILS FAST on ragged input (``len(vec) != dim``) rather than
+        signing a partial dot, which DuckDB's relational replay would not
+        reproduce.
         """
-        if impl == "column":
-            staged = fan_out(df).withColumn(
-                "_m",
-                F.transform(
-                    F.col(vec_col),
-                    lambda v: F.floor(
-                        v.cast("double") * F.lit(1000000)
-                    ).cast("long"),
-                ),
-            )
-            guarded = F.when(
-                F.size(F.col(vec_col)) == F.lit(self.dim),
-                self.signature_col("_m"),
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            f"IntSRPLSH: vector dim != {self.dim} (got "
-                        ),
-                        F.size(F.col(vec_col)).cast("string"),
-                        F.lit(
-                            "); ragged input would produce an all-zero "
-                            "signature"
-                        ),
-                    )
-                ).cast("long")
-            )
-            return staged.withColumn("sign_bits", guarded).drop("_m")
-
         import pandas as pd
         from pyspark.sql.types import LongType, StructField, StructType
 

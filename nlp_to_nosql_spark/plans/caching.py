@@ -1,4 +1,4 @@
-"""Conf-driven persistence policy for reused intermediates.
+"""Fixed persistence policy for reused intermediates.
 
 Operators that reuse an intermediate several times (shingle tables,
 MinHash/SimHash signatures, IVF training vectors) must not make the
@@ -7,20 +7,17 @@ MEMORY_AND_DISK for DataFrames, but the *exploded* shingle table can be
 10-50× its source documents, and evicting-and-recomputing it mid-join is
 far worse than paying disk up front.
 
-``persisted`` applies a per-site default that the user can override per
-session with ``spark.nlp2nosql.cache.<kind>`` (any ``StorageLevel``
-attribute name, e.g. ``MEMORY_ONLY``, ``DISK_ONLY``,
-``MEMORY_AND_DISK_SER``, or ``NONE`` to disable persistence entirely for
-pipelines that pass over each intermediate once).
+``persisted`` looks the storage level up by the site's ``kind`` in one
+fixed table; an unknown kind raises, so a new persist site has to state
+its level here.
 
 Lifecycle: the persisted frame backs the operator's RETURNED lazy plan,
 so the operator itself cannot unpersist it.  Long-lived sessions calling
-these operators repeatedly should either set the ``NONE`` conf (one-pass
-pipelines), or call ``spark.catalog.clearCache()`` between batches —
-which releases every persisted dataset (the bench harness does exactly
-this per query); Spark's storage-memory eviction bounds the memory tiers
-in between, but ``DISK_ONLY`` data is only reclaimed by those two routes
-or executor exit.
+these operators repeatedly should call ``spark.catalog.clearCache()``
+between batches — which releases every persisted dataset (the bench
+harness does exactly this per query); Spark's storage-memory eviction
+bounds the memory tiers in between, but ``DISK_ONLY`` data is only
+reclaimed by that route or executor exit.
 """
 
 from __future__ import annotations
@@ -28,43 +25,47 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-#: Per-site defaults.  ``shingles`` is the exploded (doc × shingle) table —
-#: the largest intermediate in the engine, bigger than its input by the
-#: shingle factor, so it defaults straight to disk.  The rest are narrow
-#: (id + fixed-width signature/vector) and belong in memory with disk
+#: Storage level per persist-site kind.  ``shingles`` is the exploded
+#: (doc × shingle) table — the largest intermediate in the engine, bigger
+#: than its input by the shingle factor, so it goes straight to disk.
+#: The rest are narrow or source-sized and belong in memory with disk
 #: spillover.
-DEFAULT_LEVELS = {
-    "shingles": "DISK_ONLY",
-    "signatures": "MEMORY_AND_DISK",
-    "vectors": "MEMORY_AND_DISK",
+LEVELS = {
+    "shingles": StorageLevel.DISK_ONLY,
+    # (id, signature) frames: MinHash, SimHash and SRP sign bits.
+    "signatures": StorageLevel.MEMORY_AND_DISK,
+    # (id, embedding) projections: IVF training, SemDeDup assignment,
+    # blocked exact similarity, quantized vectors.
+    "vectors": StorageLevel.MEMORY_AND_DISK,
     # tokenized (id, words-array) projections — same order of size as the
     # source text, consumed by several aggregation branches (curation).
-    "tokens": "MEMORY_AND_DISK",
+    "tokens": StorageLevel.MEMORY_AND_DISK,
     # filtered document subsets reused across pipeline branches (the
     # composed pretraining pipeline feeds its surviving corpus to both
     # the decontamination fingerprints and the mixture sampler).
-    "documents": "MEMORY_AND_DISK",
+    "documents": StorageLevel.MEMORY_AND_DISK,
     # pair-graph edge/degree tables reused by every iteration of the
     # relational graph loops (PageRank, CC) — narrow int rows.
-    "edges": "MEMORY_AND_DISK",
+    "edges": StorageLevel.MEMORY_AND_DISK,
     # judgment / ranked-result frames an eval consumes more than once
     # (retrieval_metrics reads qrels for both n_rel and the hit join);
     # #judgments-sized, never corpus-sized.
-    "results": "MEMORY_AND_DISK",
+    "results": StorageLevel.MEMORY_AND_DISK,
+    # Kneser-Ney trigram count tables, reused by every continuation
+    # count derived from them.
+    "model": StorageLevel.MEMORY_AND_DISK,
+    # tokenized training text of the span-level decontamination
+    # matchers (exact substring, longest shared span).
+    "spans": StorageLevel.MEMORY_AND_DISK,
+    # (doc, paragraph-array) splits of paragraph-level exact dedup.
+    "paragraphs": StorageLevel.MEMORY_AND_DISK,
+    # distinct fingerprints of the already-ingested corpus that
+    # incremental ingestion checks new documents against.
+    "corpus_fps": StorageLevel.MEMORY_AND_DISK,
 }
-
-CONF_PREFIX = "spark.nlp2nosql.cache."
 
 
 def persisted(df: DataFrame, kind: str) -> DataFrame:
-    """Persist ``df`` at the conf-driven storage level for ``kind``.
-
-    ``spark.nlp2nosql.cache.<kind> = NONE`` returns ``df`` unpersisted
-    (callers still ``unpersist()`` afterwards — that's a no-op then).
-    """
-    name = df.sparkSession.conf.get(
-        CONF_PREFIX + kind, DEFAULT_LEVELS.get(kind, "MEMORY_AND_DISK")
-    )
-    if name.upper() == "NONE":
-        return df
-    return df.persist(getattr(StorageLevel, name.upper()))
+    """Persist ``df`` at the storage level :data:`LEVELS` gives ``kind``;
+    an unknown ``kind`` raises ``KeyError``."""
+    return df.persist(LEVELS[kind])

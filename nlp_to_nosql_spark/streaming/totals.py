@@ -6,17 +6,8 @@ reference keeps a client-side running history of query metrics
 (``main.py:264-268``, SURVEY §2.5 A5-A7); this is that accumulator as a
 distributed keyed-state operator.
 
-Two implementations of the same semantics:
-
-* :func:`running_totals_stream` — ``applyInPandasWithState`` (works on a
-  stock PySpark install; this is the contract-checked path).
-* :func:`running_totals_stream_tws` — Spark 4's
-  ``transformWithStateInPandas`` ``StatefulProcessor`` with an explicit
-  ``ValueState`` and the RocksDB store.  The TWS Python worker needs the
-  ``protobuf`` package, which this container does not ship, so the
-  function raises ``NotImplementedError`` unless ``google.protobuf`` is
-  importable.  On a cluster with protobuf it is the preferred form:
-  individually typed, TTL-able state variables.
+:func:`running_totals_stream` runs on ``applyInPandasWithState``, which
+works on a stock PySpark install (the contract-checked path).
 
 Scale: state is partitioned by the grouping key across executors; each
 micro-batch touches only the partitions holding keys present in that
@@ -26,21 +17,14 @@ win3's rounding note), so totals are exact and accumulation-order-free.
 
 from __future__ import annotations
 
-import importlib.util
 import math
-from typing import TYPE_CHECKING, Any, Iterator, Tuple
+from typing import TYPE_CHECKING, Iterator, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
-
-#: Spark conf required by transformWithState — that operator is only
-#: implemented for the RocksDB state store.
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
 
 _STATE_SCHEMA = "n_events long, value_cents long"
 OUTPUT_SCHEMA = "user_id long, n_events long, value_cents long"
@@ -89,71 +73,6 @@ def running_totals_stream(events: DataFrame) -> DataFrame:
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def have_tws_runtime() -> bool:
-    """transformWithState's Python worker imports google.protobuf; gate
-    the TWS path on its presence instead of crashing the worker.
-    find_spec imports the parent package, so a wholly absent ``google``
-    namespace raises rather than returning None."""
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
-def running_totals_stream_tws(events: DataFrame) -> DataFrame:
-    """Same semantics on ``transformWithStateInPandas`` (ValueState +
-    RocksDB).  Requires the ``protobuf`` package in the Python runtime
-    and ``spark.sql.streaming.stateStore.providerClass`` set to
-    :data:`ROCKSDB_PROVIDER`.
-    """
-    if not have_tws_runtime():
-        raise NotImplementedError(
-            "transformWithStateInPandas needs the protobuf package in the "
-            "Python runtime; use running_totals_stream (applyInPandasWithState) "
-            "on this install"
-        )
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-        TimerValues,
-    )
-
-    class RunningTotalsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState("totals", _STATE_SCHEMA)
-
-        def handleInputRows(
-            self,
-            key: Any,
-            rows: Iterator["pd.DataFrame"],
-            timerValues: TimerValues,
-        ) -> Iterator["pd.DataFrame"]:
-            import pandas as pd
-
-            n, cents = 0, 0
-            for batch in rows:
-                n += len(batch)
-                cents += _cents(batch["value"])
-            if self._totals.exists():
-                prev_n, prev_cents = self._totals.get()
-                n += prev_n
-                cents += prev_cents
-            self._totals.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "value_cents": [cents]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotalsProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
     )
 
 

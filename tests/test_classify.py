@@ -194,36 +194,6 @@ def test_real_weights_duplicate_bucket_raises(docs, spark):
         hashed_linear_score(df, n_buckets=N_BUCKETS, weights=dup)
 
 
-def test_arrow_and_column_impls_are_value_identical(docs, spark):
-    """The Arrow fast path vs the Column oracle twin, pseudo AND real
-    weights — the similarity.py dual-impl discipline."""
-    rows, df = docs
-    wdf = spark.createDataFrame(
-        [(b, (b % 9 - 4) * 7) for b in range(0, N_BUCKETS, 2)],
-        "bucket int, weight long",
-    )
-    for w in (None, wdf):
-        a = sorted(
-            hashed_linear_score(
-                df, n_buckets=N_BUCKETS, scale=SCALE, weights=w, impl="arrow"
-            ).collect(),
-            key=lambda r: r["doc_id"],
-        )
-        c = sorted(
-            hashed_linear_score(
-                df, n_buckets=N_BUCKETS, scale=SCALE, weights=w, impl="column"
-            ).collect(),
-            key=lambda r: r["doc_id"],
-        )
-        assert a == c
-
-
-def test_bad_impl_raises(docs):
-    _, df = docs
-    with pytest.raises(ValueError, match="impl"):
-        hashed_linear_score(df, impl="numpy")
-
-
 # ---------------------------------------------------------------------------
 # trained NB char-n-gram language identifier
 # ---------------------------------------------------------------------------

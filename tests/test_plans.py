@@ -204,3 +204,26 @@ def test_partitioned_write_read_prunes_partitions(spark, tmp_path):
     pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
     assert any("lang" in ln for ln in pf)
     assert back.count() == 50
+
+
+def test_persisted_storage_levels(spark):
+    """``persisted`` reads one fixed table: ``shingles`` goes to disk,
+    every other kind to memory with disk spill, and an unknown kind
+    raises instead of silently taking a default."""
+    from pyspark import StorageLevel
+
+    from nlp_to_nosql_spark.plans.caching import LEVELS, persisted
+
+    for kind in LEVELS:
+        df = persisted(spark.range(3), kind)
+        try:
+            want = (
+                StorageLevel.DISK_ONLY
+                if kind == "shingles"
+                else StorageLevel.MEMORY_AND_DISK
+            )
+            assert df.storageLevel == want, kind
+        finally:
+            df.unpersist()
+    with pytest.raises(KeyError):
+        persisted(spark.range(3), "no_such_kind")

@@ -235,39 +235,3 @@ def test_ivfpq_rejects_multisubspace_coarse(tiny):
     fine = fit_pq(tiny, m=2, k=4, seed=7)
     with pytest.raises(ValueError):
         ivfpq_topk(tiny, fine, fine, [0.0] * 4)
-
-
-@needs_data
-def test_encode_arrow_equals_column(spark):
-    """The numpy Arrow encode and the pure-Column encode are two
-    implementations of ONE semantics — codes must be identical."""
-    emb = register_tables(spark, SF_DIR)["embeddings"]
-    model = fit_pq(emb, m=4, k=16, seed=7)
-    a = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_encode(emb, model, impl="arrow").collect()
-    }
-    c = {
-        r["vec_id"]: list(r["codes"])
-        for r in pq_encode(emb, model, impl="column").collect()
-    }
-    assert a == c
-
-
-@needs_data
-def test_ivfpq_arrow_equals_column(spark):
-    from nlp_to_nosql_spark.operators.pq import ivfpq_topk
-
-    emb = register_tables(spark, SF_DIR)["embeddings"]
-    coarse = fit_pq(emb, m=1, k=8, seed=11)
-    fine = fit_pq(emb, m=4, k=16, seed=7)
-    q = emb.filter(F.col("vec_id") == 0).first()["embedding"]
-    a = [
-        tuple(r)
-        for r in ivfpq_topk(emb, coarse, fine, q, impl="arrow").collect()
-    ]
-    c = [
-        tuple(r)
-        for r in ivfpq_topk(emb, coarse, fine, q, impl="column").collect()
-    ]
-    assert a == c

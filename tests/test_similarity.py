@@ -497,11 +497,10 @@ def test_int_srp_signatures_match_duckdb_bitexact(spark):
         assert lsh.signature_of(v) == got[vid]
 
 
-def test_int_srp_arrow_and_column_impls_bit_equal(spark):
-    """The Arrow numpy-matmul fast path (production default) and the
-    Column-expression form (the plan the DuckDB oracle replays) must
-    produce identical sign_bits row-for-row — the pq_encode twin-impl
-    discipline applied to SRP signatures."""
+def test_int_srp_arrow_matches_signature_of(spark):
+    """The Arrow numpy-matmul signature pass must produce, row for row,
+    the sign_bits of the pure-Python integer reference
+    (``signature_of``), including the all-zero vector."""
     from nlp_to_nosql_spark.operators.similarity import IntSRPLSH
 
     rng = __import__("numpy").random.RandomState(11)
@@ -510,21 +509,16 @@ def test_int_srp_arrow_and_column_impls_bit_equal(spark):
     ] + [(200, [0.0] * 16)]
     df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
     lsh = IntSRPLSH(dim=16, nbits=12, seed=3)
-    arrow = {
+    got = {
         r["vec_id"]: r["sign_bits"]
-        for r in lsh.add_signatures(df, impl="arrow").collect()
+        for r in lsh.add_signatures(df).collect()
     }
-    column = {
-        r["vec_id"]: r["sign_bits"]
-        for r in lsh.add_signatures(df, impl="column").collect()
-    }
-    assert arrow == column and len(arrow) == 201
+    assert got == {vid: lsh.signature_of(v) for vid, v in vecs}
 
 
 def test_int_srp_ragged_input_fails_fast(spark):
-    """Round-6 advice: a vector shorter than dim must raise in BOTH
-    impls, not silently clear bits (Spark) while DuckDB computes a
-    partial dot."""
+    """Round-6 advice: a vector shorter than dim must raise, not sign a
+    partial dot that DuckDB's relational replay would not reproduce."""
     import pytest
 
     from nlp_to_nosql_spark.operators.similarity import IntSRPLSH
@@ -534,9 +528,8 @@ def test_int_srp_ragged_input_fails_fast(spark):
         "vec_id long, embedding array<double>",
     )
     lsh = IntSRPLSH(dim=4, nbits=4, seed=5)
-    for impl in ("arrow", "column"):
-        with pytest.raises(Exception, match="dim"):
-            lsh.add_signatures(df, impl=impl).collect()
+    with pytest.raises(Exception, match="dim"):
+        lsh.add_signatures(df).collect()
     with pytest.raises(ValueError, match="dim"):
         lsh.signature_of([0.1, 0.2, 0.3])
 

@@ -219,26 +219,6 @@ def test_foreachbatch_parquet_sink_is_exactly_once(spark, tmp_path):
     assert second == first
 
 
-def test_tws_variant_gates_on_protobuf_runtime():
-    """The transformWithStateInPandas twin must refuse cleanly (not crash
-    the streaming Python worker) when google.protobuf is absent, and the
-    gate must reflect the actual runtime."""
-    from nlp_to_nosql_spark.streaming import totals
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        have = True
-    except ImportError:
-        have = False
-    assert totals.have_tws_runtime() == have
-    if not have:
-        import pytest
-
-        with pytest.raises(NotImplementedError):
-            totals.running_totals_stream_tws(None)
-
-
 def test_running_totals_null_value_is_skipped(spark):
     """A NULL value must contribute 0 cents (SQL SUM semantics) but still
     count as an event — not ValueError the micro-batch."""
