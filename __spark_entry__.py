@@ -30,7 +30,6 @@ from nlp_to_nosql_spark.operators.similarity import (
     CENTROID_SIM_SQL,
     CENTROID_SQL,
     DIMENSION_STATS_SQL,
-    RandomHyperplaneLSH,
     embedding_neardup_exact,
     int_srp_topk_sql,
     knn_graph_celled_sql,
@@ -493,10 +492,8 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     INDEPENDENT configuration from dedup10 (k=4 shingles, 32 perms, 8
     bands of 4, threshold 0.5) — full value-level oracle replaying the
     banded pipeline relationally (this retired round 5's rows-only weak
-    check).  The xxhash64 production family (one JVM hash per (shingle,
-    perm)) remains the documented scale fast path, pinned against the
-    md5 family by tests/test_family_equivalence.py (identical pair sets
-    at the dedup10 parameters) and tests/test_recall.py."""
+    check).  The md5 family is the only MinHash family; its pair recall
+    is pinned by tests/test_recall.py."""
     docs = register_tables(spark, sf_dir)["documents"]
     return dd.minhash_lsh_pairs(
         docs,
@@ -506,7 +503,6 @@ def _q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_perm=32,
         bands=8,
         threshold=0.5,
-        sig_fn=dd.minhash_signatures_md5,
     )
 
 
@@ -515,10 +511,7 @@ def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the md5-derived 60-bit signature — bands widen to 11
     internally, so banding stays pigeonhole-exact and the DuckDB oracle
     is the full O(n²) Hamming filter (retired round 5's rows-only weak
-    check; dedup9 proves the same family at the tight ≤ 3 radius).
-    The xxhash64 64-bit signature remains the production form (one JVM
-    hash per token, no md5/base-conversion), pinned cross-family by
-    tests/test_family_equivalence.py."""
+    check; dedup9 proves the same family at the tight ≤ 3 radius)."""
     docs = register_tables(spark, sf_dir)["documents"]
     return dd.simhash_pairs(
         docs,
@@ -526,8 +519,6 @@ def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         max_hamming=10,
         bands=4,
-        sig=dd.simhash60_md5("text"),
-        sig_bits=60,
     ).select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
@@ -548,13 +539,9 @@ def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     components integer micros, so every sign bit is an exact BIGINT dot
     sign and the whole pipeline (signatures → Hamming ≤ 6 prefilter →
     exact cosine re-rank) carries a value-level DuckDB oracle — this
-    retired the last float-sign weak check (the float
-    ``RandomHyperplaneLSH`` production family remains pinned by
-    tests/test_family_equivalence.py and tests/test_recall.py).
-    Measured mean recall@10 = 0.66 over the 8 test queries — query 0
-    probes 127/500 candidates (vs 0.537 for the float family at the
-    identical nbits=16/ham=6 config; floor pinned in
-    tests/test_recall.py)."""
+    retired the last float-sign weak check.  Measured mean recall@10 =
+    0.66 over the 8 test queries — query 0 probes 127/500 candidates
+    (floor pinned in tests/test_recall.py)."""
     from nlp_to_nosql_spark.operators.similarity import IntSRPLSH
 
     emb = register_tables(spark, sf_dir)["embeddings"]
@@ -565,7 +552,7 @@ def _q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_embcos_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (all-pairs baseline tier; the
-    LSH-bucketed scale tier is RandomHyperplaneLSH.neardup_pairs)."""
+    LSH-bucketed scale tier is IntSRPLSH.neardup_pairs)."""
     emb = register_tables(spark, sf_dir)["embeddings"]
     return embedding_neardup_exact(emb, threshold=0.4)
 
@@ -2415,7 +2402,6 @@ def _q_dedup_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_perm=32,
         bands=8,
         threshold=0.5,
-        sig_fn=dd.minhash_signatures_md5,
     )
     truth = dd.ngram_jaccard_pairs(
         docs, "doc_id", "text", k=4, threshold=0.5
@@ -3043,9 +3029,9 @@ def _q_minhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set plus signature-agreement verification is a
     deterministic function of the signatures, so the oracle replays the
     whole pipeline (signatures → band buckets → candidates → est-Jaccard
-    filter) relationally.  dedup3 keeps the xxhash64-per-permutation
-    production family (weak check); est is an exact /64 binary fraction,
-    so the 6-dp round is an identity on both engines."""
+    filter) relationally.  dedup3 runs the same family at an independent
+    configuration; est is an exact /64 binary fraction, so the 6-dp
+    round is an identity on both engines."""
     docs = register_tables(spark, sf_dir)["documents"]
     return dd.minhash_lsh_pairs(
         docs,
@@ -3055,7 +3041,6 @@ def _q_minhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         num_perm=64,
         bands=16,
         threshold=0.3,
-        sig_fn=dd.minhash_signatures_md5,
     )
 
 
@@ -3064,8 +3049,8 @@ def _q_simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     60-bit signature is reproducible in DuckDB, and max_hamming=3 <
     bands=4 makes the banding exact (pigeonhole), so the banded
     candidate join must equal the full O(n²) Hamming filter the oracle
-    runs.  dedup4 keeps the xxhash64 production form (weak check); this
-    proves the algorithm end-to-end."""
+    runs.  dedup4 runs the same family at the production radius
+    (≤ 10); this proves the algorithm end-to-end at the tight one."""
     docs = register_tables(spark, sf_dir)["documents"]
     return dd.simhash_pairs(
         docs,
@@ -3073,8 +3058,6 @@ def _q_simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         max_hamming=3,
         bands=4,
-        sig=dd.simhash60_md5("text"),
-        sig_bits=60,
     ).select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
@@ -3534,7 +3517,6 @@ def _q_paragraph_dedup_quality(
         num_perm=32,
         bands=8,
         threshold=0.5,
-        sig_fn=dd.minhash_signatures_md5,
         shingle_arrays=sh,
     )
     truth = dd.ngram_jaccard_pairs(
@@ -3574,8 +3556,7 @@ def _q_paragraph_dedup_quality_sampled(
             num_perm=32,
             bands=8,
             threshold=0.5,
-            sig_fn=dd.minhash_signatures_md5,
-        ),
+            ),
         lambda s: dd.ngram_jaccard_pairs(
             s, "para_key", "para_text", k=3, threshold=0.5
         ),

@@ -9,7 +9,7 @@ from nlp_to_nosql_spark.operators.ivf import IVFIndex
 from nlp_to_nosql_spark.operators.joins import salted_join
 from nlp_to_nosql_spark.operators.sessions import sessionize, sessionize_stream
 from nlp_to_nosql_spark.operators.similarity import (
-    RandomHyperplaneLSH,
+    IntSRPLSH,
     embedding_neardup_exact,
     topk_batch,
     topk_bruteforce,
@@ -25,7 +25,7 @@ __all__ = [
     "salted_join",
     "sessionize",
     "sessionize_stream",
-    "RandomHyperplaneLSH",
+    "IntSRPLSH",
     "embedding_neardup_exact",
     "topk_batch",
     "topk_bruteforce",

@@ -1198,18 +1198,19 @@ def target_lm_fit(
 def _write_artifact(path: str, parts: dict) -> None:
     """Write each ``name → frame`` part to ``path/name`` as parquet.  The
     writes are independent jobs, so they run CONCURRENTLY, one thread
-    per part."""
+    per part.  Each pool thread inherits the caller's local properties
+    (``inheritable_thread_target``), so the write jobs join the
+    caller's job group and a ``run_with_timeout`` cancel reaches them."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
+    @inheritable_thread_target
+    def write(part: tuple) -> None:
+        part[1].write.mode("overwrite").parquet(f"{path}/{part[0]}")
+
     with ThreadPoolExecutor(max_workers=len(parts)) as pool:
-        list(
-            pool.map(
-                lambda t: t[1].write.mode("overwrite").parquet(
-                    f"{path}/{t[0]}"
-                ),
-                parts.items(),
-            )
-        )
+        list(pool.map(write, parts.items()))
 
 
 def _load_artifact(path: str, spark, parts: dict, who: str) -> tuple:
@@ -1915,7 +1916,7 @@ def remove_boilerplate_spans(
     indexed ``filter`` over the token array.  Only (id, pos, chunk)
     rows ever shuffle — document text moves once, at the final rebuild
     join.  At 100 TB the chunk string would be ``xxhash64``-keyed before
-    the shuffle exactly like ``ngram_jaccard_pairs(hash_keys=True)``;
+    the shuffle exactly like :func:`ngram_jaccard_pairs` keys its index;
     the string form keeps the DuckDB twin value-exact.
 
     Short documents (< k tokens) form one whole-text chunk, so a

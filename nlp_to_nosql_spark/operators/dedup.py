@@ -108,7 +108,7 @@ def shingle_arrays(
     """(id, ``_sh`` array<string>) — each row's DISTINCT k-word shingle
     set as an array attribute, the shared frontier of the shingle-based
     pair generators: :func:`shingle_table` explodes it,
-    :func:`minhash_signatures` / :func:`minhash_signatures_md5` fold it.
+    :func:`minhash_signatures_md5` folds it.
     Callers that run SEVERAL generators over the same frame (the
     eval11/eval12 precision-recall measurements) build this once,
     persist it, and pass it via the generators' ``shingle_arrays``
@@ -170,7 +170,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.8,
     max_df: int = 1000,
-    hash_keys: bool = True,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
     """All pairs (id_a < id_b) with shingle-set Jaccard ≥ threshold.
@@ -180,18 +179,17 @@ def ngram_jaccard_pairs(
     shingle then on the pair key; both keys are high-cardinality, and the
     ``max_df`` cutoff bounds the worst bucket at O(max_df²).
 
-    ``hash_keys`` (the default) replaces each shingle STRING with its
-    ``xxhash64`` long before the index is persisted and shuffled: every
-    downstream count is a pure set-cardinality computation, so the pair
-    output is identical as long as no two distinct shingles collide in
+    Each shingle STRING is replaced by its ``xxhash64`` long before the
+    index is persisted and shuffled: every downstream count is a pure
+    set-cardinality computation, so the pair output equals the
+    string-keyed Jaccard as long as no two distinct shingles collide in
     64 bits, while the persisted index and both shuffles move an 8-byte
     key instead of a k-word string (several-fold fewer bytes — the
     dominant cost of this operator at corpus scale).  The birthday bound
     puts one corpus-wide collision at ~3 % for 10¹² distinct shingles,
-    and ONE collision perturbs at most one Jaccard score by one count —
-    pass ``hash_keys=False`` for the string-exact form (the value-level
-    DuckDB oracle is replayed against the default, which matches
-    string-exact output on every collision-free corpus).
+    and ONE collision perturbs at most one Jaccard score by one count
+    (the value-level DuckDB oracle matches on every collision-free
+    corpus).
 
     When the ``max_df`` cutoff triggers, the score is the exact Jaccard of
     the **rare-shingle** sets: both the intersection counts and the per-doc
@@ -208,11 +206,10 @@ def ngram_jaccard_pairs(
     # engine's biggest intermediate — shingle-factor × the documents — so
     # it persists DISK_ONLY, not in executor memory.
     index = shingle_table(df, id_col, text_col, k, shingle_arrays=shingle_arrays)
-    if hash_keys:
-        index = index.select(
-            F.col(id_col), F.xxhash64(F.col("shingle")).alias("shingle")
-        )
-    ex = persisted(index, "shingles")
+    ex = persisted(
+        index.select(F.col(id_col), F.xxhash64(F.col("shingle")).alias("shingle")),
+        "shingles",
+    )
 
     # Stop shingles (df > max_df) are bounded by |shingle rows| / max_df —
     # usually tiny, but at extreme corpus scale that bound is NOT a
@@ -306,14 +303,15 @@ def minhash_signatures_md5(
     num_perm: int = 64,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
-    """Oracle-reproducible minhash signatures: ONE md5 per shingle, then
-    ``num_perm`` arithmetic permutations of the 28-bit base — versus the
-    xxhash64 family's hash-per-(shingle × permutation).  That is the
-    cost shape a 100 TB minhash pass wants (the hash is the expensive
+    """(id, sig array<long>) — oracle-reproducible minhash signatures:
+    ONE md5 per shingle, then ``num_perm`` arithmetic permutations of the
+    28-bit base rather than a hash per (shingle × permutation).  That is
+    the cost shape a 100 TB minhash pass wants (the hash is the expensive
     part; the permutations are mul-adds), and every step is integer
-    arithmetic DuckDB replays exactly.  The base hashes live in their
-    own projection so the permutation lambda references an attribute
-    array, not a re-hashed subexpression.  ``shingle_arrays`` (a
+    arithmetic DuckDB replays exactly.  Shuffle-free per-row fold: a
+    document's signature never leaves its scan partition.  The base
+    hashes live in their own projection so the permutation lambda
+    references an attribute array, not a re-hashed subexpression.  ``shingle_arrays`` (a
     prebuilt :func:`shingle_arrays` frame for the same ``df``/``k``)
     skips the tokenize+shingle pass."""
     base = shingle_arrays
@@ -347,54 +345,6 @@ def minhash_signatures_md5(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_perm: int = 64,
-    shingle_arrays: DataFrame | None = None,
-) -> DataFrame:
-    """(id, sig array<long>) — one xxhash64 family member per permutation.
-    :func:`minhash_signatures_md5` is the oracle-reproducible family.
-
-    Shuffle-free per-row fold: the signature is an ``aggregate`` over the
-    document's distinct shingle array, zip-merging a 64-long running-min
-    vector with each shingle's 64 permuted hashes.  A document's signature
-    never leaves its scan partition — at 100 TB the minhash stage adds
-    zero shuffle.  (An earlier measurement had the explode + 64-min-agg
-    groupBy form 7× faster, but that was confounded by the tokenization
-    recompute fixed in :func:`shingles_of_words`; with tokens as an
-    attribute, the fold form is ~5× faster on a cold plan — 64 min-aggs
-    generate pathological whole-stage code — and equal warm.)
-    """
-    sh = shingle_arrays
-    if sh is None:
-        sh = tokenized(df, id_col, text_col).select(
-            F.col(id_col),
-            F.array_distinct(shingles_of_words(F.col("_words"), k)).alias(
-                "_sh"
-            ),
-        )
-    return sh.select(
-        F.col(id_col),
-        F.aggregate(
-            F.col("_sh"),
-            F.array_repeat(F.lit(_LONG_MAX).cast("long"), num_perm),
-            lambda acc, s: F.zip_with(
-                acc,
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(num_perm - 1)),
-                    lambda i: F.xxhash64(
-                        F.concat(F.lit("perm"), i.cast("string"), F.lit(":"), s)
-                    ),
-                ),
-                lambda a, h: F.least(a, h),
-            ),
-        ).alias("sig"),
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -403,7 +353,6 @@ def minhash_lsh_pairs(
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    sig_fn=None,
     shingle_arrays: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs via banded MinHash-LSH + signature-level verification.
@@ -411,12 +360,8 @@ def minhash_lsh_pairs(
     ``bands`` bands of ``num_perm // bands`` rows; a pair is a candidate if
     any band hashes equal (probability ≈ 1-(1-j^r)^b).  Candidates are
     verified by estimated Jaccard = fraction of agreeing minhashes, so the
-    full shingle sets are never rejoined.  ``sig_fn`` selects the
-    signature family (default :func:`minhash_signatures`; pass
-    :func:`minhash_signatures_md5` for the oracle-reproducible form).  It
-    is called as ``sig_fn(df, id_col, text_col, k, num_perm, *,
-    shingle_arrays=None)`` and must return ``(id_col, sig
-    array<long>)`` with ``num_perm`` entries per row.
+    full shingle sets are never rejoined.  Signatures come from
+    :func:`minhash_signatures_md5`, the oracle-reproducible family.
     ``shingle_arrays`` (a prebuilt :func:`shingle_arrays` frame for the
     same ``df``/``k``) is forwarded to the signature builder so the
     tokenize+shingle pass is shared with other generators.
@@ -433,7 +378,7 @@ def minhash_lsh_pairs(
     # Narrow (id + num_perm longs), reused by banding and verification:
     # memory with disk spillover.
     sig = persisted(
-        (sig_fn or minhash_signatures)(
+        minhash_signatures_md5(
             df, id_col, text_col, k, num_perm, shingle_arrays=shingle_arrays
         ),
         "signatures",
@@ -506,43 +451,15 @@ def minhash_lsh_pairs(
 # SimHash near-dup
 # ---------------------------------------------------------------------------
 
-#: SQL-lambda form because the Python ``shiftright`` wrapper only takes a
-#: literal int shift; SQL ``shiftright(expr, expr)`` shifts by a column.
-_SIMHASH_SQL = """
-aggregate(
-  zip_with(
-    aggregate(
-      transform(split(regexp_replace(lower(trim({c})), '\\\\s+', ' '), ' '),
-                t -> xxhash64(t)),
-      array_repeat(0, 64),
-      (acc, h) -> zip_with(acc, sequence(0, 63),
-                           (a, i) -> a + IF((shiftright(h, i) & 1L) = 1L, 1, -1))
-    ),
-    sequence(0, 63),
-    (s, i) -> IF(s > 0, shiftleft(1L, i), 0L)
-  ),
-  0L,
-  (acc, v) -> acc | v
-)
-"""
-
-
-def simhash64(col_name: str) -> Column:
-    """64-bit SimHash of normalized whitespace tokens of column ``col_name``.
-
-    Per token: xxhash64 → 64 sign contributions; per document: sum per bit,
-    bit set where the sum is positive.  Nested SQL transforms/aggregates —
-    no shuffle, no Python.
-    """
-    return F.expr(_SIMHASH_SQL.format(c=col_name))
-
-
-#: 60-bit SimHash over md5-derived token hashes.  Same algorithm as
-#: :data:`_SIMHASH_SQL` but the token hash is the first 15 hex chars of
-#: md5 parsed as an integer — which DuckDB reproduces exactly
+#: 60-bit SimHash over md5-derived token hashes: per token, the first
+#: 15 hex chars of md5 parsed as an integer give 60 sign contributions;
+#: per document, a bit is set where its sum is positive.  DuckDB
+#: reproduces the token hash exactly
 #: (``CAST('0x'||substr(md5(t),1,15) AS UBIGINT)``), so the WHOLE simhash
-#: pipeline gets a value-level oracle; the xxhash64 form stays the
-#: production fast path (one JVM hash vs an md5 + base conversion).
+#: pipeline gets a value-level oracle.  SQL-lambda form because the
+#: Python ``shiftright`` wrapper only takes a literal int shift; SQL
+#: ``shiftright(expr, expr)`` shifts by a column.  Nested SQL
+#: transforms/aggregates — no shuffle, no Python.
 _SIMHASH_MD5_SQL = """
 aggregate(
   zip_with(
@@ -574,8 +491,6 @@ def simhash_pairs(
     text_col: str,
     max_hamming: int = 3,
     bands: int = 4,
-    sig: Column | None = None,
-    sig_bits: int = 64,
 ) -> DataFrame:
     """Pairs with SimHash Hamming distance ≤ ``max_hamming``.
 
@@ -587,25 +502,22 @@ def simhash_pairs(
     for every parameterization, ``bands`` is widened to
     ``max_hamming + 1`` when the caller passes fewer (bits outside the
     banded region only ever ADD candidates, so partial band coverage at
-    high ``bands`` never loses a pair).  ``max_hamming ≥ sig_bits`` would
-    need 1-bit bands and matches everything — rejected.
-
-    ``sig``/``sig_bits`` override the signature expression (default
-    64-bit xxhash64 simhash; pass :func:`simhash60_md5` with 60 for the
-    oracle-reproducible form).
+    high ``bands`` never loses a pair).  ``max_hamming ≥ 60`` would need
+    1-bit bands and matches everything — rejected.  Signatures are
+    :func:`simhash60_md5`, the oracle-reproducible 60-bit family.
     """
-    if max_hamming >= sig_bits:
+    if max_hamming >= 60:
         raise ValueError(
-            f"max_hamming={max_hamming} >= sig_bits={sig_bits}: every pair "
+            f"max_hamming={max_hamming} >= 60 signature bits: every pair "
             "matches; filter on nothing instead"
         )
     bands = max(bands, max_hamming + 1)
-    width = sig_bits // bands
+    width = 60 // bands
     mask = (1 << width) - 1
     sigs = persisted(
         fan_out(df.select(id_col, text_col)).select(
             F.col(id_col),
-            (sig if sig is not None else simhash64(text_col)).alias("simhash"),
+            simhash60_md5(text_col).alias("simhash"),
         ),
         "signatures",
     )
@@ -1257,7 +1169,6 @@ def paragraph_neardup(
         num_perm=num_perm,
         bands=bands,
         threshold=threshold,
-        sig_fn=minhash_signatures_md5,
     )
     oa = reps.select(
         F.col("_key").alias("id_a"),

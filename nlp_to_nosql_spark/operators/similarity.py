@@ -7,7 +7,7 @@ Two tiers (SURVEY driver brief):
   TakeOrderedAndProject (per-partition heaps + driver merge of k·P rows),
   so nothing but k rows per partition ever moves.  This is the correct
   baseline even at 100 TB when k is small.
-* ``RandomHyperplaneLSH`` — sign-bit signatures for the scale path:
+* ``IntSRPLSH`` — integer sign-bit signatures for the scale path:
   bucket the corpus by signature (one shuffle, done once), then probe only
   buckets within a small Hamming radius of the query's signature.
   Embedding near-dup pairs reuse the same signatures.
@@ -178,7 +178,7 @@ def embedding_neardup_exact(
     comparisons — but as dense BLAS kernels over bounded 2·block_size
     groups, not per-pair array folds, and replication (×n_blocks) is the
     inherent cost of exactness.  At corpus scale prefer
-    :meth:`RandomHyperplaneLSH.neardup_pairs`, which buckets by signature
+    :meth:`IntSRPLSH.neardup_pairs`, which buckets by signature
     first and only verifies within buckets.
 
     Fail-fast scale guard: the exact tier REFUSES inputs above
@@ -203,7 +203,7 @@ def embedding_neardup_exact(
             f"embedding_neardup_exact: input has more than {ceiling} rows "
             f"(saw ≥ {n_seen}); the exact all-pairs tier is O(n²) and "
             "would not complete at this scale. Use "
-            "RandomHyperplaneLSH.neardup_pairs (signature-bucketed, "
+            "IntSRPLSH.neardup_pairs (signature-bucketed, "
             "measured recall in tests/test_recall.py) or raise "
             f"{_EXACT_MAX_ROWS_CONF} deliberately."
         )
@@ -283,178 +283,6 @@ def embedding_neardup_exact(
     )
 
 
-class RandomHyperplaneLSH:
-    """Sign-random-projection LSH with a fixed seed (deterministic).
-
-    ``nbits`` hyperplanes drawn from N(0,1) with ``numpy`` seed → a
-    signature column ``sign_bits`` (long).  Same family as the classic
-    SRP-LSH construction; cos(a,b) ≈ cos(π · hamming/nbits).
-
-    TIER ROLES (round 7): production callers default to the subclass
-    :class:`IntSRPLSH` — its integer signatures are engine-reproducible
-    (value-level DuckDB oracle), its measured recall@10 at the entry
-    config is HIGHER (0.66 vs 0.537, tests/test_recall.py), and since
-    round 7 its signature pass runs as an Arrow numpy matmul, so the
-    float family no longer has a speed edge.  This Gaussian-plane float
-    family remains the recall-measured ALTERNATIVE for callers who want
-    textbook N(0,1) planes (exact θ/π bit-flip probability) or a pure
-    Column-expression pipeline with no Python workers; its banding /
-    probing machinery (``topk``, ``neardup_pairs``) is shared by both
-    via inheritance and stays covered by tests/test_recall.py and
-    tests/test_family_equivalence.py.
-    """
-
-    def __init__(self, dim: int, nbits: int = 16, seed: int = 42):
-        if not 1 <= nbits <= 63:
-            raise ValueError("nbits must be in [1, 63]")
-        self.dim, self.nbits, self.seed = dim, nbits, seed
-        rng = np.random.RandomState(seed)
-        self.planes = rng.randn(nbits, dim)
-
-    def signature_col(self, vec_col: str) -> F.Column:
-        """Signature as a Column expression — JVM-side dot products."""
-        bits = []
-        for i, plane in enumerate(self.planes):
-            dot_i = F.aggregate(
-                F.zip_with(
-                    F.col(vec_col),
-                    lit_vector(plane),
-                    lambda x, y: x.cast("double") * y,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            bits.append(
-                F.when(dot_i >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                    F.lit(0).cast("long")
-                )
-            )
-        out = bits[0]
-        for b in bits[1:]:
-            out = out.bitwiseOR(b)
-        return out
-
-    def signature_of(self, vec: Sequence[float]) -> int:
-        v = np.asarray(vec, dtype=np.float64)
-        return int(sum(1 << i for i, p in enumerate(self.planes) if float(p @ v) >= 0))
-
-    def add_signatures(
-        self, df: DataFrame, vec_col: str = "embedding"
-    ) -> DataFrame:
-        return fan_out(df).withColumn("sign_bits", self.signature_col(vec_col))
-
-    def topk(
-        self,
-        df: DataFrame,
-        query: Sequence[float],
-        k: int = 10,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        max_hamming: int = 2,
-    ) -> DataFrame:
-        """Approximate top-k: score only vectors whose signature is within
-        ``max_hamming`` bits of the query's (multi-probe).
-
-        Projects to ``(id, vec)`` BEFORE the signature pass: signature
-        impls that route through ``mapInPandas`` are a column-pruning
-        barrier, so the narrow select here is what keeps payload columns
-        out of the Arrow round-trip."""
-        sig_df = self.add_signatures(df.select(id_col, vec_col), vec_col)
-        qsig = self.signature_of(query)
-        candidates = sig_df.filter(
-            F.bit_count(F.col("sign_bits").bitwiseXOR(F.lit(qsig))) <= max_hamming
-        )
-        return topk_bruteforce(candidates, query, k, id_col, vec_col)
-
-    def neardup_pairs(
-        self,
-        df: DataFrame,
-        threshold: float = 0.95,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        bands: int = 1,
-    ) -> DataFrame:
-        """Embedding-cosine near-dup pairs: candidates from sign-bit
-        buckets, verified with exact cosine — so precision is always 1.0
-        and ``bands`` is purely a recall/cost dial.
-
-        ``bands=1`` (default) buckets by the EXACT signature — right for
-        genuinely near-identical pairs (cos ≥ ~0.95, where
-        P(all bits agree) = (1-θ/π)^nbits stays high).  For moderate
-        thresholds split the signature into ``bands`` chunks and take a
-        pair as candidate when ANY chunk agrees: at cos 0.4
-        (θ≈66°, per-bit agreement p≈0.63) the full-signature
-        probability p^16 is ~0.06 %, while 8 two-bit bands give
-        1-(1-p²)^8 ≈ 98 % (measured on the sf0.01 corpus:
-        recall 0.00 → 0.59 → 0.97 for bands 1 → 4 → 8 at nbits=16,
-        tests/test_recall.py).  The cost is wider buckets —
-        n²/2^(nbits/bands) verifications per band — so at corpus scale
-        raise ``nbits`` together with ``bands`` to keep the chunk width
-        (and bucket count) constant."""
-        if not 1 <= bands <= self.nbits:
-            raise ValueError(f"bands={bands} must be in [1, {self.nbits}]")
-        sig = persisted(
-            self.add_signatures(df.select(id_col, vec_col), vec_col),
-            "signatures",
-        )
-        width = self.nbits // bands
-        mask = (1 << width) - 1
-        banded = sig.select(
-            F.col(id_col),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("band"),
-                            F.shiftrightunsigned(
-                                F.col("sign_bits"), i * width
-                            )
-                            .bitwiseAND(F.lit(mask))
-                            .alias("chunk"),
-                        )
-                        for i in range(bands)
-                    ]
-                )
-            ).alias("bc"),
-        ).select(
-            id_col,
-            F.col("bc.band").alias("band"),
-            F.col("bc.chunk").alias("chunk"),
-        )
-        a, b = banded.alias("a"), banded.alias("b")
-        candidates = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.chunk") == F.col("b.chunk"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-            )
-            .distinct()
-        )
-        va = sig.select(
-            F.col(id_col).alias("id_a"), F.col(vec_col).alias("_vec_a")
-        )
-        vb = sig.select(
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vec_b")
-        )
-        return (
-            candidates.join(va, "id_a")
-            .join(vb, "id_b")
-            .select(
-                "id_a",
-                "id_b",
-                F.round(
-                    cosine(F.col("_vec_a"), F.col("_vec_b")), 6
-                ).alias("cos_sim"),
-            )
-            .filter(F.col("cos_sim") >= threshold)
-        )
-
-
 def _md5_plane_int(seed: int, bit: int, dim_j: int) -> int:
     """Deterministic hyperplane component: first 24 md5 bits of
     ``srp:{seed}:{bit}:{dim_j}`` centered at zero — [-2^23, 2^23).
@@ -466,15 +294,16 @@ def _md5_plane_int(seed: int, bit: int, dim_j: int) -> int:
     return int(h, 16) - (1 << 23)
 
 
-class IntSRPLSH(RandomHyperplaneLSH):
+class IntSRPLSH:
     """Integer-EXACT sign-random-projection LSH — the oracle-reproducible
     signature family (the ``dedup9``/``dedup10`` discipline applied to
     SRP).
 
-    The float family's sign bits are signs of float dot products, and
-    float accumulation order differs between engines — a near-zero
-    projection can flip a bit, so :class:`RandomHyperplaneLSH` carries
-    no value-level oracle.  Here both factors of every dot product are
+    ``nbits`` hyperplanes with a fixed seed (deterministic) → a signature
+    column ``sign_bits`` (long).  Gaussian float planes would sign float
+    dot products, and float accumulation order differs between engines
+    — a near-zero projection can flip a bit, so they carry no
+    value-level oracle.  Here both factors of every dot product are
     integers: hyperplane components are md5-derived 24-bit ints
     (:func:`_md5_plane_int`) and vector components are floor-scaled
     integer micros, so each sign bit is the sign of an exact BIGINT sum
@@ -492,9 +321,8 @@ class IntSRPLSH(RandomHyperplaneLSH):
     (``> 0``, the simhash convention) identically in both engines.
 
     Signatures come from :meth:`add_signatures` (Arrow) or
-    :meth:`signature_of` (pure Python); the inherited float
-    :meth:`RandomHyperplaneLSH.signature_col` does not compute this
-    family's integer bits.
+    :meth:`signature_of` (pure Python); :meth:`topk` and
+    :meth:`neardup_pairs` band and probe them.
     """
 
     def __init__(self, dim: int, nbits: int = 16, seed: int = 42):
@@ -569,6 +397,115 @@ class IntSRPLSH(RandomHyperplaneLSH):
             if sum(c * mm for c, mm in zip(plane, m)) > 0:
                 sig |= 1 << i
         return sig
+
+    def topk(
+        self,
+        df: DataFrame,
+        query: Sequence[float],
+        k: int = 10,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        max_hamming: int = 2,
+    ) -> DataFrame:
+        """Approximate top-k: score only vectors whose signature is within
+        ``max_hamming`` bits of the query's (multi-probe).
+
+        Projects to ``(id, vec)`` BEFORE the signature pass: its
+        ``mapInPandas`` is a column-pruning barrier, so the narrow select
+        here is what keeps payload columns out of the Arrow round-trip."""
+        sig_df = self.add_signatures(df.select(id_col, vec_col), vec_col)
+        qsig = self.signature_of(query)
+        candidates = sig_df.filter(
+            F.bit_count(F.col("sign_bits").bitwiseXOR(F.lit(qsig))) <= max_hamming
+        )
+        return topk_bruteforce(candidates, query, k, id_col, vec_col)
+
+    def neardup_pairs(
+        self,
+        df: DataFrame,
+        threshold: float = 0.95,
+        id_col: str = "vec_id",
+        vec_col: str = "embedding",
+        bands: int = 1,
+    ) -> DataFrame:
+        """Embedding-cosine near-dup pairs: candidates from sign-bit
+        buckets, verified with exact cosine — so precision is always 1.0
+        and ``bands`` is purely a recall/cost dial.
+
+        ``bands=1`` (default) buckets by the EXACT signature — right for
+        genuinely near-identical pairs (cos ≥ ~0.95, where
+        P(all bits agree) = (1-θ/π)^nbits stays high).  For moderate
+        thresholds split the signature into ``bands`` chunks and take a
+        pair as candidate when ANY chunk agrees: at cos 0.4
+        (θ≈66°, per-bit agreement p≈0.63 for Gaussian planes) the
+        full-signature probability p^16 is ~0.06 %, while 8 two-bit
+        bands give 1-(1-p²)^8 ≈ 98 % (measured on the sf0.01 corpus: recall 0.000 → 0.542 → 1.000
+        for bands 1 → 4 → 8 at nbits=16, tests/test_recall.py).  The cost is wider buckets —
+        n²/2^(nbits/bands) verifications per band — so at corpus scale
+        raise ``nbits`` together with ``bands`` to keep the chunk width
+        (and bucket count) constant."""
+        if not 1 <= bands <= self.nbits:
+            raise ValueError(f"bands={bands} must be in [1, {self.nbits}]")
+        sig = persisted(
+            self.add_signatures(df.select(id_col, vec_col), vec_col),
+            "signatures",
+        )
+        width = self.nbits // bands
+        mask = (1 << width) - 1
+        banded = sig.select(
+            F.col(id_col),
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(i).alias("band"),
+                            F.shiftrightunsigned(
+                                F.col("sign_bits"), i * width
+                            )
+                            .bitwiseAND(F.lit(mask))
+                            .alias("chunk"),
+                        )
+                        for i in range(bands)
+                    ]
+                )
+            ).alias("bc"),
+        ).select(
+            id_col,
+            F.col("bc.band").alias("band"),
+            F.col("bc.chunk").alias("chunk"),
+        )
+        a, b = banded.alias("a"), banded.alias("b")
+        candidates = (
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.chunk") == F.col("b.chunk"))
+                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+            )
+            .select(
+                F.col(f"a.{id_col}").alias("id_a"),
+                F.col(f"b.{id_col}").alias("id_b"),
+            )
+            .distinct()
+        )
+        va = sig.select(
+            F.col(id_col).alias("id_a"), F.col(vec_col).alias("_vec_a")
+        )
+        vb = sig.select(
+            F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vec_b")
+        )
+        return (
+            candidates.join(va, "id_a")
+            .join(vb, "id_b")
+            .select(
+                "id_a",
+                "id_b",
+                F.round(
+                    cosine(F.col("_vec_a"), F.col("_vec_b")), 6
+                ).alias("cos_sim"),
+            )
+            .filter(F.col("cos_sim") >= threshold)
+        )
 
 
 def int_srp_topk_sql(

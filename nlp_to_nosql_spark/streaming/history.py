@@ -9,7 +9,7 @@ with watermarked windows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -72,10 +72,3 @@ def windowed_event_counts(
         )
     )
 
-
-def stream_events_from_dir(
-    spark: SparkSession, input_dir: str, schema: T.StructType
-) -> DataFrame:
-    """File-source stream (the test harness feeds JSON files; in
-    production this would be Kafka/queue with identical downstream code)."""
-    return spark.readStream.schema(schema).json(input_dir)

@@ -20,7 +20,6 @@ def stream_append_parquet(
     stream_df: DataFrame,
     path: str,
     checkpoint: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Exactly-once parquet append via ``foreachBatch``.
 
@@ -37,10 +36,9 @@ def stream_append_parquet(
             os.path.join(path, f"batch_id={batch_id}")
         )
 
-    writer = (
+    return (
         stream_df.writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -878,6 +878,39 @@ def test_target_lm_artifact_roundtrip(spark, tmp_path):
         assert got == want
 
 
+def test_artifact_writes_join_callers_job_group(spark, tmp_path):
+    """The artifact parts are written from pool threads; each write job
+    must carry the CALLER's job group, or ``run_with_timeout`` could
+    neither cancel nor attribute it (a plain pool thread starts with
+    empty local properties)."""
+    import time
+    import uuid
+
+    from nlp_to_nosql_spark.operators.curation import _write_artifact
+
+    sc = spark.sparkContext
+    group = f"probe-group-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        _write_artifact(
+            str(tmp_path / "art"), {"a": spark.range(3), "b": spark.range(5)}
+        )
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
+    # Job-start events reach the status store asynchronously.
+    deadline = time.monotonic() + 10
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    while len(jobs) < 2 and time.monotonic() < deadline:
+        time.sleep(0.1)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) >= 2, f"write jobs outside the caller's group: {jobs}"
+
+
 def test_target_lm_load_rejects_schema_drift(spark, tmp_path):
     from nlp_to_nosql_spark.operators.curation import (
         target_lm_fit,

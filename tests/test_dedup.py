@@ -1,5 +1,8 @@
 """Dedup operator semantics on a crafted corpus with known duplicates."""
 
+import itertools
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -58,20 +61,31 @@ def test_ngram_jaccard_finds_near_dups(docs):
 
 
 def test_ngram_jaccard_hashed_keys_equal_string_keys(docs):
-    """hash_keys=True (8-byte xxhash64 shuffle keys, the production
-    default) must emit the identical pair set and scores as the
-    string-keyed form — Jaccard only ever counts set cardinalities, so
-    the representation of the set elements is invisible absent a 64-bit
-    collision."""
-    def rows(hash_keys):
-        return {
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in D.ngram_jaccard_pairs(
-                docs, "doc_id", "text", k=3, threshold=0.1, hash_keys=hash_keys
-            ).collect()
-        }
+    """The index keys each shingle by its 8-byte xxhash64, yet the pair
+    set and scores must equal a pure-Python Jaccard of the normalized
+    3-word shingle STRING sets — Jaccard only ever counts set
+    cardinalities, so the representation of the set elements is
+    invisible absent a 64-bit collision."""
+    def shingle_set(text, k=3):
+        words = re.sub(r"\s+", " ", text.strip(" ").lower()).split(" ")
+        if len(words) < k:
+            return {" ".join(words)}
+        return {" ".join(words[i:i + k]) for i in range(len(words) - k + 1)}
 
-    assert rows(True) == rows(False)
+    sets = {i: shingle_set(t) for i, t in CORPUS}
+    want = {}
+    for a, b in itertools.combinations(sorted(sets), 2):
+        j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        if j >= 0.1:
+            want[(a, b)] = round(j, 6)
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in D.ngram_jaccard_pairs(
+            docs, "doc_id", "text", k=3, threshold=0.1
+        ).collect()
+    }
+    assert want  # non-vacuous
+    assert got == want
 
 
 def test_minhash_lsh_finds_near_dups(docs):
@@ -104,7 +118,7 @@ def test_minhash_estimate_tracks_exact_jaccard(docs):
 def test_simhash_identical_and_near(docs, spark):
     sigs = {
         r["doc_id"]: r["s"]
-        for r in docs.select("doc_id", D.simhash64("text").alias("s")).collect()
+        for r in docs.select("doc_id", D.simhash60_md5("text").alias("s")).collect()
     }
     assert sigs[1] == sigs[2] == sigs[3]   # normalization-equal → same signature
     ham14 = bin(sigs[1] ^ sigs[4]).count("1")
@@ -192,21 +206,23 @@ def test_duplicated_spans_within_doc_repeat_not_counted(spark):
     assert rep not in out
 
 
-def test_simhash_bands_widen_keeps_contract(spark):
+def test_simhash_bands_widen_keeps_contract(spark, monkeypatch):
     """max_hamming >= bands previously dropped in-range pairs silently;
     bands now auto-widen so the output equals the exact Hamming filter."""
     from nlp_to_nosql_spark.operators import dedup as dd
     from pyspark.sql import functions as F
 
-    # Signatures injected directly: ids 1,2 differ in 8 bits spread 2 per
-    # 16-bit chunk (no shared chunk at bands=4), within max_hamming=10.
+    # Signatures injected directly: ids 1,2 differ in 8 bits, 2 at each
+    # multiple of 16 — one pair per 15-bit chunk of the 60-bit signature,
+    # so no shared chunk at bands=4 — within max_hamming=10.
     sig_a = 0
     sig_b = 0
     for chunk in range(4):
         sig_b |= 0b11 << (chunk * 16)
     df = spark.createDataFrame([(1, "x"), (2, "y")], "doc_id long, text string")
     sig = F.when(F.col("doc_id") == 1, F.lit(sig_a)).otherwise(F.lit(sig_b))
-    out = dd.simhash_pairs(df, "doc_id", "text", max_hamming=10, bands=4, sig=sig)
+    monkeypatch.setattr(dd, "simhash60_md5", lambda c: sig)
+    out = dd.simhash_pairs(df, "doc_id", "text", max_hamming=10, bands=4)
     rows = out.collect()
     assert [(r["id_a"], r["id_b"], r["hamming"]) for r in rows] == [(1, 2, 8)]
 

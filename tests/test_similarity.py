@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F, types as T
 
-from nlp_to_nosql_spark.operators.similarity import RandomHyperplaneLSH, topk_bruteforce
+from nlp_to_nosql_spark.operators.similarity import IntSRPLSH, topk_bruteforce
 
 DIM = 16
 N = 200
@@ -61,21 +61,14 @@ def test_scale_invariance(vec_df, vectors):
 
 def test_lsh_recall_on_neighbors(vec_df, vectors):
     q = [float(x) for x in vectors[0]]
-    lsh = RandomHyperplaneLSH(dim=DIM, nbits=12, seed=42)
+    lsh = IntSRPLSH(dim=DIM, nbits=12, seed=42)
     approx = [r["vec_id"] for r in lsh.topk(vec_df, q, k=5, max_hamming=3).collect()]
     # the planted near-dups of vector 0 must be found
     assert 0 in approx and 1 in approx and 2 in approx
 
 
-def test_lsh_signature_column_matches_driver_side(vec_df, vectors):
-    lsh = RandomHyperplaneLSH(dim=DIM, nbits=12, seed=42)
-    rows = lsh.add_signatures(vec_df).select("vec_id", "sign_bits").collect()
-    for r in rows[:20]:
-        assert r["sign_bits"] == lsh.signature_of(vectors[r["vec_id"]])
-
-
 def test_lsh_neardup_pairs(vec_df):
-    lsh = RandomHyperplaneLSH(dim=DIM, nbits=12, seed=42)
+    lsh = IntSRPLSH(dim=DIM, nbits=12, seed=42)
     pairs = {
         (r["id_a"], r["id_b"]): r["cos_sim"]
         for r in lsh.neardup_pairs(vec_df, threshold=0.98).collect()
@@ -451,8 +444,6 @@ def test_int_srp_signatures_match_duckdb_bitexact(spark):
     identically)."""
     import duckdb
 
-    from nlp_to_nosql_spark.operators.similarity import IntSRPLSH
-
     vecs = [
         (0, [0.5, -0.25, 0.125, 1.0]),
         (1, [-0.999999, 0.000001, 0.3333333, -0.7]),
@@ -501,8 +492,6 @@ def test_int_srp_arrow_matches_signature_of(spark):
     """The Arrow numpy-matmul signature pass must produce, row for row,
     the sign_bits of the pure-Python integer reference
     (``signature_of``), including the all-zero vector."""
-    from nlp_to_nosql_spark.operators.similarity import IntSRPLSH
-
     rng = __import__("numpy").random.RandomState(11)
     vecs = [
         (i, [float(x) for x in rng.randn(16)]) for i in range(200)
@@ -520,8 +509,6 @@ def test_int_srp_ragged_input_fails_fast(spark):
     """Round-6 advice: a vector shorter than dim must raise, not sign a
     partial dot that DuckDB's relational replay would not reproduce."""
     import pytest
-
-    from nlp_to_nosql_spark.operators.similarity import IntSRPLSH
 
     df = spark.createDataFrame(
         [(0, [0.1, 0.2, 0.3, 0.4]), (1, [0.1, 0.2, 0.3])],

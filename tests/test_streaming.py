@@ -12,7 +12,6 @@ from nlp_to_nosql_spark.streaming import (
     history_aggregates,
     windowed_event_counts,
 )
-from nlp_to_nosql_spark.streaming.history import stream_events_from_dir
 
 EVENT_SCHEMA = T.StructType(
     [
@@ -82,7 +81,7 @@ def test_streaming_end_to_end(spark, tmp_path):
         ],
     )
 
-    stream = stream_events_from_dir(spark, str(src), EVENT_SCHEMA)
+    stream = spark.readStream.schema(EVENT_SCHEMA).json(str(src))
     assert stream.isStreaming
     agg = windowed_event_counts(stream, window="1 hour", watermark="10 minutes")
     q = (

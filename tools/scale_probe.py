@@ -304,7 +304,6 @@ def main() -> int:
             num_perm=32,
             bands=8,
             threshold=0.5,
-            sig_fn=dd.minhash_signatures_md5,
         )
         truth = dd.ngram_jaccard_pairs(
             docs, "doc_id", "text", k=4, threshold=0.5
@@ -650,7 +649,6 @@ def main() -> int:
                 "doc_id",
                 "text",
                 threshold=0.3,
-                sig_fn=dd.minhash_signatures_md5,
             ),
             "dedup11_winnowed": lambda: dd.winnowed_duplicated_spans(
                 docs, "doc_id", "text"
@@ -857,7 +855,6 @@ def main() -> int:
                     ddp.minhash_lsh_pairs(
                         reps, "para_key", "para_text", k=3, num_perm=32,
                         bands=8, threshold=0.5,
-                        sig_fn=ddp.minhash_signatures_md5,
                     ),
                     ddp.ngram_jaccard_pairs(
                         reps, "para_key", "para_text", k=3, threshold=0.5
@@ -896,7 +893,6 @@ def main() -> int:
                     lambda s: ddp.minhash_lsh_pairs(
                         s, "para_key", "para_text", k=3, num_perm=32,
                         bands=8, threshold=0.5,
-                        sig_fn=ddp.minhash_signatures_md5,
                     ),
                     lambda s: ddp.ngram_jaccard_pairs(
                         s, "para_key", "para_text", k=3, threshold=0.5
