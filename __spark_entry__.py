@@ -646,8 +646,8 @@ def _q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation, NN-descent seeding).  Blocked int64 matmuls emit exact
     (dot, na, nb) integers; similarity, ranking, and the mutual
     self-join happen JVM-side, so no numpy float rounding reaches the
-    output.  Fail-fast above spark.nlp2nosql.exact.maxRows — at corpus
-    scale the graph is built per IVF cell."""
+    output.  Fail-fast above the exact tier's 1M-row ceiling — at
+    corpus scale the graph is built per IVF cell."""
     from nlp_to_nosql_spark.operators.similarity import knn_graph
 
     emb = register_tables(spark, sf_dir)["embeddings"]

@@ -50,8 +50,7 @@ def _h15(c: Column) -> Column:
 #: broadcast-joins onto the exploded token-bucket frame instead (a
 #: fastText-scale 2^20-bucket vocabulary would be a multi-MB driver
 #: collect + per-task closure otherwise).
-_WEIGHTS_COLLECT_MAX_CONF = "spark.nlp2nosql.classify.weightsCollectMax"
-_WEIGHTS_COLLECT_MAX_DEFAULT = 1 << 16
+_WEIGHTS_COLLECT_MAX = 1 << 16
 
 
 def _broadcast_join_score(
@@ -159,11 +158,11 @@ def hashed_linear_score(
     test-pinned.
 
     ``weights`` is the REAL-model path: a ``(bucket, weight)`` frame of
-    trained int64 coefficients.  Up to ``spark.nlp2nosql.classify.
-    weightsCollectMax`` buckets (default 2¹⁶) it is a bounded driver
-    collect (the IVF-centroid discipline) baked into the scoring kernel,
-    so the plan stays the SAME zero-shuffle JVM scan (pinned
-    exchange-free by ``tests/test_classify.py``).  Above the threshold —
+    trained int64 coefficients.  Up to ``_WEIGHTS_COLLECT_MAX`` buckets
+    (2¹⁶) it is a bounded driver collect (the IVF-centroid discipline)
+    baked into the scoring kernel, so the plan stays the SAME
+    zero-shuffle JVM scan (pinned exchange-free by
+    ``tests/test_classify.py``).  Above the threshold —
     a fastText-scale vocabulary — the table instead BROADCAST-JOINS onto
     the exploded token-bucket frame (:func:`_broadcast_join_score`: no
     driver-side Python collect, no multi-MB task closure; one partial-
@@ -179,14 +178,8 @@ def hashed_linear_score(
         lambda t: t != F.lit(""),
     )
 
-    if weights is not None and n_buckets > int(
-        df.sparkSession.conf.get(
-            _WEIGHTS_COLLECT_MAX_CONF, str(_WEIGHTS_COLLECT_MAX_DEFAULT)
-        )
-    ):
-        return _broadcast_join_score(
-            df, weights, toks, id_col, n_buckets
-        )
+    if weights is not None and n_buckets > _WEIGHTS_COLLECT_MAX:
+        return _broadcast_join_score(df, weights, toks, id_col, n_buckets)
 
     wtable: list[int] | None = None
     if weights is not None:
@@ -402,9 +395,9 @@ def nb_charngram_langid(
 
     Plan shape (100 TB): the count tables are TRAIN-sized groupBys that
     aggregate down to (labels × vocab) rows; scoring pays one char-gram
-    explode (same factor as the dedup shingle tables, persisted under
-    the same conf), one hash join on the gram key, and one per-(doc,
-    label-hit) groupBy; the label-constants/vocab frames are ≤ |labels|
+    explode (same factor as the dedup shingle tables, persisted at the
+    same storage level), one hash join on the gram key, and one
+    per-(doc, label-hit) groupBy; the label-constants/vocab frames are ≤ |labels|
     rows, broadcast.  No corpus-sized state reaches the driver.
     """
     from nlp_to_nosql_spark.operators.dedup import md5_hash28

@@ -1383,13 +1383,12 @@ def duplicated_spans(
 
 #: Bloom auto-sizing knobs: registers for the sizing HLL (m=1024 →
 #: ±1.04/√1024 ≈ ±3.3 % NDV error, far tighter than the 10× headroom the
-#: sizing applies), bits-per-distinct-fingerprint target, and the conf
-#: capping the broadcast word array (2²⁷ bits = 16 MB of longs — past
-#: that, prefer raising k_hashes or sharding the corpus filter).
+#: sizing applies), bits-per-distinct-fingerprint target, and the cap
+#: on the broadcast word array (2²⁷ bits = 16 MB of longs — past that,
+#: prefer raising k_hashes or sharding the corpus filter).
 _BLOOM_HLL_M = 1024
 _BLOOM_BITS_PER_KEY = 10
-_BLOOM_MAX_BITS_CONF = "spark.nlp2nosql.bloom.maxBits"
-_BLOOM_MAX_BITS_DEFAULT = 1 << 27
+_BLOOM_MAX_BITS = 1 << 27
 _BLOOM_MIN_BITS = 1 << 10
 # Above this word count the Bloom probe switches from a codegen'd
 # Column-literal array to a broadcast numpy array + Arrow pandas_udf
@@ -1402,7 +1401,7 @@ def auto_bloom_bits(corpus_fps: DataFrame, fp_col: str = "fp") -> int:
     pass over the (already-persisted) fingerprint projection estimates
     the distinct-fingerprint count, and ``m_bits`` becomes
     ``_BLOOM_BITS_PER_KEY × NDV`` rounded UP to a power of two —
-    clamped to ``[2¹⁰, spark.nlp2nosql.bloom.maxBits]``.
+    clamped to ``[2¹⁰, _BLOOM_MAX_BITS]``.
 
     The HLL shuffle moves ≤ ``_BLOOM_HLL_M`` rows per map partition
     (the sketch contract), so sizing costs one cheap extra job over the
@@ -1421,25 +1420,12 @@ def auto_bloom_bits(corpus_fps: DataFrame, fp_col: str = "fp") -> int:
     ndv = hll_estimate(
         [(r["reg"], r["max_rho"]) for r in regs], m=_BLOOM_HLL_M
     )
-    cap = int(
-        corpus_fps.sparkSession.conf.get(
-            _BLOOM_MAX_BITS_CONF, str(_BLOOM_MAX_BITS_DEFAULT)
-        )
-    )
     # The word array allocates m_bits // 64 longs, so every size this
     # function returns must be 64-divisible or a position could index
-    # one word past the buffer.  Powers of two ≥ 2¹⁰ always are; a
-    # user-set cap need not be — round it DOWN to a multiple of 64 (and
-    # refuse caps too small to hold even one word-aligned filter).
-    cap -= cap % 64
-    if cap < 64:
-        raise ValueError(
-            f"{_BLOOM_MAX_BITS_CONF} must be at least 64 bits; got the "
-            "equivalent of an empty word array"
-        )
+    # one word past the buffer; powers of two ≥ 64 always are.
     target = max(_BLOOM_MIN_BITS, int(_BLOOM_BITS_PER_KEY * max(ndv, 1.0)))
     m_bits = 1 << (target - 1).bit_length()  # next power of two ≥ target
-    return min(m_bits, cap)
+    return min(m_bits, _BLOOM_MAX_BITS)
 
 
 def _bloom_words(
@@ -1447,7 +1433,7 @@ def _bloom_words(
 ) -> list[int]:
     """OR-fold the corpus fingerprints' k bit positions into the
     ``m_bits``-bit word array — the only corpus-wide pass, shuffling
-    ≤ ``m_bits/64`` rows, collected bounded (≤ 16 MB at the conf cap)."""
+    ≤ ``m_bits/64`` rows, collected bounded (≤ 16 MB at the cap)."""
 
     def positions(i: int) -> Column:
         return F.pmod(F.xxhash64(F.col("fp"), F.lit(i)), F.lit(m_bits))
@@ -1492,7 +1478,7 @@ def _bloom_stage(
     cross to Python).  The split exists because a ``F.lit`` array
     literal is re-serialized into every task and blows up codegen as
     m grows — measured 90.5 s vs 11.6 s at m=2²³ on the 100× probe —
-    while the broadcast path is flat in m (2 MB array at the 2²⁷ conf
+    while the broadcast path is flat in m (16 MB array at the 2²⁷-bit
     cap).  Path equivalence is test-pinned
     (``test_bloom_probe_kernels_agree``)."""
     # Stage each probe position as a projected attribute so the hash is
@@ -1592,7 +1578,7 @@ def incremental_new_docs(
     join on a few percent of the batch.  ``m_bits=None`` AUTO-SIZES the
     filter from the corpus itself (:func:`auto_bloom_bits`: HLL-estimate
     the distinct-fingerprint count off the persisted projection, take
-    ~10 bits/key rounded to a power of two, conf-capped) — the right
+    ~10 bits/key rounded to a power of two, capped at 2²⁷ bits) — the right
     default for an unknown-scale corpus, since a static ``m_bits``
     sized for yesterday's corpus silently degrades to anti-joining most
     of the batch as the corpus outgrows it.

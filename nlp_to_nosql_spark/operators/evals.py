@@ -142,34 +142,23 @@ def pair_set_quality(
     a corpus-scale operator.  Pass ``truth_universe`` (the frame the
     truth generator enumerates pairs over — the documents / distinct
     paragraphs) to enforce that contract in code: one count-only job,
-    and a fail-fast above ``spark.nlp2nosql.exact.maxRows`` (the
-    ``embedding_neardup_exact`` ceiling pattern) pointing at
+    and a fail-fast above the ``embedding_neardup_exact`` row ceiling
+    (``similarity._EXACT_MAX_ROWS``) pointing at
     :func:`pair_set_quality_sampled` — instead of silently launching
     the exact truth join over a full corpus.
     """
     if truth_universe is not None:
-        from nlp_to_nosql_spark.operators.similarity import (
-            _EXACT_MAX_ROWS_CONF,
-            _EXACT_MAX_ROWS_DEFAULT,
-        )
+        from nlp_to_nosql_spark.operators.similarity import _EXACT_MAX_ROWS
 
-        spark = truth_universe.sparkSession
-        ceiling = int(
-            spark.conf.get(
-                _EXACT_MAX_ROWS_CONF, str(_EXACT_MAX_ROWS_DEFAULT)
+        n = truth_universe.count()
+        if n > _EXACT_MAX_ROWS:
+            raise ValueError(
+                f"pair_set_quality: truth universe has {n} rows "
+                f"(> {_EXACT_MAX_ROWS}); the exact-pair truth relation is "
+                "a tuning measurement, not a corpus-scale operator — run "
+                "pair_set_quality_sampled (the seeded consistent-hash "
+                "sampled tier)."
             )
-        )
-        if ceiling > 0:
-            n = truth_universe.count()
-            if n > ceiling:
-                raise ValueError(
-                    f"pair_set_quality: truth universe has {n} rows "
-                    f"(> {ceiling}); the exact-pair truth relation is "
-                    "a tuning measurement, not a corpus-scale "
-                    "operator — run pair_set_quality_sampled (the "
-                    "seeded consistent-hash sampled tier) or raise "
-                    f"{_EXACT_MAX_ROWS_CONF} deliberately."
-                )
     p = pred.select(id_a, id_b).distinct().withColumn("_p", F.lit(1))
     t = truth.select(id_a, id_b).distinct().withColumn("_t", F.lit(1))
     j = p.join(t, [id_a, id_b], "full")
@@ -747,7 +736,7 @@ def knn_label_eval(
     oracle checks the stated contract.
 
     Scale: inherits knn_graph's contract (exact tier fail-fast above
-    ``spark.nlp2nosql.exact.maxRows``; per-IVF-cell at corpus scale);
+    ``similarity._EXACT_MAX_ROWS`` rows; per-IVF-cell at corpus scale);
     everything after the graph is edge-list-sized joins and ≤ |labels|
     output rows.
     """

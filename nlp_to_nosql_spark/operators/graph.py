@@ -27,10 +27,10 @@ a key-partitioned join/agg — no driver-side state beyond the per-round
 convergence counter.
 
 **Small-edge fast path**: when the pair relation fits under
-``spark.nlp2nosql.cc.localEdgeThreshold`` (default 100k pairs), the
-components are solved with driver-side union-find and broadcast back —
-the exact analogue of a broadcast hash join's small-side collect, with the
-same boundedness contract.  Only nodes that appear in edges are collected
+``_LOCAL_EDGE_MAX`` (100k pairs), the components are solved with
+driver-side union-find and broadcast back — the exact analogue of a
+broadcast hash join's small-side collect, with the same boundedness
+contract.  Only nodes that appear in edges are collected
 (never the node table: isolated nodes coalesce to their own id after a
 broadcast left join), so the driver's working set is bounded by the
 threshold regardless of corpus size.  Above the threshold the iterative
@@ -47,13 +47,10 @@ from nlp_to_nosql_spark.plans.localrel import local_df
 #: Edge-count ceiling for the driver-side union-find fast path.  The
 #: decision is read off the checkpoint-materializing count — large graphs
 #: never pay a probe or collect job at all — and the collect only happens
-#: when the graph FITS (≤ threshold rows), so the default is sized for a
-#: few MB of driver heap (~100k Row pairs), not for the largest graph
-#: union-find could handle.  Raise it deliberately when the driver has
-#: memory to burn and the pair relation is known to hover near the
-#: threshold; 0 disables the fast path.
-_LOCAL_EDGE_THRESHOLD_CONF = "spark.nlp2nosql.cc.localEdgeThreshold"
-_LOCAL_EDGE_THRESHOLD_DEFAULT = 100_000
+#: when the graph FITS (≤ threshold rows), so it is sized for a few MB
+#: of driver heap (~100k Row pairs), not for the largest graph
+#: union-find could handle.
+_LOCAL_EDGE_MAX = 100_000
 
 
 def _union_find_min_labels(edge_rows: list[tuple[int, int]]) -> list[tuple[int, int]]:
@@ -120,46 +117,38 @@ def connected_components(
     # for exactly those callers), and the collect below is bounded by
     # construction — it only runs when n_edges ≤ threshold.
     n_edges = e.count()
-    spark = edges.sparkSession
-    threshold = int(
-        spark.conf.get(
-            _LOCAL_EDGE_THRESHOLD_CONF, str(_LOCAL_EDGE_THRESHOLD_DEFAULT)
-        )
-    )
-    if 0 < threshold:
-        if n_edges <= threshold:
-            sample = e.collect()
-            pairs = [(r["src"], r["dst"]) for r in sample]
-            if node_ids is None:
-                # The endpoints ARE the node set: the mapping is the answer.
-                mapping = _union_find_min_labels(pairs)
-                if not mapping:
-                    return local_df(spark, [], "id long, label long")
-                return local_df(spark, mapping, "id long, label long")
-            # Iterative-path semantics: an edge conducts only through
-            # endpoints that have a label row (i.e. appear in `nodes`).
-            # The node table may be corpus-sized, so membership is checked
-            # distributed — one semi-join of node_ids against the bounded
-            # endpoint set (≤ 2·threshold ids), collect bounded likewise.
-            endpoints = {x for p in pairs for x in p}
-            endpoints_df = local_df(
-                spark, [(x,) for x in endpoints], "id long"
-            )
-            present = {
-                r["id"]
-                for r in node_ids.join(
-                    F.broadcast(endpoints_df), "id", "semi"
-                ).collect()
-            }
-            mapping = _union_find_min_labels(
-                [(a, b) for a, b in pairs if a in present and b in present]
-            )
+    if n_edges <= _LOCAL_EDGE_MAX:
+        spark = edges.sparkSession
+        sample = e.collect()
+        pairs = [(r["src"], r["dst"]) for r in sample]
+        if node_ids is None:
+            # The endpoints ARE the node set: the mapping is the answer.
+            mapping = _union_find_min_labels(pairs)
             if not mapping:
-                return node_ids.select("id", F.col("id").alias("label"))
-            mapping_df = local_df(spark, mapping, "id long, label long")
-            return node_ids.join(F.broadcast(mapping_df), "id", "left").select(
-                "id", F.coalesce("label", "id").alias("label")
-            )
+                return local_df(spark, [], "id long, label long")
+            return local_df(spark, mapping, "id long, label long")
+        # Iterative-path semantics: an edge conducts only through
+        # endpoints that have a label row (i.e. appear in `nodes`).
+        # The node table may be corpus-sized, so membership is checked
+        # distributed — one semi-join of node_ids against the bounded
+        # endpoint set (≤ 2·threshold ids), collect bounded likewise.
+        endpoints = {x for p in pairs for x in p}
+        endpoints_df = local_df(spark, [(x,) for x in endpoints], "id long")
+        present = {
+            r["id"]
+            for r in node_ids.join(
+                F.broadcast(endpoints_df), "id", "semi"
+            ).collect()
+        }
+        mapping = _union_find_min_labels(
+            [(a, b) for a, b in pairs if a in present and b in present]
+        )
+        if not mapping:
+            return node_ids.select("id", F.col("id").alias("label"))
+        mapping_df = local_df(spark, mapping, "id long, label long")
+        return node_ids.join(F.broadcast(mapping_df), "id", "left").select(
+            "id", F.coalesce("label", "id").alias("label")
+        )
 
     sym = e.union(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

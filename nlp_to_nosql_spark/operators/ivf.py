@@ -29,9 +29,9 @@ from nlp_to_nosql_spark.operators.similarity import topk_bruteforce
 #: training vectors; at the 100 TB design point that must default to a
 #: sample, not the corpus (sampled means estimate the full-corpus means
 #: with √s-scaled noise, and full-probe exactness never depends on where
-#: centroids came from).  Set to 0 to opt back into full-corpus training.
-_TRAIN_CAP_CONF = "spark.nlp2nosql.ivf.trainCap"
-_TRAIN_CAP_DEFAULT = 100_000
+#: centroids came from).  Full-corpus training is an explicit
+#: ``train_on=df``.
+_TRAIN_CAP = 100_000
 
 
 class IVFIndex:
@@ -115,11 +115,11 @@ class IVFIndex:
         the centroids came from.
 
         When ``train_on`` is None the sampled shape is the DEFAULT: if the
-        corpus exceeds ``spark.nlp2nosql.ivf.trainCap`` rows (100k), the
-        training set is a deterministic hash sample of ~that many vectors
+        corpus exceeds ``_TRAIN_CAP`` rows (100k), the training set is a
+        deterministic hash sample of ~that many vectors
         (partition-layout-independent, so retries and re-runs train on the
-        same rows).  Full-corpus training is the opt-in (trainCap=0), not
-        the accident.
+        same rows).  Full-corpus training is the opt-in
+        (``train_on=df``), not the accident.
         """
         # No fan_out here: the assignment UDF is one numpy matmul per Arrow
         # batch (memory-bandwidth-bound), so natural input splits give all
@@ -130,23 +130,19 @@ class IVFIndex:
         train = train_on
         if train is None:
             train = df
-            cap = int(
-                df.sparkSession.conf.get(_TRAIN_CAP_CONF, str(_TRAIN_CAP_DEFAULT))
-            )
-            if cap > 0:
-                total = df.select(id_col).count()
-                if total > cap:
-                    # Deterministic ~cap-row hash sample: keep ids whose
-                    # seeded hash falls under cap/total of the bucket space.
-                    denom = 1 << 20
-                    keep = max(1, -(-cap * denom // total))  # ceil
-                    train = df.filter(
-                        F.pmod(
-                            F.xxhash64(F.lit(self.seed), F.col(id_col)),
-                            F.lit(denom),
-                        )
-                        < keep
+            total = df.select(id_col).count()
+            if total > _TRAIN_CAP:
+                # Deterministic ~cap-row hash sample: keep ids whose
+                # seeded hash falls under cap/total of the bucket space.
+                denom = 1 << 20
+                keep = max(1, -(-_TRAIN_CAP * denom // total))  # ceil
+                train = df.filter(
+                    F.pmod(
+                        F.xxhash64(F.lit(self.seed), F.col(id_col)),
+                        F.lit(denom),
                     )
+                    < keep
+                )
 
         # Re-scanned once per Lloyd's iteration: memory with disk spillover.
         narrow = persisted(train.select(id_col, vec_col), "vectors")
@@ -161,8 +157,8 @@ class IVFIndex:
                     f"{self.n_lists}; pass a larger training set or fewer lists"
                 )
             if train is not df:
-                # Internal trainCap sample came up short (pathological conf
-                # or unlucky hash draw): fall back to the full corpus.
+                # Internal training sample came up short (unlucky hash
+                # draw): fall back to the full corpus.
                 narrow.unpersist()
                 narrow = persisted(df.select(id_col, vec_col), "vectors")
                 init_rows = self._init_rows(narrow, id_col, vec_col)

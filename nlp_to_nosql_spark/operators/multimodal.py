@@ -2,17 +2,20 @@
 
 The Spark-side architecture is real and tested — schema, partitioning,
 Arrow-batched ``mapInPandas`` signatures, deterministic frame/sample
-selection.  The codec layer is split by what this container can honestly
-do:
+selection.  The codec layer is split by what the Python standard library
+can decode:
 
 * **audio/WAV — REAL decode** (:func:`audio_features`): the stdlib
   ``wave`` module parses RIFF/WAVE payloads inside executors — channel
   count, sample rate, sample count, duration, and per-payload RMS
   amplitude — no external codec needed.
-* **image — feature-detected plug point**: ``use_real_codecs=True`` uses
-  Pillow when importable and raises ``NotImplementedError`` at the exact
-  plug-in line otherwise; the default fake decoder is deterministic over
-  the payload bytes so pipelines are testable end-to-end either way.
+* **image — deterministic surrogate**: :func:`image_features` and
+  :func:`resize_images` derive their outputs from the payload bytes and
+  the metadata geometry alone (sha256, mean byte, a ``|WxH`` resize
+  tag), so image pipelines are testable and oracle-checkable end-to-end
+  without an image codec.  A real decoder would replace
+  ``_decode_image_stub`` and the resize surrogate; the Spark plumbing
+  around them stays as it is.
 
 At scale: payloads stay columnar (parquet binary), decode happens inside
 executors in Arrow batches, and all metadata math (frame timestamps,
@@ -62,46 +65,15 @@ IMAGE_FEATURE_SCHEMA = T.StructType(
 )
 
 
-def have_pillow() -> bool:
-    """Feature-detect a real image codec: True when Pillow imports."""
-    try:
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _decode_image_stub(payload: bytes, use_real_codecs: bool) -> dict:
-    """Image decode step.  With ``use_real_codecs=True`` this uses Pillow
-    when the environment provides it and raises at the exact plug-in line
-    otherwise; the default fake is a deterministic function of the bytes."""
-    if use_real_codecs:
-        if not have_pillow():
-            raise NotImplementedError(
-                "real image decode requires Pillow/libvips — not available "
-                "in this environment; plug the decoder in here"
-            )
-        import io
-
-        import PIL.Image
-
-        with PIL.Image.open(io.BytesIO(payload)) as img:
-            gray = img.convert("L")
-            data = gray.tobytes()
-            return {
-                "sha256": hashlib.sha256(payload).hexdigest(),
-                "mean_byte": (sum(data) / len(data)) if data else 0.0,
-                "width": img.width,
-                "height": img.height,
-            }
+def _decode_image_stub(payload: bytes) -> dict:
+    """Image decode step: a deterministic function of the payload bytes."""
     return {
         "sha256": hashlib.sha256(payload).hexdigest(),
         "mean_byte": (sum(payload) / len(payload)) if payload else 0.0,
     }
 
 
-def image_features(media: DataFrame, use_real_codecs: bool = False) -> DataFrame:
+def image_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over image payloads.
 
     ``mapInPandas`` so each task processes whole Arrow record batches;
@@ -118,7 +90,7 @@ def image_features(media: DataFrame, use_real_codecs: bool = False) -> DataFrame
                 # NULL payload/meta or an undecodable image yields a
                 # null-feature row, never a stage failure.
                 try:
-                    f = _decode_image_stub(payload, use_real_codecs)
+                    f = _decode_image_stub(payload)
                     rows.append(
                         (
                             media_id,
@@ -129,8 +101,6 @@ def image_features(media: DataFrame, use_real_codecs: bool = False) -> DataFrame
                             None if meta is None else meta["height"],
                         )
                     )
-                except NotImplementedError:
-                    raise  # the documented use_real_codecs plug point
                 except Exception:
                     rows.append((media_id, None, None, None, None, None))
             yield pd.DataFrame(
@@ -329,23 +299,18 @@ def fit_within(w: int, h: int, max_side: int) -> tuple[int, int]:
     return max(1, (w * max_side) // m), max(1, (h * max_side) // m)
 
 
-def resize_images(
-    media: DataFrame, max_side: int = 224, use_real_codecs: bool = False
-) -> DataFrame:
+def resize_images(media: DataFrame, max_side: int = 224) -> DataFrame:
     """Bounded-box image resize stage — the normalization pass a
     multimodal training pipeline runs before feature extraction.
 
     The Spark plumbing is real (Arrow ``mapInPandas`` over
     (media_id, payload, meta); payloads never transit the driver); the
-    pixel work follows the module's codec split: with
-    ``use_real_codecs=True`` Pillow resizes and the output hash covers
-    the actual resized bytes (raises ``NotImplementedError`` at the plug
-    line when Pillow is absent); the default stub emits a deterministic
-    resized-payload surrogate — sha256 of the payload plus a
-    ``|WxH`` geometry tag, sized ``dst_w·dst_h`` (1 byte/px grayscale) —
-    so the full pipeline is testable and oracle-checkable without a
-    codec.  Rows with missing/NULL geometry yield null-feature rows,
-    never a stage failure (the audio_features contract)."""
+    pixel work is the module's deterministic image surrogate — sha256
+    of the payload plus a ``|WxH`` geometry tag, sized ``dst_w·dst_h``
+    (1 byte/px grayscale) — so the full pipeline is testable and
+    oracle-checkable without a codec.  Rows with missing/NULL geometry
+    yield null-feature rows, never a stage failure (the audio_features
+    contract)."""
 
     def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -364,27 +329,9 @@ def resize_images(
                     if w <= 0 or h <= 0:
                         raise ValueError("bad geometry")
                     dw, dh = fit_within(w, h, max_side)
-                    if use_real_codecs:
-                        if not have_pillow():
-                            raise NotImplementedError(
-                                "real image resize requires Pillow — plug "
-                                "the codec in here"
-                            )
-                        import io
-
-                        import PIL.Image
-
-                        with PIL.Image.open(io.BytesIO(payload)) as img:
-                            resized = img.resize((dw, dh)).convert("L").tobytes()
-                        digest = hashlib.sha256(resized).hexdigest()
-                        n_bytes = len(resized)
-                    else:
-                        tag = f"|{dw}x{dh}".encode()
-                        digest = hashlib.sha256(bytes(payload) + tag).hexdigest()
-                        n_bytes = dw * dh
-                    rows.append((media_id, w, h, dw, dh, n_bytes, digest))
-                except NotImplementedError:
-                    raise  # the documented use_real_codecs plug point
+                    tag = f"|{dw}x{dh}".encode()
+                    digest = hashlib.sha256(bytes(payload) + tag).hexdigest()
+                    rows.append((media_id, w, h, dw, dh, dw * dh, digest))
                 except Exception:
                     rows.append(
                         (media_id, None, None, None, None, None, None)

@@ -773,8 +773,7 @@ def _encoded_vocab(
 #: law keeps real-corpus vocabularies far under this, but a pathological
 #: input (e.g. random hex blobs) must fail loudly before a collect, not
 #: OOM the driver.
-_LOCAL_VOCAB_CAP_CONF = "spark.nlp2nosql.bpe.localVocabCap"
-_LOCAL_VOCAB_CAP_DEFAULT = 5_000_000
+_LOCAL_VOCAB_CAP = 5_000_000
 
 
 def bpe_train_local(
@@ -796,9 +795,8 @@ def bpe_train_local(
     the merge loop over the collected ``(word, count)`` table — the
     corpus is touched exactly once, and the loop costs no cluster time
     at all.  This mirrors that architecture; the collect is bounded by
-    ``spark.nlp2nosql.bpe.localVocabCap`` (fail-fast, default 5 M
-    distinct words — far above Heaps'-law vocabularies, far below
-    driver OOM).
+    ``_LOCAL_VOCAB_CAP`` (fail-fast, 5 M distinct words — far above
+    Heaps'-law vocabularies, far below driver OOM).
 
     Same greedy semantics and ``(count DESC, lhs, rhs)`` tie order as
     :func:`bpe_train` — equality at every N is test-pinned — so the
@@ -817,10 +815,7 @@ def bpe_train_local(
     is hypothesis-pinned, ``test_bpe_train_local_incremental_
     equals_naive``).
     """
-    spark = df.sparkSession
-    cap = int(
-        spark.conf.get(_LOCAL_VOCAB_CAP_CONF, str(_LOCAL_VOCAB_CAP_DEFAULT))
-    )
+    cap = _LOCAL_VOCAB_CAP
     counted = (
         df.select(F.explode(_tokens(text_col)).alias("w"))
         .groupBy("w")
@@ -829,9 +824,8 @@ def bpe_train_local(
     rows = counted.limit(cap + 1).collect()
     if len(rows) > cap:
         raise ValueError(
-            f"bpe_train_local: vocabulary exceeds {cap} distinct words "
-            f"(conf {_LOCAL_VOCAB_CAP_CONF}); use bpe_train for a "
-            "distributed merge loop"
+            f"bpe_train_local: vocabulary exceeds {cap} distinct words; "
+            "use bpe_train for a distributed merge loop"
         )
     words = {r["w"]: int(r["wc"]) for r in rows}
     return _bpe_merge_loop(words, int(n_merges))

@@ -346,8 +346,8 @@ def semantic_dedup(
     ``fit="sampled_kmeans"`` is the PRODUCTION centroid source Abbas et
     al. cluster with: a deterministic sampled Lloyd's fit
     (:class:`~nlp_to_nosql_spark.operators.ivf.IVFIndex` — hash-spread
-    seeded init, training capped at ``spark.nlp2nosql.ivf.trainCap``
-    rows, so the fit cost is sample-proportional at any corpus size).
+    seeded init, training capped at ``ivf._TRAIN_CAP`` rows, so the fit
+    cost is sample-proportional at any corpus size).
     Cell quality decides dedup recall: near-duplicates only compare if
     they land in the SAME cell, and fitted cells track the data's
     actual density instead of whatever region the lowest ids came from

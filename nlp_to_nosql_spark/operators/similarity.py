@@ -25,11 +25,11 @@ from nlp_to_nosql_spark.functions.vectors import cosine, lit_vector
 from nlp_to_nosql_spark.plans.caching import persisted
 from nlp_to_nosql_spark.plans.partitioning import fan_out
 
-#: Row-count ceiling for the exact O(n²) near-dup tier
-#: (:func:`embedding_neardup_exact`).  Above it the operator raises and
-#: points at the LSH tier rather than melting the cluster; 0 disables.
-_EXACT_MAX_ROWS_CONF = "spark.nlp2nosql.exact.maxRows"
-_EXACT_MAX_ROWS_DEFAULT = 1_000_000
+#: Row-count ceiling for the exact O(n²) tiers
+#: (:func:`embedding_neardup_exact`, :func:`knn_graph`, per cell in
+#: :func:`knn_graph_celled`).  Above it the operator raises and points
+#: at the scalable tier rather than melting the cluster.
+_EXACT_MAX_ROWS = 1_000_000
 
 
 def topk_bruteforce(
@@ -182,21 +182,17 @@ def embedding_neardup_exact(
     first and only verifies within buckets.
 
     Fail-fast scale guard: the exact tier REFUSES inputs above
-    ``spark.nlp2nosql.exact.maxRows`` (default 1M ≈ 5·10¹¹ dot
-    products, the outer edge of what "run the exact tier anyway" can
-    mean) by raising ``ValueError`` pointing at the LSH tier, instead
-    of launching a quadratic job on a corpus-scale frame.  The check is
-    bounded (LIMIT ceiling+1, never a full count when ``n_blocks`` is
-    explicit); 0 disables it — the same conf discipline as
-    ``graph.py``'s ``spark.nlp2nosql.cc.localEdgeThreshold``.
+    ``_EXACT_MAX_ROWS`` (1M ≈ 5·10¹¹ dot products, the outer edge of
+    what "run the exact tier anyway" can mean) by raising
+    ``ValueError`` pointing at the LSH tier, instead of launching a
+    quadratic job on a corpus-scale frame.  The check is bounded
+    (LIMIT ceiling+1, never a full count when ``n_blocks`` is
+    explicit).
     """
     import numpy as np
     import pandas as pd
 
-    spark = df.sparkSession
-    ceiling = int(
-        spark.conf.get(_EXACT_MAX_ROWS_CONF, str(_EXACT_MAX_ROWS_DEFAULT))
-    )
+    ceiling = _EXACT_MAX_ROWS
 
     def _refuse(n_seen: int) -> None:
         raise ValueError(
@@ -204,8 +200,7 @@ def embedding_neardup_exact(
             f"(saw ≥ {n_seen}); the exact all-pairs tier is O(n²) and "
             "would not complete at this scale. Use "
             "IntSRPLSH.neardup_pairs (signature-bucketed, "
-            "measured recall in tests/test_recall.py) or raise "
-            f"{_EXACT_MAX_ROWS_CONF} deliberately."
+            "measured recall in tests/test_recall.py)."
         )
 
     narrow = df.select(id_col, vec_col)
@@ -218,14 +213,14 @@ def embedding_neardup_exact(
 
         narrow = persisted(narrow, "vectors")
         n = narrow.count()
-        if ceiling > 0 and n > ceiling:
+        if n > ceiling:
             # Don't leak the cache on the refusal path: the frame was
             # persisted for the blocked compute that now never runs
             # (round-6 advice).
             narrow.unpersist()
             _refuse(n)
         n_blocks = max(1, -(-n // block_size))
-    elif ceiling > 0:
+    else:
         # Caller supplied n_blocks (no sizing count happens): probe with
         # a LIMIT-bounded count so the guard itself never scans more
         # than ceiling+1 rows.
@@ -1009,7 +1004,7 @@ def knn_graph(
     remains as a keep-count floor).  Global per-source top-k is one
     bounded-candidate window, and the mutual flag one
     self-join of the k·n edge list.  Same fail-fast ceiling as the
-    exact near-dup tier (``spark.nlp2nosql.exact.maxRows``): at corpus
+    exact near-dup tier (``_EXACT_MAX_ROWS``): at corpus
     scale, run this per IVF cell (:class:`~nlp_to_nosql_spark.
     operators.ivf.IVFIndex` partitions, then exact graph within cells)
     instead of globally.
@@ -1018,31 +1013,27 @@ def knn_graph(
 
     if k < 1:
         raise ValueError("knn_graph: k must be >= 1")
-    spark = df.sparkSession
-    ceiling = int(
-        spark.conf.get(_EXACT_MAX_ROWS_CONF, str(_EXACT_MAX_ROWS_DEFAULT))
-    )
+    ceiling = _EXACT_MAX_ROWS
     quant = quantize_embeddings(df, id_col, vec_col, levels).select(
         id_col, "codes"
     )
     if n_blocks is None:
         quant = persisted(quant, "vectors")
         n = quant.count()
-        if ceiling > 0 and n > ceiling:
+        if n > ceiling:
             quant.unpersist()
             raise ValueError(
                 f"knn_graph: input has more than {ceiling} rows (saw {n}); "
                 "the exact all-pairs tier is O(n²). Build the graph per "
-                "IVF cell (operators/ivf.py) or raise "
-                f"{_EXACT_MAX_ROWS_CONF} deliberately."
+                "IVF cell (operators/ivf.py)."
             )
         n_blocks = max(1, -(-n // block_size))
-    elif ceiling > 0:
+    else:
         probe = quant.limit(ceiling + 1).count()
         if probe > ceiling:
             raise ValueError(
-                f"knn_graph: input exceeds {ceiling} rows; see "
-                f"{_EXACT_MAX_ROWS_CONF}"
+                f"knn_graph: input exceeds {ceiling} rows; build the graph "
+                "per IVF cell (operators/ivf.py)"
             )
 
     blocks = fan_out(quant).withColumn(
@@ -1280,7 +1271,7 @@ def knn_graph_celled(
     exactness).
 
     Scale: the fit is sample-sized; assignment one zero-shuffle scan;
-    the ceiling (``spark.nlp2nosql.exact.maxRows``) applies PER CELL —
+    the ceiling (``_EXACT_MAX_ROWS``) applies PER CELL —
     the operator measures cell sizes (≤ ``n_cells`` driver rows) and
     fail-fasts if the LARGEST cell exceeds it, pointing at a larger
     ``n_cells``.  ``n_cells="auto"`` (the production mode) CODIFIES
@@ -1303,10 +1294,6 @@ def knn_graph_celled(
 
     if k < 1:
         raise ValueError("knn_graph_celled: k must be >= 1")
-    spark = df.sparkSession
-    ceiling = int(
-        spark.conf.get(_EXACT_MAX_ROWS_CONF, str(_EXACT_MAX_ROWS_DEFAULT))
-    )
     if n_cells == "auto":
         # one count-only job (column-pruned scan; parquet answers it
         # from footer metadata) — the function is already eager (the
@@ -1344,12 +1331,12 @@ def knn_graph_celled(
         .collect()
     }
     biggest = max(sizes.values(), default=0)
-    if ceiling > 0 and biggest > ceiling:
+    if biggest > _EXACT_MAX_ROWS:
         quant.unpersist()
         raise ValueError(
             f"knn_graph_celled: largest cell has {biggest} rows "
-            f"(> {ceiling}); raise n_cells (or {_EXACT_MAX_ROWS_CONF}) "
-            "so per-cell pair work stays bounded"
+            f"(> {_EXACT_MAX_ROWS}); raise n_cells so per-cell pair work "
+            "stays bounded"
         )
     n_blocks = max(1, -(-biggest // block_size))
     blocks = fan_out(quant).withColumn(

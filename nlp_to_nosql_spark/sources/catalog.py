@@ -12,6 +12,12 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nlp_to_nosql_spark.sources.mongo import (
+    MONGO_DB_CONF,
+    MONGO_URI_CONF,
+    read_mongo,
+)
+
 #: Driver-provided tables (TESTDATA.md).
 TABLES = (
     "region",
@@ -93,7 +99,7 @@ def _normalize(df: DataFrame, name: str) -> DataFrame:
 
 def _mongo_uri(spark: SparkSession) -> str | None:
     try:
-        return spark.conf.get("spark.nlp2nosql.source.mongo.uri", None)
+        return spark.conf.get(MONGO_URI_CONF, None)
     except Exception:
         return None
 
@@ -107,9 +113,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_nanos_readable(spark)
     uri = _mongo_uri(spark)
     if uri:
-        from nlp_to_nosql_spark.sources.mongo import read_mongo
-
-        db = spark.conf.get("spark.nlp2nosql.source.mongo.database", "testdb")
+        db = spark.conf.get(MONGO_DB_CONF, "testdb")
         return _normalize(read_mongo(spark, uri, db, name), name)
     return _normalize(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")), name)
 

@@ -69,32 +69,6 @@ def to_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) 
     writer.parquet(path)
 
 
-def to_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sorted) parquet table.
-
-    Bucketing pre-shuffles the data once at write time: two tables
-    bucketed identically on their join key co-locate, so repeated joins
-    and aggregations on that key run with NO exchange — at 100 TB this
-    converts the dominant per-query shuffle into a one-time layout cost.
-    Requires the session catalog (``saveAsTable``); bucket count should
-    divide evenly into the cluster's parallelism.
-    """
-    writer = (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, *bucket_cols)
-    )
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
-
-
 def write_text_lines(df: DataFrame, path: str) -> None:
     """Write a one-string-column DataFrame as raw text lines (the
     log-file / JSONL-adjacent sink; one line per row, no escaping —

@@ -8,12 +8,12 @@ with two tiers:
 
 * :func:`read_mongo` — the real connector path.  Uses the MongoDB Spark
   Connector (``format("mongodb")``, public artifact
-  ``org.mongodb.spark:mongo-spark-connector``), feature-detected exactly
-  like Pillow in the multimodal operators: the jar isn't in this
-  container, so the call degrades to a clear actionable error instead of
-  a raw DATA_SOURCE_NOT_FOUND.  At cluster scale the connector partitions
-  the collection server-side and pushes filters/projections down — the
-  right 100 TB shape, nothing to add engine-side.
+  ``org.mongodb.spark:mongo-spark-connector``), feature-detected at load:
+  when the jar is not on the session's classpath the call degrades to a
+  clear actionable error instead of a raw DATA_SOURCE_NOT_FOUND.  At
+  cluster scale the connector partitions the collection server-side and
+  pushes filters/projections down — the right 100 TB shape, nothing to
+  add engine-side.
 * :func:`read_mongoexport` — the offline path.  Reads ``mongoexport``
   JSONL (MongoDB Extended JSON v2, a public documented format) with
   ``spark.read.json`` and then decodes the ``$``-typed wrappers
@@ -52,10 +52,9 @@ def read_mongo(
 ) -> DataFrame:
     """Read one collection through the MongoDB Spark Connector.
 
-    Feature-detected: when the connector jar is absent (as in this
-    container), Spark raises DATA_SOURCE_NOT_FOUND at load — re-raised
-    here as a RuntimeError with the exact remediation, mirroring how the
-    multimodal operators gate on Pillow.
+    Feature-detected: when the connector jar is absent from the
+    classpath, Spark raises DATA_SOURCE_NOT_FOUND at load — re-raised
+    here as a RuntimeError with the exact remediation.
     """
     try:
         return (

@@ -6,6 +6,7 @@ import re
 import pytest
 from pyspark.sql import types as T
 
+from nlp_to_nosql_spark.operators import classify
 from nlp_to_nosql_spark.operators.classify import hashed_linear_score
 
 N_BUCKETS = 64
@@ -139,13 +140,13 @@ def test_real_weights_bucket_out_of_range_raises(docs, spark):
 
 
 def test_broadcast_join_weights_tier(docs, spark):
-    """Past weightsCollectMax buckets the weights table broadcast-joins
+    """Past _WEIGHTS_COLLECT_MAX buckets the weights table broadcast-joins
     instead of collecting: values equal the baked kernel exactly, the
     join is a BroadcastHashJoin with no exchange on the corpus side
     (exactly one Exchange total — the per-document partial-agg groupBy),
     and the validation errors match the baked path's."""
     rows, df = docs
-    big = 1 << 17  # past the 2^16 default threshold
+    big = 1 << 17  # past the 2^16 threshold
     wrows = [(b, (b % 11 - 5) * 3) for b in range(0, big, 97)]
     wdf = spark.createDataFrame(wrows, "bucket long, weight long")
 
@@ -160,9 +161,10 @@ def test_broadcast_join_weights_tier(docs, spark):
     # BroadcastExchange, which is not a shuffle of the corpus side
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "BatchEvalPython" not in plan, plan
-    # baked twin: raise the threshold so the same call collects
-    spark.conf.set("spark.nlp2nosql.classify.weightsCollectMax", str(big))
-    try:
+    # baked twin: raise the threshold so the same call collects (only
+    # for this block — the validation checks below run the broadcast tier)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(classify, "_WEIGHTS_COLLECT_MAX", big)
         baked = hashed_linear_score(df, n_buckets=big, weights=wdf)
         key = lambda r: (  # noqa: E731
             r["doc_id"], r["n_tokens"], r["score_sum"], r["score"], r["keep"]
@@ -170,8 +172,6 @@ def test_broadcast_join_weights_tier(docs, spark):
         assert sorted(map(key, joined.collect())) == sorted(
             map(key, baked.collect())
         )
-    finally:
-        spark.conf.unset("spark.nlp2nosql.classify.weightsCollectMax")
 
     dup = spark.createDataFrame(
         [(5, 1), (5, 2)], "bucket long, weight long"

@@ -471,9 +471,8 @@ def test_bloom_probe_kernels_agree(spark, monkeypatch):
     assert all(f for i, f in enumerate(lit_flags) if i % 2 == 0)
 
 
-def test_bloom_auto_sizing_end_to_end_and_cap(spark):
+def test_bloom_auto_sizing_end_to_end_and_cap(spark, monkeypatch):
     from nlp_to_nosql_spark.operators.dedup import (
-        _BLOOM_MAX_BITS_CONF,
         auto_bloom_bits,
         incremental_new_docs,
     )
@@ -493,28 +492,11 @@ def test_bloom_auto_sizing_end_to_end_and_cap(spark):
         for r in incremental_new_docs(batch, corpus, m_bits=None).collect()
     )
     assert got == [12, 14]
-    # conf cap bounds the auto-sized broadcast
+    # the cap bounds the auto-sized broadcast (the 2^10 floor included)
     cfp = corpus.select(fingerprint(F.col("text")).alias("fp"))
-    prev = spark.conf.get(_BLOOM_MAX_BITS_CONF, None)
-    spark.conf.set(_BLOOM_MAX_BITS_CONF, "64")
-    try:
-        assert auto_bloom_bits(cfp) == 64
-        # a cap that is not 64-divisible rounds DOWN (word-aligned
-        # allocation: positions must never index past m_bits // 64 words)
-        spark.conf.set(_BLOOM_MAX_BITS_CONF, "100")
-        assert auto_bloom_bits(cfp) == 64
-        spark.conf.set(_BLOOM_MAX_BITS_CONF, "1000")
-        assert auto_bloom_bits(cfp) % 64 == 0
-        assert auto_bloom_bits(cfp) <= 960
-        # caps below one word are refused, not silently zeroed
-        spark.conf.set(_BLOOM_MAX_BITS_CONF, "63")
-        with pytest.raises(ValueError, match="at least 64"):
-            auto_bloom_bits(cfp)
-    finally:
-        if prev is None:
-            spark.conf.unset(_BLOOM_MAX_BITS_CONF)
-        else:
-            spark.conf.set(_BLOOM_MAX_BITS_CONF, prev)
+    assert auto_bloom_bits(cfp) == 1 << 10
+    monkeypatch.setattr(D, "_BLOOM_MAX_BITS", 64)
+    assert auto_bloom_bits(cfp) == 64
 
 
 def test_incremental_new_docs_validation_and_empty_corpus(spark):

@@ -566,26 +566,24 @@ def test_ndcg_matches_pure_python(spark):
     assert row["ndcg"] == 1.0
 
 
-def test_pair_set_quality_truth_universe_ceiling(spark):
+def test_pair_set_quality_truth_universe_ceiling(spark, monkeypatch):
     """The exact-pair eval is a tuning measurement: pointing it at a
-    truth universe above spark.nlp2nosql.exact.maxRows fail-fasts with
+    truth universe above the exact tier's row ceiling fail-fasts with
     a message naming the sampled tier, instead of silently launching
     the quadratic-ish truth join; under the ceiling it runs."""
+    from nlp_to_nosql_spark.operators import similarity
     from nlp_to_nosql_spark.operators.evals import pair_set_quality
 
     pred = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     truth = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     universe = spark.range(20).withColumnRenamed("id", "doc_id")
-    spark.conf.set("spark.nlp2nosql.exact.maxRows", "10")
-    try:
-        with pytest.raises(ValueError, match="pair_set_quality_sampled"):
-            pair_set_quality(pred, truth, truth_universe=universe)
-        row = pair_set_quality(
-            pred, truth, truth_universe=universe.limit(5)
-        ).collect()[0]
-        assert row["tp"] == 1
-    finally:
-        spark.conf.unset("spark.nlp2nosql.exact.maxRows")
+    monkeypatch.setattr(similarity, "_EXACT_MAX_ROWS", 10)
+    with pytest.raises(ValueError, match="pair_set_quality_sampled"):
+        pair_set_quality(pred, truth, truth_universe=universe)
+    row = pair_set_quality(
+        pred, truth, truth_universe=universe.limit(5)
+    ).collect()[0]
+    assert row["tp"] == 1
 
 
 def test_pair_set_quality_sampled_is_induced_subgraph(spark):

@@ -105,44 +105,6 @@ def test_prompt_contains_contract(df):
     assert '"things" table' in p and "$regex" in p and "ONLY the JSON" in p
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed on the join key must join with no Exchange —
-    the layout-for-shuffle trade bucketing exists for."""
-    import contextlib
-    import io
-
-    from pyspark.sql import functions as F
-    from nlp_to_nosql_spark.sources.formats import to_bucketed_table
-
-    left = spark.range(10_000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("lv")
-    )
-    right = spark.range(5_000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("rv")
-    )
-    to_bucketed_table(left, "bl_left", ["k"], n_buckets=4)
-    to_bucketed_table(right, "bl_right", ["k"], n_buckets=4)
-    prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bl_left").join(spark.table("bl_right"), "k")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
-        # both sides read the pre-bucketed layout: the whole join plan has
-        # no exchange at all (in-partition sorts are fine)
-        assert "Exchange" not in plan
-        agg = joined.groupBy().agg(F.sum(F.col("lv") + F.col("rv")).alias("s"))
-        expected = sum(i * 2 + i * 3 for i in range(5_000))
-        assert agg.first()["s"] == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
-        spark.sql("DROP TABLE IF EXISTS bl_left")
-        spark.sql("DROP TABLE IF EXISTS bl_right")
-
-
 def test_orc_roundtrip(spark, df, tmp_path):
     from nlp_to_nosql_spark.sources.formats import read_table, write_orc
 

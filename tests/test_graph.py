@@ -2,27 +2,27 @@
 
 Every correctness case runs through BOTH execution paths: the driver-side
 union-find fast path (edges under the threshold) and the distributed
-min-label-propagation loop (forced by setting the threshold to 0) — the
-two must be indistinguishable."""
+min-label-propagation loop (forced by patching ``_LOCAL_EDGE_MAX`` below
+any edge count) — the two must be indistinguishable."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from nlp_to_nosql_spark.operators import graph
 from nlp_to_nosql_spark.operators.graph import (
-    _LOCAL_EDGE_THRESHOLD_CONF,
     connected_components,
     dedup_clusters,
 )
 
 
 @pytest.fixture(params=["local", "distributed"])
-def cc_mode(spark, request):
+def cc_mode(request, monkeypatch):
     if request.param == "distributed":
-        spark.conf.set(_LOCAL_EDGE_THRESHOLD_CONF, "0")
-    yield request.param
-    spark.conf.unset(_LOCAL_EDGE_THRESHOLD_CONF)
+        # -1, not 0: the empty-edge case must take the iterative path too
+        monkeypatch.setattr(graph, "_LOCAL_EDGE_MAX", -1)
+    return request.param
 
 
 def _labels(df):
@@ -82,28 +82,22 @@ def test_dedup_clusters_representative_policy(spark, cc_mode):
     assert keep.count() == 4
 
 
-def test_threshold_boundary_switches_paths(spark):
+def test_threshold_boundary_switches_paths(spark, monkeypatch):
     """At threshold = exact edge count the local path still applies; one
     below it, the distributed loop runs.  Results identical."""
     edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "a long, b long")
     want = {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
-    try:
-        spark.conf.set(_LOCAL_EDGE_THRESHOLD_CONF, "3")
-        assert _labels(connected_components(edges, "a", "b")) == want
-        spark.conf.set(_LOCAL_EDGE_THRESHOLD_CONF, "2")
-        assert _labels(connected_components(edges, "a", "b")) == want
-    finally:
-        spark.conf.unset(_LOCAL_EDGE_THRESHOLD_CONF)
+    monkeypatch.setattr(graph, "_LOCAL_EDGE_MAX", 3)
+    assert _labels(connected_components(edges, "a", "b")) == want
+    monkeypatch.setattr(graph, "_LOCAL_EDGE_MAX", 2)
+    assert _labels(connected_components(edges, "a", "b")) == want
 
 
-def test_no_convergence_raises(spark):
+def test_no_convergence_raises(spark, monkeypatch):
     edges = spark.createDataFrame([(i, i + 1) for i in range(40)], "a long, b long")
-    try:
-        spark.conf.set(_LOCAL_EDGE_THRESHOLD_CONF, "0")  # force iterative path
-        with pytest.raises(RuntimeError):
-            connected_components(edges, "a", "b", max_iter=1)
-    finally:
-        spark.conf.unset(_LOCAL_EDGE_THRESHOLD_CONF)
+    monkeypatch.setattr(graph, "_LOCAL_EDGE_MAX", 0)  # force iterative path
+    with pytest.raises(RuntimeError):
+        connected_components(edges, "a", "b", max_iter=1)
 
 
 def test_edges_conduct_only_through_known_nodes(spark, cc_mode):
@@ -180,17 +174,12 @@ def _jobs_used(spark, group: str, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_cc_large_graph_skips_probe_jobs(spark):
+def test_cc_large_graph_skips_probe_jobs(spark, monkeypatch):
     """A graph over the fast-path threshold must go straight to the
     iterative path with ZERO probe/collect jobs: its job count equals
-    the threshold=0 (fast path disabled) run exactly.  Pins the round-5
-    review fix — the old always-on LIMIT-collect probe cost every
-    large-graph caller one wasted job."""
-    from nlp_to_nosql_spark.operators.graph import (
-        _LOCAL_EDGE_THRESHOLD_CONF,
-        connected_components,
-    )
-
+    the threshold=0 run (every edge over it, so the fast path never
+    engages) exactly.  Pins the round-5 review fix — the old always-on
+    LIMIT-collect probe cost every large-graph caller one wasted job."""
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "id_a long, id_b long"
     )
@@ -198,16 +187,13 @@ def test_cc_large_graph_skips_probe_jobs(spark):
     def run():
         connected_components(edges, "id_a", "id_b").collect()
 
-    try:
-        spark.conf.set(_LOCAL_EDGE_THRESHOLD_CONF, "10")  # 40 edges > 10
-        over = _jobs_used(spark, "cc_over_threshold", run)
-        spark.conf.set(_LOCAL_EDGE_THRESHOLD_CONF, "0")
-        disabled = _jobs_used(spark, "cc_disabled", run)
-        assert over == disabled
-        # And the small-graph fast path still engages (one materializing
-        # count + one bounded collect — far fewer jobs than iterating).
-        spark.conf.set(_LOCAL_EDGE_THRESHOLD_CONF, "100000")
-        fast = _jobs_used(spark, "cc_fast_path", run)
-        assert fast < disabled
-    finally:
-        spark.conf.unset(_LOCAL_EDGE_THRESHOLD_CONF)
+    monkeypatch.setattr(graph, "_LOCAL_EDGE_MAX", 10)  # 40 edges > 10
+    over = _jobs_used(spark, "cc_over_threshold", run)
+    monkeypatch.setattr(graph, "_LOCAL_EDGE_MAX", 0)
+    disabled = _jobs_used(spark, "cc_disabled", run)
+    assert over == disabled
+    # And the small-graph fast path still engages (one materializing
+    # count + one bounded collect — far fewer jobs than iterating).
+    monkeypatch.setattr(graph, "_LOCAL_EDGE_MAX", 100_000)
+    fast = _jobs_used(spark, "cc_fast_path", run)
+    assert fast < disabled

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import types as T
 
+from nlp_to_nosql_spark.operators import ivf
 from nlp_to_nosql_spark.operators.ivf import IVFIndex
 from nlp_to_nosql_spark.operators.similarity import topk_bruteforce
 
@@ -130,39 +131,36 @@ def test_sampled_fit_assigns_full_corpus_and_full_probe_exact(spark, clustered):
     assigned.unpersist()
 
 
-def test_default_fit_samples_above_train_cap(spark, clustered):
+def test_default_fit_samples_above_train_cap(spark, clustered, monkeypatch):
     """With no explicit train_on, fit must train on a hash sample once the
-    corpus exceeds spark.nlp2nosql.ivf.trainCap — and still assign every
-    vector, with full probe exact (the 100 TB default shape)."""
+    corpus exceeds _TRAIN_CAP — and still assign every vector, with full
+    probe exact (the 100 TB default shape)."""
     df, vecs = clustered
-    spark.conf.set("spark.nlp2nosql.ivf.trainCap", "100")  # corpus is 300
-    try:
-        idx = IVFIndex(n_lists=4, max_iter=3)
-        assigned = idx.fit(df).cache()
-        assert assigned.count() == df.count()
-        q = [float(x) for x in vecs[0]]
-        got = [(r["vec_id"], r["cos_sim"])
-               for r in idx.topk(assigned, q, k=10, nprobe=4).collect()]
-        want = [(r["vec_id"], r["cos_sim"])
-                for r in topk_bruteforce(df, q, k=10).collect()]
-        assert got == want
-        assigned.unpersist()
-    finally:
-        spark.conf.unset("spark.nlp2nosql.ivf.trainCap")
+    monkeypatch.setattr(ivf, "_TRAIN_CAP", 100)  # corpus is 300
+    idx = IVFIndex(n_lists=4, max_iter=3)
+    assigned = idx.fit(df).cache()
+    assert assigned.count() == df.count()
+    q = [float(x) for x in vecs[0]]
+    got = [(r["vec_id"], r["cos_sim"])
+           for r in idx.topk(assigned, q, k=10, nprobe=4).collect()]
+    want = [(r["vec_id"], r["cos_sim"])
+            for r in topk_bruteforce(df, q, k=10).collect()]
+    assert got == want
+    assigned.unpersist()
 
 
-def test_default_fit_tiny_cap_falls_back_to_full_corpus(spark, clustered):
+def test_default_fit_tiny_cap_falls_back_to_full_corpus(
+    spark, clustered, monkeypatch
+):
     """A cap smaller than n_lists can yield a sample with too few seed
-    vectors; fit must fall back to full-corpus training, not crash."""
+    vectors (an unlucky hash draw does the same at any cap); fit must
+    fall back to full-corpus training, not crash."""
     df, _ = clustered
-    spark.conf.set("spark.nlp2nosql.ivf.trainCap", "1")
-    try:
-        idx = IVFIndex(n_lists=4, max_iter=2)
-        assigned = idx.fit(df)
-        assert idx.centroids.shape == (4, DIM)
-        assert assigned.count() == df.count()
-    finally:
-        spark.conf.unset("spark.nlp2nosql.ivf.trainCap")
+    monkeypatch.setattr(ivf, "_TRAIN_CAP", 1)
+    idx = IVFIndex(n_lists=4, max_iter=2)
+    assigned = idx.fit(df)
+    assert idx.centroids.shape == (4, DIM)
+    assert assigned.count() == df.count()
 
 
 def test_unfitted_index_raises_clearly():

@@ -36,14 +36,6 @@ def test_image_features_deterministic(media):
     assert feats[2]["mean_byte"] == 0.0  # empty payload safe
 
 
-def test_real_codecs_stub_raises(media):
-    with pytest.raises(Exception) as exc_info:
-        image_features(media, use_real_codecs=True).collect()
-    assert "NotImplementedError" in str(exc_info.value) or "real image decode" in str(
-        exc_info.value
-    )
-
-
 def test_frame_sample_plan(media):
     frames = frame_sample_plan(media, fps=1.0).collect()
     by_id = {}
@@ -90,31 +82,6 @@ def test_audio_features_real_wav_decode(spark):
     assert abs(feats[7]["rms"] - want_rms) < 1e-9
 
     assert feats[9]["n_channels"] is None and feats[9]["rms"] is None
-
-
-def test_image_decode_uses_pillow_when_available(spark):
-    """With Pillow importable the real-codec path must decode instead of
-    raising; without it the NotImplementedError plug point stays."""
-    from nlp_to_nosql_spark.operators.multimodal import have_pillow
-
-    if not have_pillow():
-        pytest.skip(
-            "Pillow is absent and package installs are prohibited in this "
-            "container — the real-codec branch cannot run here; the stub "
-            "path and the gate itself are covered above"
-        )
-    import io
-
-    import PIL.Image
-
-    img = PIL.Image.new("L", (4, 2), color=128)
-    buf = io.BytesIO()
-    img.save(buf, format="PNG")
-    real = spark.createDataFrame(
-        [(1, "image", buf.getvalue(), (4, 2, None, None, "png"))], MEDIA_SCHEMA
-    )
-    feats = image_features(real, use_real_codecs=True).collect()
-    assert feats[0]["mean_byte"] == 128.0
 
 
 def test_image_features_survive_null_payload_and_meta(spark):
@@ -188,23 +155,6 @@ def test_resize_images_null_geometry_yields_null_row(spark):
     for mid in (1, 2, 3):
         assert out[mid]["dst_w"] is None and out[mid]["resized_sha256"] is None
     assert out[4]["dst_w"] == 4 and out[4]["resized_sha256"] is not None
-
-
-def test_resize_real_codecs_is_gated(spark):
-    from nlp_to_nosql_spark.operators.multimodal import have_pillow, resize_images
-
-    rows = [(1, "image", b"notanimage", (9, 9, None, None, "raw"))]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    df = resize_images(media, max_side=4, use_real_codecs=True)
-    if have_pillow():
-        # Pillow present: undecodable bytes follow the null-row contract
-        out = df.collect()
-        assert len(out) == 1 and out[0]["resized_sha256"] is None
-    else:
-        from py4j.protocol import Py4JJavaError
-
-        with pytest.raises((Py4JJavaError, Exception)):
-            df.collect()
 
 
 # ---------------------------------------------------------------------------

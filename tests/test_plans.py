@@ -227,3 +227,23 @@ def test_persisted_storage_levels(spark):
             df.unpersist()
     with pytest.raises(KeyError):
         persisted(spark.range(3), "no_such_kind")
+
+
+def test_only_mongo_deployment_confs_remain():
+    """Operator tuning lives in module constants; the package reads no
+    ``spark.nlp2nosql.*`` conf except the two Mongo deployment settings
+    (where the data lives), so no runtime switch can re-plan a query."""
+    import re
+    from pathlib import Path
+
+    import nlp_to_nosql_spark
+
+    root = Path(nlp_to_nosql_spark.__file__).parent
+    names = {
+        m
+        for path in root.rglob("*.py")
+        for m in re.findall(
+            r"spark\.nlp2nosql\.([A-Za-z.]+)", path.read_text(encoding="utf-8")
+        )
+    }
+    assert names == {"source.mongo.uri", "source.mongo.database"}

@@ -850,15 +850,12 @@ def test_bpe_train_local_equals_distributed(docs, n):
     assert bpe_train_local(docs, n_merges=n) == bpe_train(docs, n_merges=n)
 
 
-def test_bpe_train_local_vocab_cap(docs):
-    from nlp_to_nosql_spark.operators.selection import bpe_train_local
+def test_bpe_train_local_vocab_cap(docs, monkeypatch):
+    from nlp_to_nosql_spark.operators import selection
 
-    docs.sparkSession.conf.set("spark.nlp2nosql.bpe.localVocabCap", "3")
-    try:
-        with pytest.raises(ValueError, match="localVocabCap"):
-            bpe_train_local(docs, n_merges=1)
-    finally:
-        docs.sparkSession.conf.unset("spark.nlp2nosql.bpe.localVocabCap")
+    monkeypatch.setattr(selection, "_LOCAL_VOCAB_CAP", 3)
+    with pytest.raises(ValueError, match="vocabulary exceeds 3"):
+        selection.bpe_train_local(docs, n_merges=1)
 
 
 # ---------------------------------------------------------------------------

@@ -402,39 +402,33 @@ def test_dimension_stats_exact(spark):
     assert all(r["n_vecs"] == 3 for r in got.values())
 
 
-def test_neardup_exact_scale_guard(spark, vec_df):
-    """The exact O(n²) tier fails fast above the conf'd row ceiling
-    (pointing at the LSH tier) and is unchanged below it — on both the
-    self-sizing path (n_blocks=None) and the explicit-n_blocks path,
-    where the probe is LIMIT-bounded."""
-    from nlp_to_nosql_spark.operators.similarity import (
-        _EXACT_MAX_ROWS_CONF,
-        embedding_neardup_exact,
-    )
+def test_neardup_exact_scale_guard(spark, vec_df, monkeypatch):
+    """The exact O(n²) tier fails fast above the row ceiling (pointing
+    at the LSH tier) and is unchanged at it — on both the self-sizing
+    path (n_blocks=None) and the explicit-n_blocks path, where the probe
+    is LIMIT-bounded."""
+    from nlp_to_nosql_spark.operators import similarity as sim
 
+    def pairs():
+        return {
+            (r["id_a"], r["id_b"])
+            for r in sim.embedding_neardup_exact(
+                vec_df, threshold=0.98
+            ).collect()
+        }
+
+    default = pairs()
     n = vec_df.count()
-    try:
-        spark.conf.set(_EXACT_MAX_ROWS_CONF, str(n - 1))
-        with pytest.raises(ValueError, match="neardup_pairs"):
-            embedding_neardup_exact(vec_df, threshold=0.98)
-        with pytest.raises(ValueError, match="neardup_pairs"):
-            embedding_neardup_exact(vec_df, threshold=0.98, n_blocks=2)
+    monkeypatch.setattr(sim, "_EXACT_MAX_ROWS", n - 1)
+    with pytest.raises(ValueError, match="neardup_pairs"):
+        sim.embedding_neardup_exact(vec_df, threshold=0.98)
+    with pytest.raises(ValueError, match="neardup_pairs"):
+        sim.embedding_neardup_exact(vec_df, threshold=0.98, n_blocks=2)
 
-        # At exactly the ceiling (and with the guard off) results are
-        # the guard-free ones.
-        spark.conf.set(_EXACT_MAX_ROWS_CONF, str(n))
-        at_limit = {
-            (r["id_a"], r["id_b"])
-            for r in embedding_neardup_exact(vec_df, threshold=0.98).collect()
-        }
-        spark.conf.set(_EXACT_MAX_ROWS_CONF, "0")
-        unguarded = {
-            (r["id_a"], r["id_b"])
-            for r in embedding_neardup_exact(vec_df, threshold=0.98).collect()
-        }
-        assert at_limit == unguarded and {(0, 1), (0, 2), (1, 2)} <= at_limit
-    finally:
-        spark.conf.unset(_EXACT_MAX_ROWS_CONF)
+    # At exactly the ceiling results are the ones far below it.
+    monkeypatch.setattr(sim, "_EXACT_MAX_ROWS", n)
+    at_limit = pairs()
+    assert at_limit == default and {(0, 1), (0, 2), (1, 2)} <= at_limit
 
 
 def test_int_srp_signatures_match_duckdb_bitexact(spark):
@@ -637,19 +631,16 @@ def test_knn_graph_mutual_flag_is_symmetric_membership(spark):
         assert m == ((d, s) in edges)
 
 
-def test_knn_graph_scale_guard_refuses_oversize(spark):
-    from nlp_to_nosql_spark.operators.similarity import knn_graph
+def test_knn_graph_scale_guard_refuses_oversize(spark, monkeypatch):
+    from nlp_to_nosql_spark.operators import similarity as sim
 
     df = spark.createDataFrame(
         [(i, [1.0, 2.0]) for i in range(20)],
         "vec_id long, embedding array<double>",
     )
-    spark.conf.set("spark.nlp2nosql.exact.maxRows", "10")
-    try:
-        with pytest.raises(ValueError, match="exact.maxRows"):
-            knn_graph(df, k=2)
-    finally:
-        spark.conf.unset("spark.nlp2nosql.exact.maxRows")
+    monkeypatch.setattr(sim, "_EXACT_MAX_ROWS", 10)
+    with pytest.raises(ValueError, match="more than 10 rows"):
+        sim.knn_graph(df, k=2)
 
 
 # ---------------------------------------------------------------------------
@@ -727,30 +718,24 @@ def test_knn_graph_celled_edges_stay_within_cells(spark):
         assert sorted(ranks) == list(range(1, len(ranks) + 1))
 
 
-def test_knn_graph_celled_ceiling_applies_per_cell(spark):
+def test_knn_graph_celled_ceiling_applies_per_cell(spark, monkeypatch):
     """The exact-tier ceiling gates the LARGEST CELL, not the corpus:
     20 rows over 3 cells pass a ceiling of 12 that the global graph
     would refuse."""
-    from nlp_to_nosql_spark.operators.similarity import (
-        knn_graph,
-        knn_graph_celled,
-    )
+    from nlp_to_nosql_spark.operators import similarity as sim
 
     df = _celled_fixture(spark, n=20)
-    spark.conf.set("spark.nlp2nosql.exact.maxRows", "12")
-    try:
-        with pytest.raises(ValueError, match="exact.maxRows"):
-            knn_graph(df, k=2)
-        rows = knn_graph_celled(
-            df, n_cells=3, k=2, sample_mod=1, sample_keep=1
+    monkeypatch.setattr(sim, "_EXACT_MAX_ROWS", 12)
+    with pytest.raises(ValueError, match="more than 12 rows"):
+        sim.knn_graph(df, k=2)
+    rows = sim.knn_graph_celled(
+        df, n_cells=3, k=2, sample_mod=1, sample_keep=1
+    ).collect()
+    assert len(rows) > 0
+    with pytest.raises(ValueError, match="largest cell"):
+        sim.knn_graph_celled(
+            df, n_cells=1, k=2, sample_mod=1, sample_keep=1
         ).collect()
-        assert len(rows) > 0
-        with pytest.raises(ValueError, match="largest cell"):
-            knn_graph_celled(
-                df, n_cells=1, k=2, sample_mod=1, sample_keep=1
-            ).collect()
-    finally:
-        spark.conf.unset("spark.nlp2nosql.exact.maxRows")
 
 
 def test_resolve_n_cells_contract():

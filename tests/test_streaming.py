@@ -177,47 +177,6 @@ def test_watermark_drops_late_data_across_batches(spark, tmp_path):
     assert all(h != 22 for h, _ in out)
 
 
-def test_foreachbatch_parquet_sink_is_exactly_once(spark, tmp_path):
-    """The foreachBatch parquet sink must (a) land every input row across
-    micro-batches, and (b) stay duplicate-free when the query is re-run
-    over the same source with the same checkpoint (batch replay hits the
-    idempotent per-batch overwrite, committed batches are skipped)."""
-    import os
-
-    from nlp_to_nosql_spark.streaming.sinks import stream_append_parquet
-
-    schema = "event_id long, value double"
-    src_dir = str(tmp_path / "src")
-    os.makedirs(src_dir)
-    for i in range(3):
-        spark.createDataFrame(
-            [(i * 10 + j, float(j)) for j in range(5)], schema
-        ).coalesce(1).write.parquet(f"{src_dir}/tmp{i}")
-        for f in os.listdir(f"{src_dir}/tmp{i}"):
-            if f.endswith(".parquet"):
-                os.rename(f"{src_dir}/tmp{i}/{f}", f"{src_dir}/f{i}.parquet")
-
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        q = stream_append_parquet(stream, out, ckpt)
-        q.awaitTermination()
-
-    run()
-    first = sorted(r["event_id"] for r in spark.read.parquet(out).collect())
-    assert first == sorted(i * 10 + j for i in range(3) for j in range(5))
-
-    run()  # same checkpoint: nothing new to process, no duplicates
-    second = sorted(r["event_id"] for r in spark.read.parquet(out).collect())
-    assert second == first
-
-
 def test_running_totals_null_value_is_skipped(spark):
     """A NULL value must contribute 0 cents (SQL SUM semantics) but still
     count as an event — not ValueError the micro-batch."""
