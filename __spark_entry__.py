@@ -172,7 +172,7 @@ def _ir_query(table: str, spec: QuerySpec):
 
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         tables = register_tables(spark, sf_dir)
-        return apply_spec(tables[table], spec, with_limit=False)
+        return apply_spec(tables[table], spec)
 
     return run
 
@@ -184,7 +184,7 @@ def _nl_query(nl_text: str):
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         register_tables(spark, sf_dir)
         emp = spark.sql(EMPLOYEES_VIEW_SQL)
-        return apply_spec(emp, nl_to_queryspec(nl_text), with_limit=False)
+        return apply_spec(emp, nl_to_queryspec(nl_text))
 
     return run
 
@@ -270,7 +270,7 @@ def _q_event_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_count_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = register_tables(spark, sf_dir)["lineitem"]
     spec = QuerySpec(filter={"l_shipdate": {"$gt": "1998-01-01"}})
-    return apply_spec(li, spec, with_limit=False).agg(
+    return apply_spec(li, spec).agg(
         F.count(F.lit(1)).alias("cnt")
     )
 

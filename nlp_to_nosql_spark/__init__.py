@@ -6,7 +6,7 @@ reference NL→NoSQL system (see SURVEY.md), re-expressed Spark-first:
 * NL string → :class:`~nlp_to_nosql_spark.ir.QuerySpec` (deterministic rule
   compiler, reference parity: ``No_Sql.py:316-377``; optional LLM front end
   with the same IR contract: ``No_Sql.py:104-136,269-314``).
-* QuerySpec → DataFrame logical plan (filter/project/limit) — Catalyst and
+* QuerySpec → DataFrame logical plan (filter/project) — Catalyst and
   Tungsten do all physical work (pushdown, pruning, codegen).
 * Executor reproducing ``run_mongo_query`` semantics (``No_Sql.py:379-439``):
   bounded collect, filtered count with graceful degradation, per-row JSON
@@ -22,14 +22,13 @@ reference NL→NoSQL system (see SURVEY.md), re-expressed Spark-first:
 
 from nlp_to_nosql_spark.ir import QuerySpec
 from nlp_to_nosql_spark.compiler.rules import nl_to_queryspec
-from nlp_to_nosql_spark.plans.compile import compile_filter, apply_spec
+from nlp_to_nosql_spark.plans.compile import apply_spec
 from nlp_to_nosql_spark.executor import execute
 from nlp_to_nosql_spark.api import Engine
 
 __all__ = [
     "QuerySpec",
     "nl_to_queryspec",
-    "compile_filter",
     "apply_spec",
     "execute",
     "Engine",

@@ -6,8 +6,9 @@ Reference (SURVEY §3, entry point 3):
 * ``test_connections()``                       (``No_Sql.py:522-524``)
 
 Here the namespace is a registered-table catalog and execution is
-Catalyst; the response envelope mirrors ``QueryResponse``
-(``app_server.py:84-93,258-268``).
+Catalyst; :meth:`Engine.query`'s result is the reference's response
+envelope (the model at ``app_server.py:84-93``, filled at ``:258-268``),
+which the HTTP layer serves as is.
 """
 
 from __future__ import annotations
@@ -75,7 +76,7 @@ class Engine:
 
         return {
             "ok": True,
-            "query": spec.to_ir(),
+            "mongo_query": spec.to_ir(),
             "total_matching": total,
             "result_count": len(rows),
             "results": rows,

@@ -115,7 +115,7 @@ def render_result(resp: dict[str, Any]) -> str:
                 f"database {resp['db_execution_time']:.3f}s"
             )
         lines.append("Generated query:")
-        lines.append(json.dumps(resp.get("query", {}), indent=2))
+        lines.append(json.dumps(resp.get("mongo_query", {}), indent=2))
         lines.append("Results:")
         lines.append(_table_text(resp.get("results", [])))
     else:

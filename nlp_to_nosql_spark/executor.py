@@ -55,17 +55,17 @@ def execute(
     spec: QuerySpec,
     df: DataFrame,
     query_timeout_s: float = QUERY_TIMEOUT_S,
-    count_timeout_s: float = COUNT_TIMEOUT_S,
 ) -> tuple[int, list[dict[str, Any]]]:
     """Run a QuerySpec against ``df``; return ``(total_matching, rows)``.
 
     ``total_matching`` is the pre-limit filtered count; ``rows`` are at most
-    ``spec.limit`` sanitized dicts.
+    ``spec.limit`` sanitized dicts.  The count runs under
+    :data:`COUNT_TIMEOUT_S`, read at call time.
     """
     # One source of truth for the filter→project plan; the count below
     # runs on the same relation (projection never changes row count, and
     # counting the projected form lets Catalyst prune harder).
-    projected = apply_spec(df, spec, with_limit=False)
+    projected = apply_spec(df, spec)
 
     start = time.time()
     collected = run_with_timeout(
@@ -88,7 +88,7 @@ def execute(
         total = run_with_timeout(
             spark,
             projected.count,
-            timeout_s=count_timeout_s,
+            timeout_s=COUNT_TIMEOUT_S,
             group_desc="execute:count",
         )
         logger.info("count took %.2fs", time.time() - count_start)

@@ -1,9 +1,9 @@
 """Timezone-safe epoch arithmetic for timestamp columns of EITHER type.
 
-PySpark 4.1.2 reads the testdata's parquet TIMESTAMP(NANOS) column
-natively as ``TIMESTAMP_NTZ`` (and silently ignores
-``spark.sql.legacy.parquet.nanosAsLong``); older runtimes surface it as a
-long of nanos that the catalog converts.  ``unix_micros`` requires
+Spark reads the testdata's parquet TIMESTAMP(MICROS, not UTC-adjusted)
+``events.ts`` natively as ``TIMESTAMP_NTZ``; a TIMESTAMP(NANOS) column
+reads as a long of nanos under ``spark.sql.legacy.parquet.nanosAsLong``,
+which the catalog converts.  ``unix_micros`` requires
 ``TIMESTAMP`` (with-local-timezone) and raises DATATYPE_MISMATCH on NTZ —
 this took down ``sessionize``/``range_join`` in round 2.
 

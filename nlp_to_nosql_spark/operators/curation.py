@@ -1199,13 +1199,17 @@ def _write_artifact(path: str, parts: dict) -> None:
     """Write each ``name → frame`` part to ``path/name`` as parquet.  The
     writes are independent jobs, so they run CONCURRENTLY, one thread
     per part.  Each pool thread inherits the caller's local properties
-    (``inheritable_thread_target``), so the write jobs join the
-    caller's job group and a ``run_with_timeout`` cancel reaches them."""
+    and session tags (``inheritable_thread_target`` given the parts'
+    shared session), so the write jobs join the caller's job group and
+    tags, and a ``run_with_timeout`` cancel or an ``interruptTag``
+    reaches them."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
-    @inheritable_thread_target
+    session = next(iter(parts.values())).sparkSession
+
+    @inheritable_thread_target(session)
     def write(part: tuple) -> None:
         part[1].write.mode("overwrite").parquet(f"{path}/{part[0]}")
 

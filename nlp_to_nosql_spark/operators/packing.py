@@ -53,10 +53,7 @@ def pack_by_token_budget(
         raise ValueError("budget must be positive")
     spark = df.sparkSession
     if partitions is None:
-        try:
-            partitions = spark.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect
-            partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        partitions = spark.sparkContext.defaultParallelism
 
     # Reject null/negative token counts up front: a NULL would poison the
     # window sum into NULL cum/batch ids, and a negative count breaks the
@@ -194,12 +191,7 @@ def best_fit_pack(
         raise ValueError("budget must be positive")
     spark = df.sparkSession
     if partitions is None:
-        try:
-            partitions = spark.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect
-            partitions = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
+        partitions = spark.sparkContext.defaultParallelism
 
     n = F.col(tokens_col).cast("long")
     checked = F.when(n.isNotNull() & (n >= 0), n).otherwise(

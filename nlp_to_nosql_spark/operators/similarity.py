@@ -18,7 +18,7 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nlp_to_nosql_spark.functions.vectors import cosine, lit_vector

@@ -1,6 +1,6 @@
-"""QuerySpec → DataFrame plan (filter + project + limit).
+"""QuerySpec → DataFrame plan (filter + project).
 
-The compiled plan is a pure scan-filter-project(-limit) pipeline: single
+The compiled plan is a pure scan-filter-project pipeline: single
 stage, shuffle-free, fully whole-stage-codegen'd, with predicates and column
 pruning pushed into the parquet scan by Catalyst (SURVEY §4).
 """
@@ -8,19 +8,14 @@ pruning pushed into the parquet scan by Catalyst (SURVEY §4).
 from __future__ import annotations
 
 import logging
-from typing import Any, Mapping, Sequence
+from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 from nlp_to_nosql_spark.ir import QuerySpec
 from nlp_to_nosql_spark.plans.predicates import compile_predicate
 
 logger = logging.getLogger(__name__)
-
-
-def compile_filter(df: DataFrame, filter_tree: Mapping[str, Any]) -> Column | None:
-    """Filter tree → predicate Column validated against ``df``'s schema."""
-    return compile_predicate(filter_tree, schema_fields=df.columns)
 
 
 def compile_projection(df: DataFrame, projection: Sequence[str]) -> list[str]:
@@ -40,17 +35,16 @@ def compile_projection(df: DataFrame, projection: Sequence[str]) -> list[str]:
     return cols
 
 
-def apply_spec(df: DataFrame, spec: QuerySpec, with_limit: bool = True) -> DataFrame:
-    """Apply a QuerySpec to a DataFrame: filter → project → limit.
+def apply_spec(df: DataFrame, spec: QuerySpec) -> DataFrame:
+    """Apply a QuerySpec to a DataFrame: filter → project.
 
-    ``with_limit=False`` yields the unbounded filtered/projected relation
-    (used by the executor's count path, A1 — ``No_Sql.py:416``).
+    The result is the unbounded filtered/projected relation; the executor
+    applies ``spec.limit`` to its collect and counts this relation
+    unlimited (A1 — ``No_Sql.py:416``).
     """
-    pred = compile_filter(df, spec.filter)
+    pred = compile_predicate(spec.filter, schema_fields=df.columns)
     out = df.filter(pred) if pred is not None else df
     cols = compile_projection(df, spec.projection)
     if cols:
         out = out.select(*cols)
-    if with_limit:
-        out = out.limit(spec.limit)
     return out

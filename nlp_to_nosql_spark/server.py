@@ -27,7 +27,7 @@ The container has no FastAPI/uvicorn, so the transport is Flask (WSGI) —
 also an offline-testable real HTTP surface — with pydantic v2 models doing
 exactly the validation work FastAPI would.  The app is an app-factory over
 :class:`~nlp_to_nosql_spark.api.Engine`, so any SparkSession-backed engine
-(local, cluster, connect) serves unchanged.
+serves unchanged, and ``/query`` returns ``Engine.query``'s envelope as is.
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ from typing import Any, Optional
 from pydantic import BaseModel, Field, ValidationError
 
 from nlp_to_nosql_spark.api import Engine
+from nlp_to_nosql_spark.ir import DEFAULT_LIMIT, MAX_LIMIT, MIN_LIMIT
 from nlp_to_nosql_spark.timeout import QueryTimeoutError
 
 #: Per-stage progress logging, toggled by ``show_progress`` — the
@@ -61,26 +62,12 @@ class QueryRequest(BaseModel):
     input: str = Field(..., min_length=1)
     db: str = Field(default="testdb")
     collection: str = Field(default="testcoll")
-    limit: Optional[int] = Field(default=50, ge=1, le=1000)
+    limit: Optional[int] = Field(default=DEFAULT_LIMIT, ge=MIN_LIMIT, le=MAX_LIMIT)
     timeout: Optional[int] = Field(default=DEFAULT_QUERY_TIMEOUT, ge=5, le=MAX_TIMEOUT)
     # Toggles server-side per-stage progress logging, the reference's
     # semantics (app_server.py:81-82, 209-249): compile and execution
     # stage timings go to the service logger when true.
     show_progress: Optional[bool] = Field(default=False)
-
-
-class QueryResponse(BaseModel):
-    """Response envelope (``app_server.py:84-93``)."""
-
-    ok: bool
-    mongo_query: dict
-    total_matching: int
-    results: list
-    result_count: int
-    execution_time: float
-    query_generation_time: Optional[float] = None
-    db_execution_time: Optional[float] = None
-    timeout_used: Optional[int] = None
 
 
 def _error_body(status: int, error: str, error_type: str, **extra: Any) -> dict:
@@ -219,7 +206,7 @@ def create_app(engine: Engine, table_resolver=None):
         # Optional fields validate explicit JSON nulls as None (ge/le skip
         # None) — coalesce to the documented defaults rather than letting
         # None reach the engine as a limit/timeout.
-        limit = req.limit if req.limit is not None else 50
+        limit = req.limit if req.limit is not None else DEFAULT_LIMIT
         timeout = req.timeout if req.timeout is not None else DEFAULT_QUERY_TIMEOUT
         if req.show_progress:
             logger.info(
@@ -230,7 +217,7 @@ def create_app(engine: Engine, table_resolver=None):
                 req.input,
                 resolve(req.db, req.collection),
                 limit=limit,
-                timeout_s=float(timeout),
+                timeout_s=timeout,
             )
             if req.show_progress:
                 logger.info(
@@ -241,19 +228,7 @@ def create_app(engine: Engine, table_resolver=None):
                     "Database query completed in %.3fs",
                     resp["db_execution_time"],
                 )
-            return jsonify(
-                QueryResponse(
-                    ok=True,
-                    mongo_query=resp["query"],
-                    total_matching=resp["total_matching"],
-                    results=resp["results"],
-                    result_count=resp["result_count"],
-                    execution_time=resp["execution_time"],
-                    query_generation_time=resp["query_generation_time"],
-                    db_execution_time=resp["db_execution_time"],
-                    timeout_used=timeout,
-                ).model_dump()
-            )
+            return jsonify(resp)
         except (QueryTimeoutError, TimeoutError) as e:
             return (
                 jsonify(

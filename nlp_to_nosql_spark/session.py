@@ -33,9 +33,9 @@ DEFAULT_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
     "spark.sql.parquet.filterPushdown": "true",
-    # The events table stores TIMESTAMP(NANOS) which Spark cannot read
-    # natively; read as long and convert in the catalog (lossless — the
-    # data is microsecond-precision).
+    # Parquet TIMESTAMP(NANOS) columns raise PARQUET_TYPE_ILLEGAL without
+    # this; with it they read as a long of nanos that the catalog converts.
+    # (The testdata's events.ts is micros and reads natively as NTZ.)
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),

@@ -38,10 +38,12 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def _ensure_nanos_readable(spark: SparkSession) -> None:
     """Make INT64 TIMESTAMP(NANOS) parquet columns readable on ANY session.
 
-    ``events.parquet`` stores ``ts`` as parquet TIMESTAMP(NANOS), which Spark
-    rejects by default (PARQUET_TYPE_ILLEGAL).  The legacy flag surfaces the
-    column as a long of nanoseconds instead; ``_normalize`` then converts it
-    to a proper timestamp.  The flag is runtime-settable, so setting it here
+    The testdata's ``events.parquet`` stores ``ts`` as TIMESTAMP(MICROS,
+    ``isAdjustedToUTC=false``), which Spark reads natively as
+    TIMESTAMP_NTZ.  A TIMESTAMP(NANOS) column, however, Spark rejects by
+    default (PARQUET_TYPE_ILLEGAL); the legacy flag surfaces it as a long
+    of nanoseconds instead, and ``_normalize`` converts that to a proper
+    timestamp.  The flag is runtime-settable, so setting it here
     (not only in our own ``get_spark``) means the catalog works with any
     externally provided session — e.g. the driver's.
 
@@ -66,14 +68,15 @@ def _ensure_nanos_readable(spark: SparkSession) -> None:
 def _normalize(df: DataFrame, name: str) -> DataFrame:
     """Normalize physical quirks of a table at load time.
 
-    ``events.ts`` is parquet TIMESTAMP(NANOS), which different Spark
-    runtimes surface three different ways:
+    ``events.ts`` can reach this point as three different types:
 
-    - PySpark 4.1.2 reads it **natively as TIMESTAMP_NTZ** (and ignores
-      ``spark.sql.legacy.parquet.nanosAsLong`` entirely);
-    - older runtimes with the legacy conf read it as a **long of nanos**;
-    - a runtime that honors ``isAdjustedToUTC`` metadata could read it as
-      **TIMESTAMP** (with local timezone).
+    - TIMESTAMP(MICROS, ``isAdjustedToUTC=false``) — what the testdata
+      stores — reads **natively as TIMESTAMP_NTZ**;
+    - TIMESTAMP(NANOS) reads as a **long of nanos** under
+      ``spark.sql.legacy.parquet.nanosAsLong`` (without it, Spark raises
+      PARQUET_TYPE_ILLEGAL);
+    - a UTC-adjusted timestamp reads as **TIMESTAMP** (with local
+      timezone).
 
     All three converge here on ONE canonical type — ``TIMESTAMP_NTZ``, the
     naive wall-clock stored in the file, which is exactly what DuckDB's

@@ -7,6 +7,13 @@ Catalyst knob, so the idiomatic equivalent is a **job group**: run the
 action in a worker thread under ``setJobGroup``, and on timeout call
 ``cancelJobGroup`` so executors actually stop scanning (not just the driver
 giving up).
+
+The job group is the only cancellation transport.  It needs the session's
+``SparkContext``, as other engine paths already do (replays read
+``defaultParallelism``, the Bloom stage broadcasts).  Session tags
+(``addTag``/``interruptTag``) are not used: a tag added in the worker
+thread does not reliably reach that thread's jobs (verified on 4.1.2
+local).
 """
 
 from __future__ import annotations
@@ -27,94 +34,43 @@ class QueryTimeoutError(TimeoutError):
 def run_with_timeout(
     spark: SparkSession,
     action: Callable[[], T],
-    timeout_s: float | None,
+    timeout_s: float,
     group_desc: str = "",
 ) -> T:
     """Run ``action`` (a Spark action) with a wall-clock budget.
 
-    On timeout the in-flight Spark work is cancelled (executors stop, not
-    just the driver giving up) and :class:`QueryTimeoutError` is raised.
-    ``timeout_s=None`` runs unguarded on the calling thread.
-
-    Cancellation transport: **job groups** on a classic session (verified
-    to interrupt running stages on local/cluster masters); on Spark
-    Connect — where there is no SparkContext — **session tags**
-    (``addTag``/``interruptTag``, the gRPC-native interruption contract).
-    Tags are not used on classic because a tag added in a worker thread
-    does not reliably reach the job there (verified on 4.1.2 local).
+    A daemon worker thread sets a fresh job group (``interruptOnCancel``
+    on), runs ``action`` and clears the group; the caller joins it for
+    ``timeout_s``.  On expiry the group is cancelled — executors stop the
+    in-flight stages, not just the driver giving up — and
+    :class:`QueryTimeoutError` is raised without waiting for the worker.
+    An exception raised by ``action`` itself is re-raised unchanged.
     """
-    if timeout_s is None:
-        return action()
-    try:
-        spark.sparkContext
-    except Exception:  # Spark Connect: no SparkContext on the client
-        return _run_tagged(spark, action, timeout_s)
-    return _run_job_grouped(spark, action, timeout_s, group_desc)
-
-
-def _guarded(
-    token: str,
-    setup: Callable[[], None],
-    teardown: Callable[[], None],
-    cancel: Callable[[], None],
-    action: Callable[[], T],
-    timeout_s: float,
-) -> T:
+    group_id = f"nl2spark-{uuid.uuid4().hex[:12]}"
+    sc = spark.sparkContext
     result: dict[str, Any] = {}
-    error: dict[str, BaseException] = {}
 
     def target() -> None:
-        setup()
+        sc.setJobGroup(group_id, group_desc or group_id, interruptOnCancel=True)
         try:
             result["value"] = action()
         except BaseException as exc:  # surfaced to caller below
-            error["exc"] = exc
+            result["exc"] = exc
         finally:
-            teardown()
+            sc.setJobGroup("", "")
 
-    thread = threading.Thread(target=target, daemon=True, name=token)
+    thread = threading.Thread(target=target, daemon=True, name=group_id)
     thread.start()
     thread.join(timeout_s)
 
     if thread.is_alive():
-        cancel()
+        sc.cancelJobGroup(group_id)
         raise QueryTimeoutError(
-            f"action exceeded {timeout_s:.1f}s budget; {token} cancelled"
+            f"action exceeded {timeout_s:.1f}s budget; job group {group_id} cancelled"
         )
-    if "exc" in error:
-        raise error["exc"]
+    if "exc" in result:
+        raise result["exc"]
     return result["value"]
-
-
-def _run_job_grouped(
-    spark: SparkSession, action: Callable[[], T], timeout_s: float, group_desc: str
-) -> T:
-    group_id = f"nl2spark-{uuid.uuid4().hex[:12]}"
-    sc = spark.sparkContext
-    return _guarded(
-        f"job group {group_id}",
-        lambda: sc.setJobGroup(
-            group_id, group_desc or group_id, interruptOnCancel=True
-        ),
-        lambda: sc.setJobGroup("", ""),
-        lambda: sc.cancelJobGroup(group_id),
-        action,
-        timeout_s,
-    )
-
-
-def _run_tagged(
-    spark: SparkSession, action: Callable[[], T], timeout_s: float
-) -> T:
-    tag = f"nl2spark-{uuid.uuid4().hex[:12]}"
-    return _guarded(
-        f"tag {tag}",
-        lambda: spark.addTag(tag),
-        lambda: spark.removeTag(tag),
-        lambda: spark.interruptTag(tag),
-        action,
-        timeout_s,
-    )
 
 
 def budget_split(total_timeout_s: float) -> tuple[float, float]:

@@ -1,14 +1,14 @@
 """Catalog must be self-sufficient on ANY session (the driver's included)
 and must surface ONE canonical events.ts type on every runtime.
 
-Round-1 regression: the harness-provided SparkSession does not set
-``spark.sql.legacy.parquet.nanosAsLong``, and events.parquet stores
-TIMESTAMP(NANOS) — every contract query failed at registration.
-Round-2 regression: PySpark 4.1.2 reads that column natively as
-TIMESTAMP_NTZ (ignoring the legacy conf), which broke ``unix_micros``
-consumers.  The catalog now canonicalizes every read path — native NTZ,
-legacy long-of-nanos, and LTZ — to TIMESTAMP_NTZ, the naive wall-clock
-DuckDB's oracle sees.
+An externally provided SparkSession need not set
+``spark.sql.legacy.parquet.nanosAsLong``, without which a parquet
+TIMESTAMP(NANOS) column raises PARQUET_TYPE_ILLEGAL; the catalog sets it
+(``test_nanos_parquet_fixture_reads_canonical`` depends on it).  The
+testdata's events.ts is TIMESTAMP(MICROS, not UTC-adjusted), which Spark
+reads natively as TIMESTAMP_NTZ, and ``unix_micros`` rejects NTZ.  The
+catalog canonicalizes every read path — native NTZ, legacy long-of-nanos,
+and LTZ — to TIMESTAMP_NTZ, the naive wall-clock DuckDB's oracle sees.
 """
 
 from __future__ import annotations
@@ -70,7 +70,7 @@ def test_nanos_parquet_fixture_reads_canonical(spark, tmp_path):
 
 
 def test_normalize_legacy_long_branch(spark):
-    """Old runtimes honor nanosAsLong and surface ts as a long of nanos;
+    """Under nanosAsLong a TIMESTAMP(NANOS) ts surfaces as a long of nanos;
     _normalize must convert it to the same canonical NTZ wall-clock,
     independent of the session timezone."""
     wall = datetime.datetime(2024, 6, 1, 12, 34, 56, 789012)

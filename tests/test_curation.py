@@ -882,9 +882,11 @@ def test_artifact_writes_join_callers_job_group(spark, tmp_path):
     """The artifact parts are written from pool threads; each write job
     must carry the CALLER's job group, or ``run_with_timeout`` could
     neither cancel nor attribute it (a plain pool thread starts with
-    empty local properties)."""
+    empty local properties).  The wrapper is given the session, so it
+    carries session tags too and does not warn that it cannot."""
     import time
     import uuid
+    import warnings
 
     from nlp_to_nosql_spark.operators.curation import _write_artifact
 
@@ -892,9 +894,11 @@ def test_artifact_writes_join_callers_job_group(spark, tmp_path):
     group = f"probe-group-{uuid.uuid4().hex[:8]}"
     sc.setJobGroup(group, group)
     try:
-        _write_artifact(
-            str(tmp_path / "art"), {"a": spark.range(3), "b": spark.range(5)}
-        )
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            _write_artifact(
+                str(tmp_path / "art"), {"a": spark.range(3), "b": spark.range(5)}
+            )
     finally:
         for key in (
             "spark.jobGroup.id",
@@ -909,6 +913,9 @@ def test_artifact_writes_join_callers_job_group(spark, tmp_path):
         time.sleep(0.1)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) >= 2, f"write jobs outside the caller's group: {jobs}"
+    assert not [
+        w for w in caught if "Spark session is not provided" in str(w.message)
+    ]
 
 
 def test_target_lm_load_rejects_schema_drift(spark, tmp_path):

@@ -9,11 +9,14 @@ from nlp_to_nosql_spark.ir import QuerySpec
 from nlp_to_nosql_spark.timeout import budget_split
 
 
-def test_total_is_prelimit_count(spark, employees):
+def test_total_is_prelimit_count(spark, employees, monkeypatch):
+    import nlp_to_nosql_spark.executor as ex
+
     spec = QuerySpec(filter={"salary": {"$gt": 40000}}, limit=2)
     # generous budgets: this test asserts the exact count, so it must not
     # hit the (by-design) degradation path on a cold JVM
-    total, rows = execute(spark, spec, employees, query_timeout_s=120, count_timeout_s=120)
+    monkeypatch.setattr(ex, "COUNT_TIMEOUT_S", 120)
+    total, rows = execute(spark, spec, employees, query_timeout_s=120)
     assert len(rows) == 2
     assert total == 9  # all but Ivy (39999)
 
@@ -65,7 +68,7 @@ def test_engine_envelope(spark, employees):
     eng.register("employees", employees)
     resp = eng.query("employees earning over 60000", "employees", limit=50)
     assert resp["ok"] is True
-    assert resp["query"] == {"filter": {"salary": {"$gt": 60000}}, "projection": {}}
+    assert resp["mongo_query"] == {"filter": {"salary": {"$gt": 60000}}, "projection": {}}
     assert resp["total_matching"] == 5 and resp["result_count"] == 5
     assert {"execution_time", "query_generation_time", "db_execution_time"} <= set(resp)
 
@@ -103,6 +106,24 @@ def test_run_with_timeout_cancels_runaway_job(spark):
     assert time.time() - t0 < 30  # cancelled, not run to completion
 
 
+def test_run_with_timeout_propagates_action_error(spark):
+    """The action's own exception leaves the guard unchanged (not as a
+    timeout), and the cleared job group leaves the session usable."""
+    import pytest
+
+    from nlp_to_nosql_spark.timeout import run_with_timeout
+
+    err = ValueError("boom")
+
+    def boom():
+        raise err
+
+    with pytest.raises(ValueError) as info:
+        run_with_timeout(spark, boom, timeout_s=30.0, group_desc="raises")
+    assert info.value is err
+    assert run_with_timeout(spark, spark.range(3).count, timeout_s=60.0) == 3
+
+
 # ---------------------------------------------------------------------------
 # property: ANY natural-language input produces a valid envelope — the
 # compile→execute path never raises (rule-compiler fallback is total)
@@ -134,7 +155,7 @@ def test_engine_query_total_on_arbitrary_nl(spark, employees, nl):
     eng.register("emp_fuzz", employees)
     resp = eng.query(nl, "emp_fuzz", limit=10)
     assert resp["ok"] is True
-    assert isinstance(resp["query"], dict)
+    assert isinstance(resp["mongo_query"], dict)
     assert resp["result_count"] == len(resp["results"])
     assert resp["total_matching"] >= resp["result_count"] or resp["result_count"] <= 10
 
@@ -149,51 +170,3 @@ def test_engine_rejects_blank_text(spark, employees):
     for blank in ("", "   "):
         with _pytest.raises(ValueError):
             eng.query(blank, "emp_blank")
-
-
-def test_run_with_timeout_tag_path_for_connect():
-    """On Spark Connect there is no SparkContext; the guard must fall back
-    to session tags (addTag/interruptTag) — exercised with a duck-typed
-    session since this container has no Connect server."""
-    import threading
-    import time as _time
-
-    import pytest as _pytest
-
-    from nlp_to_nosql_spark.timeout import QueryTimeoutError, run_with_timeout
-
-    class FakeConnectSession:
-        def __init__(self):
-            self.tags, self.interrupted = [], []
-            self.stop_event = threading.Event()
-
-        @property
-        def sparkContext(self):  # what pyspark.sql.connect raises
-            raise AttributeError("sparkContext is not supported in Connect")
-
-        def addTag(self, t):
-            self.tags.append(t)
-
-        def removeTag(self, t):
-            pass
-
-        def interruptTag(self, t):
-            self.interrupted.append(t)
-            self.stop_event.set()
-
-    fake = FakeConnectSession()
-
-    # fast action completes through the tag path
-    assert run_with_timeout(fake, lambda: 42, timeout_s=5.0) == 42
-    assert len(fake.tags) == 1
-
-    # slow action: interruptTag fires and QueryTimeoutError raises
-    def slow():
-        fake.stop_event.wait(10)
-        return "late"
-
-    t0 = _time.time()
-    with _pytest.raises(QueryTimeoutError, match="tag "):
-        run_with_timeout(fake, slow, timeout_s=0.3)
-    assert _time.time() - t0 < 5
-    assert fake.interrupted == fake.tags[1:]

@@ -40,14 +40,14 @@ def test_ir_filter_pushes_down_to_scan(lineitem):
         filter={"l_quantity": {"$gt": 45}},
         projection=("l_orderkey", "l_quantity"),
     )
-    plan = _explain(apply_spec(lineitem, spec, with_limit=False))
+    plan = _explain(apply_spec(lineitem, spec))
     assert "GreaterThan(l_quantity,45" in plan          # PushedFilters
     assert "l_extendedprice" not in plan.split("ReadSchema")[1].splitlines()[0]
 
 
 def test_projection_prunes_scan_columns(lineitem):
     spec = QuerySpec(projection=("l_orderkey",))
-    plan = _explain(apply_spec(lineitem, spec, with_limit=False))
+    plan = _explain(apply_spec(lineitem, spec))
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "l_orderkey" in read_schema
     assert "l_quantity" not in read_schema
@@ -66,15 +66,15 @@ def test_scan_filter_project_is_shuffle_free(lineitem):
     spec = QuerySpec(
         filter={"l_returnflag": "3"}, projection=("l_orderkey", "l_returnflag")
     )
-    plan = _explain(apply_spec(lineitem, spec, with_limit=False))
+    plan = _explain(apply_spec(lineitem, spec))
     assert "Exchange" not in plan
 
 
 def test_fan_out_is_metadata_first(spark, tmp_path):
     """fan_out's guard decides from file metadata when the input is a file
-    scan (no .rdd probe — that forces a physical plan and breaks under
-    Spark Connect); for non-file inputs, classic mode falls back to the
-    RDD partition probe so a skinny in-memory input still gets spread."""
+    scan (no .rdd probe — that forces a physical plan); for non-file
+    inputs it falls back to the RDD partition probe so a skinny in-memory
+    input still gets spread."""
     from nlp_to_nosql_spark.plans.partitioning import (
         _estimated_scan_partitions,
         fan_out,
@@ -96,7 +96,7 @@ def test_fan_out_is_metadata_first(spark, tmp_path):
     assert _estimated_scan_partitions(narrow) == 1
     assert fan_out(narrow).rdd.getNumPartitions() == parallelism
 
-    # Non-file source (range): metadata estimate unavailable → classic-mode
+    # Non-file source (range): metadata estimate unavailable → the
     # RDD probe sees the single partition and spreads it.
     unsized = spark.range(10).coalesce(1)
     assert _estimated_scan_partitions(unsized) is None

@@ -2,6 +2,7 @@
 
 import pytest
 
+from nlp_to_nosql_spark.executor import execute
 from nlp_to_nosql_spark.ir import QuerySpec
 from nlp_to_nosql_spark.plans.compile import apply_spec
 from nlp_to_nosql_spark.plans.predicates import UnsupportedOperatorError, compile_predicate
@@ -107,9 +108,13 @@ def test_projection_all_unknown_means_select_all(employees):
     assert apply_spec(employees, spec).columns == employees.columns
 
 
-def test_limit_applied(employees):
+def test_limit_applied(spark, employees):
+    """The executor applies the spec's limit to what it collects;
+    apply_spec returns the unbounded relation the count runs on."""
     spec = QuerySpec(filter={}, projection=(), limit=3)
-    assert apply_spec(employees, spec).count() == 3
+    assert apply_spec(employees, spec).count() == 10
+    _, rows = execute(spark, spec, employees)
+    assert len(rows) == 3
 
 
 def test_predicates_push_down_to_parquet_scan(spark, tmp_path):

@@ -59,9 +59,12 @@ def main() -> int:
     if args and args[0] == "--side":
         side = True
         args = args[1:]
-    sys.argv = [sys.argv[0]] + args
-    outdir, suffix = sys.argv[1], sys.argv[2]
-    rest = sys.argv[3:]
+    if len(args) < 2 or args[0] in ("-h", "--help"):
+        usage = next(ln for ln in __doc__.splitlines() if ln.startswith("Usage:"))
+        print(usage, file=sys.stderr)
+        return 2
+    outdir, suffix = args[0], args[1]
+    rest = args[2:]
     if rest and os.path.isdir(rest[0]):
         sf_dir, names = rest[0], rest[1:]
     else:
