@@ -2484,14 +2484,14 @@ def _q_unigram_viterbi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full BPE trainer LOOP (tok3 is its inner statistic): 4
-    driver-iterated merges over the persisted Heaps'-law vocabulary —
-    per iteration one vocabulary-sized pair-count groupBy, a 1-row
-    argmax collect under (count DESC, lhs, rhs), and a JVM-side
-    leftmost-non-overlapping merge fold; the corpus is tokenized
-    exactly once.  Returns the ranked merge table (4 rows — the
-    IVF-centroid bounded-driver-state contract), which the DuckDB twin
-    re-derives via unrolled iteration CTEs
+    """The full BPE trainer (tok3 is its inner statistic): one
+    distributed word count, then 4 merges on the driver-resident
+    vocabulary — each the argmax pair under (count DESC, lhs, rhs),
+    applied leftmost-non-overlapping; the corpus is tokenized exactly
+    once and the job count does not grow with the merge count.
+    Returns the ranked merge table (4 rows — the IVF-centroid
+    bounded-driver-state contract), which the DuckDB twin re-derives
+    via unrolled iteration CTEs
     (operators/selection.py bpe_train / bpe_train_sql)."""
     from nlp_to_nosql_spark.operators.selection import bpe_train
 
@@ -2503,25 +2503,21 @@ def _q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train-tokenizer → count-tokens: fit 4 BPE merges (tok4's loop),
-    then ENCODE every document under the fitted merge list — per-doc
-    BPE token counts, the statistic that drives pack1's token-budget
-    packing.  Encoding reuses the trainer's final vocabulary (a word's
-    encoded form IS the training-time merge application) and — since
-    the encoded corpus IS the training corpus, so coverage is
-    guaranteed — passes ``assume_covered=True`` to skip the OOV
-    anti-join's corpus re-tokenization (round-10 advice): the encode
-    pass then truly costs one corpus-token explode + one
-    Heaps'-law-sized join; zero-token documents keep a 0 row
-    (operators/selection.py bpe_encode_len)."""
+    """Train-tokenizer → count-tokens: fit 4 BPE merges (tok4's
+    trainer), then ENCODE every document under the fitted merge list —
+    per-doc BPE token counts, the statistic that drives pack1's
+    token-budget packing.  The encoder replays the merge chain over the
+    corpus's distinct words (a word's encoded form IS the
+    training-time merge application), then costs one corpus-token
+    explode + one Heaps'-law-sized join; zero-token documents keep a 0
+    row (operators/selection.py bpe_encode_len)."""
     from nlp_to_nosql_spark.operators.selection import (
         bpe_encode_len,
         bpe_train,
     )
 
     docs = register_tables(spark, sf_dir)["documents"]
-    merges, vocab = bpe_train(docs, n_merges=4, return_vocab=True)
-    return bpe_encode_len(docs, merges, vocab=vocab, assume_covered=True)
+    return bpe_encode_len(docs, bpe_train(docs, n_merges=4))
 
 
 def _q_bpe_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2541,8 +2537,7 @@ def _q_bpe_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = register_tables(spark, sf_dir)["documents"]
-    merges, vocab = bpe_train(docs, n_merges=4, return_vocab=True)
-    enc = bpe_encode_len(docs, merges, vocab=vocab, assume_covered=True)
+    enc = bpe_encode_len(docs, bpe_train(docs, n_merges=4))
     return pack_by_token_budget(enc, "doc_id", "n_tokens", budget=5_000)
 
 
@@ -2623,27 +2618,26 @@ def _q_trained_pack_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_bpe_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tokenizer ARTIFACT contract under the oracle gate: fit 4
-    merges with the PRODUCTION trainer shape (bpe_train_local — one
-    distributed word count, vocab-local loop), persist the merge table
-    as a parquet artifact (bpe_save), reload it (bpe_load, rank-gap and
-    symbol validation), and encode every document under the RELOADED
-    list — proving the persisted artifact alone determines the
-    encoding (OOV words char-split + replay the chain, needing nothing
-    beyond the table).  The oracle is tok5's proven unrolled train+
+    merges (bpe_train — one distributed word count, driver-side merge
+    loop), persist the merge table as a parquet artifact (bpe_save),
+    reload it (bpe_load, rank-gap and symbol validation), and encode
+    every document under the RELOADED list — proving the persisted
+    artifact alone determines the encoding (OOV words char-split +
+    replay the chain, needing nothing beyond the table).  The oracle is tok5's proven unrolled train+
     encode SQL: it re-derives the same merges, so a lossy or reordered
     artifact would hash-mismatch (operators/selection.py bpe_save /
-    bpe_load / bpe_train_local)."""
+    bpe_load / bpe_train)."""
     import tempfile
 
     from nlp_to_nosql_spark.operators.selection import (
         bpe_encode_len,
         bpe_load,
         bpe_save,
-        bpe_train_local,
+        bpe_train,
     )
 
     docs = register_tables(spark, sf_dir)["documents"]
-    merges = bpe_train_local(docs, n_merges=4)
+    merges = bpe_train(docs, n_merges=4)
     path = os.path.join(tempfile.gettempdir(), "spark_graft_bpe_merges")
     bpe_save(merges, path, spark)
     return bpe_encode_len(docs, bpe_load(path, spark))

@@ -107,9 +107,9 @@ def run_demo(sf_dir: str = DEFAULT_SF_DIR, spark=None) -> str:
     )
 
     docs = spark.table("documents")
-    merges, vocab = bpe_train(docs, n_merges=4, return_vocab=True)
+    merges = bpe_train(docs, n_merges=4)
     say(f">>> bpe_train(docs, n_merges=4)  ->  {merges}")
-    enc = bpe_encode_len(docs, merges, vocab=vocab)
+    enc = bpe_encode_len(docs, merges)
     packed = pack_by_token_budget(enc, "doc_id", "n_tokens", budget=5_000)
     n_batches = packed.agg(F.max("batch_id") + 1).collect()[0][0]
     say(f">>> pack_by_token_budget(enc, budget=5000)  ->  "
@@ -119,7 +119,6 @@ def run_demo(sf_dir: str = DEFAULT_SF_DIR, spark=None) -> str:
     for r in picked.collect():
         say(f"    doc {r['doc_id']}: weight_micro={r['weight_micro']} "
             f"key_micro={r['key_micro']}")
-    vocab.unpersist()
     say("")
 
     say("=" * 72, "5. Round-11 additions — trained language ID, UniMax "

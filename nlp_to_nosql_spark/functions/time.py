@@ -19,7 +19,8 @@ zone.  (For LTZ inputs the fields are session-local wall fields —
 differences of two ``epoch_us`` values are wall-clock durations in that
 zone, NOT elapsed time: across a DST transition they are off by the
 offset delta and non-monotonic through fall-back.  Callers with LTZ
-input that need elapsed time must use :func:`epoch_us_instant`.  The
+input that need elapsed time must use ``F.unix_micros``, which raises
+DATATYPE_MISMATCH on NTZ — the two types need different arithmetic.  The
 engine pins the canonical events type to NTZ in
 ``sources.catalog._normalize``, so every internal call site is on the
 zone-free path.)
@@ -48,17 +49,6 @@ def epoch_us(col: Column | str) -> Column:
         + F.minute(c).cast("long") * F.lit(60_000_000)
         + (F.date_part(F.lit("SECOND"), c) * F.lit(1_000_000)).cast("long")
     )
-
-
-def epoch_us_instant(col: Column | str) -> Column:
-    """Instant-exact microseconds-since-epoch for TIMESTAMP (LTZ) input —
-    plain ``unix_micros``, whose differences are true elapsed time across
-    DST transitions.  Use this (not :func:`epoch_us`) when the column is
-    known to be with-local-timezone and elapsed-time semantics matter;
-    it raises DATATYPE_MISMATCH on TIMESTAMP_NTZ, which is the guard you
-    want — the two types need different arithmetic, not one function."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.unix_micros(c)
 
 
 def micros_to_ntz(us: Column) -> Column:

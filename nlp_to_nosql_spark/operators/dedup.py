@@ -80,19 +80,6 @@ def shingles_of_words(words: Column, k: int = 3) -> Column:
     ).otherwise(F.array(F.array_join(words, " ")))
 
 
-def shingles(c: Column, k: int = 3) -> Column:
-    """k-word shingles of normalized text as ``array<string>``.
-
-    Texts shorter than k words yield one whole-text shingle, so every
-    document has ≥1 shingle and survives the pipeline.
-
-    NOTE: embeds the tokenization subtree inside the transform lambda, so
-    it re-tokenizes per shingle — fine for one-off Column use, but bulk
-    paths should tokenize into a column and use :func:`shingles_of_words`.
-    """
-    return shingles_of_words(F.split(normalize_text(c), " "), k)
-
-
 def tokenized(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, _words) projection: normalized whitespace tokens as their own
     attribute, fanned out for CPU parallelism."""

@@ -16,16 +16,14 @@ Two pipeline stages that sit between quality filtering and packing:
   distributed inner step of byte-pair-encoding tokenizer training —
   adjacent-symbol pair frequencies weighted by word counts, computed on
   the DISTINCT-word table, never on the raw token stream.
-* **BPE training loop + encoder** (:func:`bpe_train` /
-  :func:`bpe_train_local`, :func:`bpe_encode_len` /
-  :func:`bpe_encode`): the full tokenizer-fitting iteration —
-  driver-iterate N merges (every per-iteration pass runs on the
-  Heaps'-law vocabulary table, the corpus is tokenized exactly once;
-  the ``_local`` tier collects the word counts and runs the loop
-  vocab-local, the production job shape at real merge counts), then
-  apply the fitted merge list to produce per-document BPE token
-  counts (the statistic that feeds token-budget packing,
-  ``packing.pack_documents``) or full token arrays.
+* **BPE trainer + encoder** (:func:`bpe_train`, :func:`bpe_encode_len`):
+  the full tokenizer fit — one distributed word count, then the N-merge
+  loop on the driver-resident vocabulary (the subword-nmt / HuggingFace
+  job shape: the corpus is tokenized exactly once and the Spark job
+  count does not grow with the merge count) — then the fitted merge
+  list applied per distinct word to produce per-document BPE token
+  counts, the statistic that feeds token-budget packing
+  (``packing.pack_documents``).
 
 DSIR ships three selection tiers: deterministic argmax-k
 (:func:`dsir_select`), per-domain quotas (:func:`dsir_select_by`), and
@@ -582,7 +580,7 @@ def bpe_merge_pairs_sql(
 
 
 # ---------------------------------------------------------------------------
-# BPE training loop + encoder
+# BPE trainer + encoder
 # ---------------------------------------------------------------------------
 
 def _merge_apply(ss: Column, left: str, right: str) -> Column:
@@ -616,38 +614,11 @@ def _merge_apply(ss: Column, left: str, right: str) -> Column:
     )
 
 
-def _adjacent_pairs(words: DataFrame) -> DataFrame:
-    """``(lhs, rhs, cnt)`` adjacent-symbol pair counts of a symbol-array
-    vocabulary frame ``(w, wc, ss)``, weighted by word count."""
-    staged = words.select(
-        "_wc",
-        F.when(
-            F.size("ss") > 1,
-            F.zip_with(
-                F.slice("ss", 1, F.size("ss") - 1),
-                F.slice("ss", 2, F.size("ss") - 1),
-                lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-            ),
-        )
-        .otherwise(F.expr(
-            "CAST(array() AS array<struct<l: string, r: string>>)"
-        ))
-        .alias("_ps"),
-    )
-    return (
-        staged.select("_wc", F.explode("_ps").alias("_p"))
-        .groupBy(
-            F.col("_p.l").alias("lhs"), F.col("_p.r").alias("rhs")
-        )
-        .agg(F.sum("_wc").cast("long").alias("cnt"))
-    )
-
-
 def bpe_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The ``(w, _wc, ss)`` vocabulary frame BPE training iterates on:
-    distinct corpus words with BIGINT counts and the character-split
-    symbol array.  ONE corpus-token shuffle; everything downstream is
-    Heaps'-law vocabulary-sized."""
+    """The ``(w, _wc, ss)`` vocabulary frame the BPE encoder runs the
+    merge chain over: distinct corpus words with BIGINT counts and the
+    character-split symbol array.  ONE corpus-token shuffle; everything
+    downstream is Heaps'-law vocabulary-sized."""
     return (
         df.select(F.explode(_tokens(text_col)).alias("w"))
         .groupBy("w")
@@ -656,152 +627,40 @@ def bpe_vocab(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def bpe_train(
-    df: DataFrame,
-    n_merges: int = 4,
-    text_col: str = "text",
-    return_vocab: bool = False,
-):
-    """Fit ``n_merges`` BPE merges (Sennrich et al., arXiv:1508.07909).
-
-    The production trainer loop: tokenize the corpus ONCE into the
-    distinct-word vocabulary (Heaps' law: orders of magnitude smaller
-    than the corpus), then driver-iterate — each iteration counts
-    adjacent-symbol pairs weighted by word counts (a vocabulary-sized
-    groupBy), picks the argmax pair under the total order ``(count
-    DESC, lhs ASC, rhs ASC)`` (a 1-row TakeOrdered collect, the
-    ``pr1``/IVF bounded-driver-state contract), and applies the merge
-    to the persisted vocabulary with a JVM-side stack fold
-    (:func:`_merge_apply`).  The corpus is never re-tokenized; the
-    driver holds exactly ``n_merges`` rows.  For production merge
-    counts (10⁴–10⁵) prefer :func:`bpe_train_local` — the same result
-    through the production job shape (one distributed word count, the
-    loop vocab-local).
-
-    Returns the ranked merge list ``[(rank, lhs, rhs, count), ...]``
-    (stops early if the vocabulary runs out of pairs); with
-    ``return_vocab=True`` returns ``(merges, vocab)`` where ``vocab``
-    is the final persisted ``(w, _wc, ss)`` frame — the encoded form of
-    every corpus word, which :func:`bpe_encode_len` reuses so encoding
-    costs one join, not a re-derivation.  The returned frame stays
-    persisted (it backs the caller's downstream lazy plans — the
-    library-wide lifecycle contract of ``plans/caching.py``): callers
-    own the ``vocab.unpersist()`` once their last action over it ran,
-    or rely on the session-level ``spark.catalog.clearCache()`` the
-    bench/driver harnesses issue per query.
-    """
-    from nlp_to_nosql_spark.plans.caching import persisted
-
-    words = persisted(bpe_vocab(df, text_col), "tokens")
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(1, int(n_merges) + 1):
-        top = (
-            _adjacent_pairs(words)
-            .orderBy(F.desc("cnt"), F.asc("lhs"), F.asc("rhs"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        lhs, rhs, cnt = top[0]["lhs"], top[0]["rhs"], int(top[0]["cnt"])
-        merges.append((rank, lhs, rhs, cnt))
-        nxt = persisted(
-            words.select(
-                "w", "_wc", _merge_apply(F.col("ss"), lhs, rhs).alias("ss")
-            ),
-            "tokens",
-        )
-        nxt.count()  # materialize before dropping the parent cache
-        words.unpersist()
-        words = nxt
-    if return_vocab:
-        return merges, words
-    words.unpersist()
-    return merges
-
-
-def _merge_chain(frame: DataFrame, merges: list) -> DataFrame:
-    """Apply a fitted merge list (``(rank, lhs, rhs, …)`` tuples or
-    bare ``(lhs, rhs)`` pairs, in rank order) to a ``(w, _wc, ss)``
-    vocabulary frame."""
-    for m in merges:
-        lhs, rhs = (m[1], m[2]) if len(m) >= 3 else (m[0], m[1])
-        frame = frame.select(
-            "w", "_wc", _merge_apply(F.col("ss"), lhs, rhs).alias("ss")
-        )
-    return frame
-
-
-def _encoded_vocab(
-    df: DataFrame,
-    merges: list,
-    vocab: DataFrame | None,
-    text_col: str,
-    assume_covered: bool = False,
-) -> DataFrame:
-    """``(w, ss)`` encode table covering EVERY word of ``df``.
-
-    ``vocab`` (the trainer's ``return_vocab`` frame) is a REUSE
-    OPTIMIZATION, not a contract on coverage: words of ``df`` absent
-    from it (encoding a different corpus than the one trained on) are
-    char-split and run through the merge chain via one left-anti join,
-    so the result is correct for any ``df``; when ``df`` IS the
-    training corpus the anti side is empty at runtime and the reused
-    frame is served as-is (round-10 review finding — the previous
-    inner-join shape silently dropped uncovered words).  Note the anti
-    join still DERIVES ``bpe_vocab(df)``, so the plan tokenizes the
-    corpus even when the anti side is empty at runtime — callers that
-    GUARANTEE coverage (``df`` is the training corpus) pass
-    ``assume_covered=True`` to serve the reused frame as-is and skip
-    that second corpus-token pass entirely (round-10 advice).  Under a
-    violated guarantee the uncovered words silently drop from the
-    encode table (the pre-fix inner-join behavior) — the flag is a
-    caller contract, pinned by ``test_bpe_encode_len_assume_covered``.
-    """
-    if vocab is None:
-        return _merge_chain(bpe_vocab(df, text_col), merges).select("w", "ss")
-    if assume_covered:
-        return vocab.select("w", "ss")
-    missing = _merge_chain(
-        bpe_vocab(df, text_col).join(vocab.select("w"), "w", "left_anti"),
-        merges,
-    ).select("w", "ss")
-    return vocab.select("w", "ss").unionByName(missing)
-
-
-#: Driver-side vocabulary ceiling for :func:`bpe_train_local` — Heaps'
-#: law keeps real-corpus vocabularies far under this, but a pathological
+#: Driver-side vocabulary ceiling for :func:`bpe_train` — Heaps' law
+#: keeps real-corpus vocabularies far under this, but a pathological
 #: input (e.g. random hex blobs) must fail loudly before a collect, not
 #: OOM the driver.
 _LOCAL_VOCAB_CAP = 5_000_000
 
 
-def bpe_train_local(
+def bpe_train(
     df: DataFrame,
     n_merges: int = 4,
     text_col: str = "text",
 ) -> list:
-    """BPE training with the PRODUCTION job shape: one distributed
-    word-count pass, then the whole merge loop on the driver-resident
-    vocabulary.
+    """Fit ``n_merges`` BPE merges (Sennrich et al., arXiv:1508.07909):
+    one distributed word-count pass, then the whole merge loop on the
+    driver-resident vocabulary.
 
-    :func:`bpe_train` runs each iteration as Spark jobs over the
-    distributed vocabulary — transparent and fine at small ``n_merges``
-    (the contract configs), but a real tokenizer fits 10⁴–10⁵ merges,
-    and one job round-trip per merge is pure scheduler overhead when
-    the per-iteration data is the Heaps'-law vocabulary.  Every
-    production trainer (subword-nmt, HuggingFace tokenizers,
-    sentencepiece) therefore distributes ONLY the word count and runs
-    the merge loop over the collected ``(word, count)`` table — the
-    corpus is touched exactly once, and the loop costs no cluster time
-    at all.  This mirrors that architecture; the collect is bounded by
+    A real tokenizer fits 10⁴–10⁵ merges over a Heaps'-law vocabulary,
+    so every production trainer (subword-nmt, HuggingFace tokenizers,
+    sentencepiece) distributes ONLY the word count and runs the merge
+    loop over the collected ``(word, count)`` table: the corpus is
+    touched exactly once, and the Spark job count does not grow with
+    ``n_merges`` (test-pinned).  Running each merge as Spark jobs
+    (pair-count groupBy, 1-row argmax collect, merge fold over a
+    persisted vocabulary) pays job round trips per merge: measured at
+    sf0.1, 22 jobs for 4 merges against 2.  The collect is bounded by
     ``_LOCAL_VOCAB_CAP`` (fail-fast, 5 M distinct words — far above
     Heaps'-law vocabularies, far below driver OOM).
 
-    Same greedy semantics and ``(count DESC, lhs, rhs)`` tie order as
-    :func:`bpe_train` — equality at every N is test-pinned — so the
-    returned merge list feeds :func:`bpe_encode_len` /
-    :func:`bpe_encode` unchanged.
+    Each merge is the argmax pair under the total order ``(count DESC,
+    lhs ASC, rhs ASC)``, applied leftmost-non-overlapping (the
+    :func:`_merge_apply` semantics the encoder replays), so the DuckDB
+    twin :func:`bpe_train_sql` returns the same list.  Returns the
+    ranked merge list ``[(rank, lhs, rhs, count), ...]``, stopping early
+    if the vocabulary runs out of pairs.
 
     The loop is INCREMENTAL (the subword-nmt architecture): pair stats
     live in a dict with a lazy-deletion max-heap for the argmax, and
@@ -812,8 +671,7 @@ def bpe_train_local(
     10⁴–10⁵ merges a production tokenizer fits over a realistic
     vocabulary — where the incremental loop's per-merge cost is the
     total length of affected words only (equality with the naive loop
-    is hypothesis-pinned, ``test_bpe_train_local_incremental_
-    equals_naive``).
+    is hypothesis-pinned in ``tests/test_selection.py``).
     """
     cap = _LOCAL_VOCAB_CAP
     counted = (
@@ -824,8 +682,8 @@ def bpe_train_local(
     rows = counted.limit(cap + 1).collect()
     if len(rows) > cap:
         raise ValueError(
-            f"bpe_train_local: vocabulary exceeds {cap} distinct words; "
-            "use bpe_train for a distributed merge loop"
+            f"bpe_train: vocabulary exceeds {cap} distinct words, more "
+            "than the driver-side merge loop may collect"
         )
     words = {r["w"]: int(r["wc"]) for r in rows}
     return _bpe_merge_loop(words, int(n_merges))
@@ -835,7 +693,7 @@ def _bpe_merge_loop(
     words: dict, n_merges: int
 ) -> list[tuple[int, str, str, int]]:
     """The driver-resident incremental merge loop over a ``word →
-    count`` table (see :func:`bpe_train_local`)."""
+    count`` table (see :func:`bpe_train`)."""
     import heapq
     from collections import Counter
 
@@ -917,21 +775,19 @@ BPE_MERGES_SCHEMA = "merge_rank int, lhs string, rhs string, pair_count long"
 
 
 def bpe_save(merges: list, path: str, spark) -> None:
-    """Persist a fitted merge list (:func:`bpe_train` /
-    :func:`bpe_train_local` output) as a parquet merge table — the
-    tokenizer artifact contract: training runs ONCE, the merge table
-    ships to every downstream encode job (:func:`bpe_load` →
-    :func:`bpe_encode_len` / :func:`bpe_encode`).
+    """Persist a fitted merge list (:func:`bpe_train` output) as a
+    parquet merge table — the tokenizer artifact contract: training runs
+    ONCE, the merge table ships to every downstream encode job
+    (:func:`bpe_load` → :func:`bpe_encode_len`).
 
     Parquet rather than a text sidecar so the artifact is (a) readable
     by any engine including the DuckDB oracle, (b) schema-checked on
     load, and (c) a one-file broadcast at any realistic merge count
     (10⁵ merges ≈ a few MB).  Round-trip exactness is test-pinned
     (``test_bpe_save_load_roundtrip``); OOV words at encode time need
-    nothing from the artifact — the encoder char-splits any word absent
-    from its vocabulary frame and replays the merge chain over it
-    (:func:`_encoded_vocab`), so a merge table alone fully determines
-    the encoding of ANY text.
+    nothing from the artifact — the encoder char-splits every word of
+    the text it encodes and replays the merge chain over it, so a merge
+    table alone fully determines the encoding of ANY text.
     """
     rows = [
         (int(m[0]), str(m[1]), str(m[2]), int(m[3])) for m in merges
@@ -970,106 +826,85 @@ def bpe_load(path: str, spark) -> list:
     return merges
 
 
-def bpe_encode_len(
+def _merge_chain(frame: DataFrame, merges: list) -> DataFrame:
+    """Apply a fitted merge list (``(rank, lhs, rhs, …)`` tuples or
+    bare ``(lhs, rhs)`` pairs, in rank order) to a ``(w, _wc, ss)``
+    vocabulary frame."""
+    for m in merges:
+        lhs, rhs = (m[1], m[2]) if len(m) >= 3 else (m[0], m[1])
+        frame = frame.select(
+            "w", "_wc", _merge_apply(F.col("ss"), lhs, rhs).alias("ss")
+        )
+    return frame
+
+
+def _doc_token_counts(
     df: DataFrame,
-    merges: list,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    vocab: DataFrame | None = None,
-    assume_covered: bool = False,
+    lens: DataFrame,
+    n_col: str,
+    id_col: str,
+    text_col: str,
+    staged: bool = False,
+    sum_col: str = "n_tokens",
 ) -> DataFrame:
-    """Per-document BPE token counts under a fitted merge list.
+    """``(id, n_tokens)`` — the counting tail every tokenizer encoder
+    shares: explode each document's word tokens, join them to ``lens``
+    ``(w, n_col)`` (tokens per distinct word — Heaps'-law-sized, AQE
+    broadcasts it when it fits), sum per document, and left-join back
+    so a document whose text yields no words keeps a 0 row (the
+    packing feed stays total over the input).
 
-    Applies ``merges`` (``(rank, lhs, rhs, ...)`` tuples or bare
-    ``(lhs, rhs)`` pairs, in rank order) to the corpus vocabulary —
-    encoding a word is EXACTLY the training-time merge application, so
-    the encoder is the same :func:`_merge_apply` chain — then counts
-    ``(doc, token)`` memberships: one corpus-token explode joined
-    against the ``(word → encoded length)`` table (Heaps'-law-sized,
-    AQE picks broadcast when it fits), summed per document.  Documents
-    with zero tokens keep a 0 row (left join), so the output feeds
-    ``packing.pack_documents``'s token budget directly.
-
-    ``vocab``: pass :func:`bpe_train`'s ``return_vocab`` frame to skip
-    re-encoding (the common train-then-encode pipeline); words not in
-    it are still encoded correctly (see :func:`_encoded_vocab`).
-    ``assume_covered=True`` additionally skips the coverage anti-join's
-    corpus re-tokenization — pass it only when ``df`` IS the corpus
-    ``vocab`` was trained on (the caller contract documented on
-    :func:`_encoded_vocab`).
-    """
-    enc = _encoded_vocab(df, merges, vocab, text_col, assume_covered)
-    lens = enc.select("w", F.size("ss").cast("long").alias("_ntok"))
-    staged = df.select(F.col(id_col), _tokens(text_col).alias("_ts"))
-    doc_tokens = staged.select(
-        F.col(id_col), F.explode("_ts").alias("w")
-    )
+    ``staged`` tokenizes in a projection of its own before the explode
+    (the BPE encoder's plan) instead of inside it (the unigram
+    encoders'); ``sum_col`` names the per-document sum before the
+    coalesce.  Both only keep each encoder's existing plan."""
+    if staged:
+        doc_words = df.select(
+            F.col(id_col), _tokens(text_col).alias("_ts")
+        ).select(F.col(id_col), F.explode("_ts").alias("w"))
+    else:
+        doc_words = df.select(
+            F.col(id_col), F.explode(_tokens(text_col)).alias("w")
+        )
     agg = (
-        doc_tokens.join(lens, "w")
+        doc_words.join(lens, "w")
         .groupBy(id_col)
-        .agg(F.sum("_ntok").cast("long").alias("_sum"))
+        .agg(F.sum(n_col).cast("long").alias(sum_col))
     )
     return (
         df.select(id_col)
         .join(agg, id_col, "left")
         .select(
             F.col(id_col),
-            F.coalesce(F.col("_sum"), F.lit(0).cast("long")).alias(
+            F.coalesce(F.col(sum_col), F.lit(0).cast("long")).alias(
                 "n_tokens"
             ),
         )
     )
 
 
-def bpe_encode(
+def bpe_encode_len(
     df: DataFrame,
     merges: list,
     text_col: str = "text",
     id_col: str = "doc_id",
-    vocab: DataFrame | None = None,
-    out_col: str = "tokens",
-    assume_covered: bool = False,
 ) -> DataFrame:
-    """Per-document BPE token ARRAYS under a fitted merge list.
+    """Per-document BPE token counts under a fitted merge list.
 
-    The materializing sibling of :func:`bpe_encode_len` — returns
-    ``(id, tokens array<string>)`` where ``tokens`` is the
-    concatenation of each word's encoded symbol sequence in document
-    order (whitespace tokenization, then the merge chain per word).
-    Same plan: corpus-token explode + Heaps'-law vocabulary join; the
-    per-doc array is rebuilt with one ``posexplode``-ordered
-    ``array_agg`` + ``flatten``, so token order is the document's word
-    order (deterministic, no shuffle-order trust).  Zero-token
-    documents keep an empty array.
-
-    Not a contract query: the driver canonicalizer rejects top-level
-    array columns (the round-8 ``emb4`` lesson), so this surface is
-    pinned by ``tests/test_selection.py`` against the pure-Python BPE
-    model instead; :func:`bpe_encode_len` carries the oracle.
-    ``assume_covered`` follows :func:`bpe_encode_len`'s contract.
+    Applies ``merges`` (``(rank, lhs, rhs, ...)`` tuples or bare
+    ``(lhs, rhs)`` pairs, in rank order) to ``df``'s own vocabulary
+    (:func:`bpe_vocab`, every word char-split, so words the trainer
+    never saw encode too) with the :func:`_merge_apply` chain — the
+    same greedy application the trainer performed — then counts tokens
+    per document: one corpus-token explode joined against the ``(word →
+    encoded length)`` table, summed per document.  Documents with zero
+    tokens keep a 0 row, so the output feeds
+    ``packing.pack_documents``'s token budget directly.
     """
-    enc = _encoded_vocab(df, merges, vocab, text_col, assume_covered)
-    staged = df.select(F.col(id_col), _tokens(text_col).alias("_ts"))
-    doc_tokens = staged.select(
-        F.col(id_col), F.posexplode("_ts").alias("_pos", "w")
-    )
-    joined = doc_tokens.join(enc.select("w", "ss"), "w")
-    per_doc = joined.groupBy(id_col).agg(
-        F.flatten(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_pos"), F.col("ss")))
-            ).getField("ss")
-        ).alias(out_col)
-    )
-    return (
-        df.select(id_col)
-        .join(per_doc, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.coalesce(
-                F.col(out_col), F.expr("CAST(array() AS array<string>)")
-            ).alias(out_col),
-        )
+    enc = _merge_chain(bpe_vocab(df, text_col), merges)
+    lens = enc.select("w", F.size("ss").cast("long").alias("_ntok"))
+    return _doc_token_counts(
+        df, lens, "_ntok", id_col, text_col, staged=True, sum_col="_sum"
     )
 
 
@@ -1513,22 +1348,7 @@ def unigram_encode_len(
     seg = unigram_viterbi(
         df, text_col, max_piece_len=max_piece_len, min_count=min_count
     ).select(F.col("word").alias("w"), "n_pieces")
-    dt = df.select(
-        F.col(id_col), F.explode(_tokens(text_col)).alias("w")
-    )
-    agg = (
-        dt.join(seg, "w")
-        .groupBy(id_col)
-        .agg(F.sum("n_pieces").cast("long").alias("n_tokens"))
-    )
-    return (
-        df.select(F.col(id_col))
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_tokens", F.lit(0).cast("long")).alias("n_tokens"),
-        )
-    )
+    return _doc_token_counts(df, seg, "n_pieces", id_col, text_col)
 
 
 def unigram_train(
@@ -1581,32 +1401,11 @@ def unigram_train(
     lazy: each iteration ends in ``localCheckpoint(eager=True)`` —
     Spark jobs run at plan-construction time — because the unrolled
     lineage's repeated Catalyst re-analysis dominated wall time
-    (15.4 → 7.7 s at sf0.1, the A/B in ``_unigram_em``).  The trade
+    (15.4 → 7.7 s at sf0.1, the A/B at the loop below).  The trade
     is non-replayable lineage on executor loss; each checkpoint is
     ≤ (alphabet + max_pieces) rows, re-derivable by re-running the
     fit.
     """
-    staged, kept, score = _unigram_em(
-        df, text_col, max_piece_len, min_count, n_iters, max_pieces, scale
-    )
-    return kept.join(score(kept), "piece").select(
-        "piece", "c", F.col("lp").alias("lp_micro")
-    )
-
-
-def _unigram_em(
-    df: DataFrame,
-    text_col: str,
-    max_piece_len: int,
-    min_count: int,
-    n_iters: int,
-    max_pieces: int | None,
-    scale: int,
-) -> tuple:
-    """The tok8 EM loop factored for reuse (:func:`unigram_train` and
-    :func:`unigram_encode_len_trained`): returns ``(staged, kept,
-    score)`` — the persisted ``(w, wc, _sp)`` word frame, the final
-    kept inventory ``(piece, c)``, and the add-one scoring function."""
     from nlp_to_nosql_spark.plans.caching import persisted
 
     if max_piece_len < 1:
@@ -1712,49 +1511,8 @@ def _unigram_em(
             .unionByName(multi)
             .localCheckpoint(eager=True)
         )
-    return staged, kept, _score
-
-
-def unigram_encode_len_trained(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_piece_len: int = 4,
-    min_count: int = 2,
-    n_iters: int = 2,
-    max_pieces: int | None = None,
-) -> DataFrame:
-    """Per-document token counts under the TRAINED unigram-LM tokenizer
-    — tok8's encode pass (what :func:`unigram_encode_len` is to tok7's
-    seed scores): run the EM loop, segment every distinct word ONCE
-    under the FINAL inventory's scores, then one corpus-token explode
-    joins each word occurrence to its trained piece count and one
-    per-doc sum emits ``(id, n_tokens)`` — the packing feed, total
-    over the input (no-word docs count 0).  Same two-exchange encode
-    shape as pipe6/pipe9; the EM prefix never touches the corpus after
-    the word count."""
-    L = int(max_piece_len)
-    staged, kept, score = _unigram_em(
-        df, text_col, max_piece_len, min_count, n_iters, max_pieces,
-        1_000_000,
-    )
-    seg = _viterbi_segment(staged, score(kept), L).select(
-        "w",
-        F.size(F.col("_wk").getField("ps")).cast("long").alias("n_pieces"),
-    )
-    dt = df.select(F.col(id_col), F.explode(_tokens(text_col)).alias("w"))
-    agg = (
-        dt.join(seg, "w")
-        .groupBy(id_col)
-        .agg(F.sum("n_pieces").cast("long").alias("n_tokens"))
-    )
-    return (
-        df.select(F.col(id_col))
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_tokens", F.lit(0).cast("long")).alias("n_tokens"),
-        )
+    return kept.join(_score(kept), "piece").select(
+        "piece", "c", F.col("lp").alias("lp_micro")
     )
 
 
@@ -1764,11 +1522,11 @@ def unigram_save(inventory: DataFrame, path: str) -> None:
     tok8-family tokenizer-artifact contract (:func:`bpe_save`'s shape
     for the unigram tier): the EM runs ONCE, and the vocabulary-sized
     table ships to every downstream encode job.  Writing the artifact
-    is ALSO the performance split pipe11 needs: an in-plan
-    ``unigram_encode_len_trained`` carries the whole unrolled-EM
-    lineage into the encode/pack stages, where every eager analysis
-    (persist, checkpoint, write) re-walks the giant tree; the artifact
-    severs that lineage at a ≤ (max_pieces + alphabet)-row table."""
+    is ALSO the performance split pipe11 needs: encoding in the same
+    plan as the EM carries the whole unrolled-EM lineage into the
+    encode/pack stages, where every eager analysis (persist,
+    checkpoint, write) re-walks the giant tree; the artifact severs
+    that lineage at a ≤ (max_pieces + alphabet)-row table."""
     inventory.select("piece", "c", "lp_micro").coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
@@ -1815,11 +1573,12 @@ def unigram_encode_len_artifact(
     (:func:`unigram_save`) — the artifact-consuming encode pass
     (``lm6``/``tok6`` pattern): segment every distinct word once under
     the loaded scores, join token occurrences to piece counts, sum per
-    document.  Values are identical to
-    :func:`unigram_encode_len_trained` when the artifact came from the
-    same-parameter :func:`unigram_train` over the same corpus (the
-    parquet roundtrip is BIGINT-exact), but the encode plan's lineage
-    starts at the tiny artifact scan instead of the unrolled EM chain.
+    document.  When the artifact came from :func:`unigram_train` over
+    the same corpus, the counts equal the DuckDB twin
+    :func:`unigram_encode_len_trained_ctes` (EM and encode in one
+    chain; the parquet roundtrip is BIGINT-exact), but the encode
+    plan's lineage starts at the tiny artifact scan instead of the
+    unrolled EM chain.
 
     Segmentability caveat: the inventory must contain every single
     character occurring in ``df``'s words (guaranteed when the
@@ -1844,20 +1603,7 @@ def unigram_encode_len_artifact(
         "w",
         F.size(F.col("_wk").getField("ps")).cast("long").alias("n_pieces"),
     )
-    dt = df.select(F.col(id_col), F.explode(_tokens(text_col)).alias("w"))
-    agg = (
-        dt.join(seg, "w")
-        .groupBy(id_col)
-        .agg(F.sum("n_pieces").cast("long").alias("n_tokens"))
-    )
-    return (
-        df.select(F.col(id_col))
-        .join(agg, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_tokens", F.lit(0).cast("long")).alias("n_tokens"),
-        )
-    )
+    return _doc_token_counts(df, seg, "n_pieces", id_col, text_col)
 
 
 def unigram_train_local(
@@ -1869,8 +1615,8 @@ def unigram_train_local(
     scale: int = 1_000_000,
 ) -> dict:
     """Pure-Python twin of :func:`unigram_train` over a ``{word:
-    count}`` frame — the hypothesis pin (the :func:`bpe_train_local`
-    convention).  Returns ``{piece: (c, lp_micro)}``."""
+    count}`` frame — the hypothesis pin.  Returns ``{piece: (c,
+    lp_micro)}``."""
     import math
     from collections import Counter
 

@@ -144,8 +144,8 @@ def sessionize_stream(
     # events table is pinned TIMESTAMP_NTZ by sources.catalog._normalize,
     # where epoch_us is zone-free and exact; an LTZ input would get
     # session-local wall-clock differences (off by the offset delta
-    # across a DST transition) — use functions.time.epoch_us_instant
-    # for LTZ columns needing elapsed time.
+    # across a DST transition) — use F.unix_micros for LTZ columns
+    # needing elapsed time.
     events = events.withColumn("_ts_us", epoch_us(F.col("ts")).cast("long"))
 
     def update(key, pdfs, state: GroupState):

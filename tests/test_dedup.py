@@ -40,13 +40,15 @@ def test_dedup_exact(docs):
 
 def test_shingles_short_text(spark):
     df = spark.createDataFrame([(1, "tiny doc")], "i: long, t: string")
-    row = df.select(D.shingles(F.col("t"), 3).alias("s")).first()
+    words = F.split(D.normalize_text(F.col("t")), " ")
+    row = df.select(D.shingles_of_words(words, 3).alias("s")).first()
     assert row["s"] == ["tiny doc"]
 
 
 def test_shingles_count(spark):
     df = spark.createDataFrame([(1, "a b c d e")], "i: long, t: string")
-    row = df.select(D.shingles(F.col("t"), 3).alias("s")).first()
+    words = F.split(D.normalize_text(F.col("t")), " ")
+    row = df.select(D.shingles_of_words(words, 3).alias("s")).first()
     assert row["s"] == ["a b c", "b c d", "c d e"]
 
 

@@ -334,10 +334,10 @@ def test_bpe_encode_len_matches_python_and_twin(docs):
         bpe_train,
     )
 
-    merges, vocab = bpe_train(docs, n_merges=4, return_vocab=True)
+    merges = bpe_train(docs, n_merges=4)
     got = sorted(
         (r["doc_id"], r["n_tokens"])
-        for r in bpe_encode_len(docs, merges, vocab=vocab).collect()
+        for r in bpe_encode_len(docs, merges).collect()
     )
     _, py_vocab = _py_bpe_train(ROWS, 4)
     want = sorted(
@@ -357,15 +357,18 @@ def test_bpe_encode_len_matches_python_and_twin(docs):
 
 
 def test_bpe_encode_without_vocab_rederives(docs):
-    """merges-only encoding (no vocab frame) equals the reuse path."""
+    """The encoder re-derives the vocabulary from ``df`` and needs only
+    the merge ORDER: ranked ``(rank, lhs, rhs, count)`` tuples and bare
+    ``(lhs, rhs)`` pairs encode identically."""
     from nlp_to_nosql_spark.operators.selection import (
         bpe_encode_len,
         bpe_train,
     )
 
-    merges, vocab = bpe_train(docs, n_merges=3, return_vocab=True)
-    a = sorted(map(tuple, bpe_encode_len(docs, merges, vocab=vocab).collect()))
-    b = sorted(map(tuple, bpe_encode_len(docs, merges).collect()))
+    merges = bpe_train(docs, n_merges=3)
+    bare = [(m[1], m[2]) for m in merges]
+    a = sorted(map(tuple, bpe_encode_len(docs, merges).collect()))
+    b = sorted(map(tuple, bpe_encode_len(docs, bare).collect()))
     assert a == b
 
 
@@ -427,41 +430,6 @@ def test_dsir_null_target_scored_as_pool(spark):
         ).collect()
     }
     assert 99 in got
-
-
-def test_bpe_encode_token_arrays_match_python(docs):
-    from nlp_to_nosql_spark.operators.selection import bpe_encode, bpe_train
-
-    merges, vocab = bpe_train(docs, n_merges=4, return_vocab=True)
-    got = {
-        r["doc_id"]: r["tokens"]
-        for r in bpe_encode(docs, merges, vocab=vocab).collect()
-    }
-    _, py_vocab = _py_bpe_train(ROWS, 4)
-    for i, text, _ in ROWS:
-        want = [s for w in _toks(text) for s in py_vocab[w]]
-        assert got[i] == want, (i, got[i], want)
-    # zero-token docs keep explicit empty arrays
-    assert got[2] == [] and got[3] == []
-
-
-def test_bpe_encode_tokens_consistent_with_len(docs):
-    from nlp_to_nosql_spark.operators.selection import (
-        bpe_encode,
-        bpe_encode_len,
-        bpe_train,
-    )
-
-    merges = bpe_train(docs, n_merges=3)
-    toks = {
-        r["doc_id"]: len(r["tokens"])
-        for r in bpe_encode(docs, merges).collect()
-    }
-    lens = {
-        r["doc_id"]: r["n_tokens"]
-        for r in bpe_encode_len(docs, merges).collect()
-    }
-    assert toks == lens
 
 
 def test_lr_micro_ln_agreement_spark_duckdb_python(spark):
@@ -583,26 +551,6 @@ def test_gumbel_micro_ln_agreement_full_sweep(spark):
         "DuckDB nested ln diverges from CPython at buckets "
         f"{np.nonzero(got_duck != py)[0][:5]}"
     )
-
-
-def test_bpe_encode_len_assume_covered(docs):
-    """assume_covered=True (the training-corpus fast path, round-10
-    advice) must equal the default coverage-anti-join path when df IS
-    the training corpus — and its plan must not re-derive the corpus
-    vocabulary (exactly one Generate over the corpus tokens feeds the
-    doc-token side; the reused vocab frame is served as-is)."""
-    from nlp_to_nosql_spark.operators.selection import (
-        bpe_encode_len,
-        bpe_train,
-    )
-
-    merges, vocab = bpe_train(docs, n_merges=3, return_vocab=True)
-    safe = bpe_encode_len(docs, merges, vocab=vocab)
-    fast = bpe_encode_len(docs, merges, vocab=vocab, assume_covered=True)
-    want = sorted(tuple(r) for r in safe.collect())
-    got = sorted(tuple(r) for r in fast.collect())
-    assert got == want
-    vocab.unpersist()
 
 
 def test_bpe_encode_len_plan_jvm_only(docs):
@@ -812,50 +760,35 @@ def test_bpe_sql_twins_survive_pair_exhaustion(spark):
     assert got_counts == want_counts
 
 
-def test_bpe_encode_vocab_reuse_covers_unseen_words(spark, docs):
-    """vocab= is a reuse optimization, not a coverage contract: words
-    absent from the training vocabulary are chain-encoded via the
-    left-anti fallback, equal to the vocab=None path (round-10 review
-    finding — the old inner join silently dropped them)."""
-    from nlp_to_nosql_spark.operators.selection import (
-        bpe_encode_len,
-        bpe_train,
-    )
-
-    merges, vocab = bpe_train(docs, n_merges=3, return_vocab=True)
-    new_df = spark.createDataFrame(
-        [(0, "the theatre"), (1, "wordxyz unseen")],
-        "doc_id long, text string",
-    )
-    with_vocab = sorted(
-        map(tuple, bpe_encode_len(new_df, merges, vocab=vocab).collect())
-    )
-    without = sorted(
-        map(tuple, bpe_encode_len(new_df, merges).collect())
-    )
-    assert with_vocab == without
-    assert all(n > 0 for _, n in with_vocab)
-
-
-@pytest.mark.parametrize("n", [1, 4, 8])
-def test_bpe_train_local_equals_distributed(docs, n):
-    """The production-shaped local-loop trainer (one word-count job,
-    driver-side merge loop) must equal the distributed trainer at
-    every N — same greedy semantics, same tie order."""
-    from nlp_to_nosql_spark.operators.selection import (
-        bpe_train,
-        bpe_train_local,
-    )
-
-    assert bpe_train_local(docs, n_merges=n) == bpe_train(docs, n_merges=n)
-
-
 def test_bpe_train_local_vocab_cap(docs, monkeypatch):
     from nlp_to_nosql_spark.operators import selection
 
     monkeypatch.setattr(selection, "_LOCAL_VOCAB_CAP", 3)
     with pytest.raises(ValueError, match="vocabulary exceeds 3"):
-        selection.bpe_train_local(docs, n_merges=1)
+        selection.bpe_train(docs, n_merges=1)
+
+
+def test_bpe_train_job_count_independent_of_merges(spark, docs):
+    """One word-count job shape, then the merge loop on the driver:
+    fitting 8 merges dispatches exactly as many Spark jobs as fitting
+    1 (a per-merge Spark loop adds jobs with every merge)."""
+    from nlp_to_nosql_spark.operators.selection import bpe_train
+
+    sc = spark.sparkContext
+
+    def jobs(n):
+        group = f"bpe_train_jobs_{n}"
+        sc.setJobGroup(group, group)
+        try:
+            merges = bpe_train(docs, n_merges=n)
+        finally:
+            sc.setJobGroup(None, None)
+        assert len(merges) == n
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    one, eight = jobs(1), jobs(8)
+    assert one >= 1
+    assert eight == one
 
 
 # ---------------------------------------------------------------------------
@@ -872,10 +805,10 @@ def test_bpe_save_load_roundtrip(spark, docs, tmp_path):
         bpe_encode_len,
         bpe_load,
         bpe_save,
-        bpe_train_local,
+        bpe_train,
     )
 
-    merges = bpe_train_local(docs, n_merges=4)
+    merges = bpe_train(docs, n_merges=4)
     path = str(tmp_path / "merges.parquet")
     bpe_save(merges, path, spark)
     loaded = bpe_load(path, spark)
@@ -1192,33 +1125,40 @@ def test_unigram_train_prune_keeps_chars_segmentable(spark):
 
 def test_unigram_artifact_roundtrip_matches_in_plan_encode(spark):
     """pipe11's artifact split (unigram_save -> unigram_load ->
-    unigram_encode_len_artifact) must produce exactly the in-plan
-    unigram_encode_len_trained counts — the parquet roundtrip is
+    unigram_encode_len_artifact) must produce exactly the counts of the
+    DuckDB twin that trains and encodes in ONE CTE chain
+    (unigram_encode_len_trained_ctes) — the parquet roundtrip is
     BIGINT-exact, so only the lineage (not any value) changes."""
     import tempfile
 
     from nlp_to_nosql_spark.operators.selection import (
         unigram_encode_len_artifact,
-        unigram_encode_len_trained,
+        unigram_encode_len_trained_ctes,
         unigram_load,
         unigram_save,
         unigram_train,
     )
 
-    docs = spark.createDataFrame(
-        [
-            (1, "banana band bandana"),
-            (2, "ana banana banal"),
-            (3, ""),
-            (4, "band ana ana"),
-        ],
-        "doc_id long, text string",
-    )
+    rows = [
+        (1, "banana band bandana"),
+        (2, "ana banana banal"),
+        (3, ""),
+        (4, "band ana ana"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
     params = dict(max_piece_len=3, min_count=2, n_iters=2, max_pieces=5)
-    want = {
-        (r["doc_id"], r["n_tokens"])
-        for r in unigram_encode_len_trained(docs, **params).collect()
-    }
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    want = set(
+        map(
+            tuple,
+            con.execute(
+                "WITH RECURSIVE "
+                + unigram_encode_len_trained_ctes(**params)
+                + " SELECT doc_id, n_tokens FROM encoded"
+            ).fetchall(),
+        )
+    )
     path = tempfile.mkdtemp(prefix="uni_inv_test_")
     inv = unigram_train(docs, **params)
     unigram_save(inv, path)
@@ -1232,6 +1172,7 @@ def test_unigram_artifact_roundtrip_matches_in_plan_encode(spark):
             docs, path, max_piece_len=3
         ).collect()
     }
+    assert len(want) == len(rows)
     assert got == want
 
 

@@ -310,14 +310,17 @@ def main() -> int:
         )
         return pair_set_quality(pred, truth)
 
-    def bpe_train_probe(docs):
-        # the tok4 trainer LOOP: the per-iteration collects (pair argmax)
-        # happen inside this call, so wall time covers the whole fit;
-        # the returned final vocabulary frame is the noop-write target
+    def bpe_train_probe(docs, n_merges):
+        # the tok4 trainer: the word-count collect and the driver-side
+        # merge loop both run inside this call, so wall time covers the
+        # whole fit; the ranked merge table is the noop-write target
         from nlp_to_nosql_spark.operators.selection import bpe_train
 
-        merges, vocab = bpe_train(docs, n_merges=4, return_vocab=True)
-        return vocab
+        merges = bpe_train(docs, n_merges=n_merges)
+        return docs.sparkSession.createDataFrame(
+            [(r, l, rh, c) for r, l, rh, c in merges],
+            "merge_rank int, lhs string, rhs string, pair_count long",
+        )
 
     def bpe_encode_probe(docs):
         # tok5 end-to-end: train 4 merges then encode every document
@@ -326,8 +329,7 @@ def main() -> int:
             bpe_train,
         )
 
-        merges, vocab = bpe_train(docs, n_merges=4, return_vocab=True)
-        return bpe_encode_len(docs, merges, vocab=vocab)
+        return bpe_encode_len(docs, bpe_train(docs, n_merges=4))
 
     def semdedup_fitted_probe(emb):
         # dedup15: the sampled integer-micro Lloyd's fit (iteration
@@ -354,22 +356,8 @@ def main() -> int:
             bpe_train,
         )
 
-        merges, vocab = bpe_train(docs, n_merges=4, return_vocab=True)
-        enc = bpe_encode_len(docs, merges, vocab=vocab, assume_covered=True)
+        enc = bpe_encode_len(docs, bpe_train(docs, n_merges=4))
         return pack_by_token_budget(enc, "doc_id", "n_tokens", budget=5_000)
-
-    def bpe_local_probe(docs):
-        # the PRODUCTION trainer at production merge counts: one
-        # distributed word count, then the incremental vocab-local loop
-        # (n_merges=1000 ≫ the 4-merge contract; the rotated copies give
-        # the big corpus a ~26× vocabulary, so the loop has real work)
-        from nlp_to_nosql_spark.operators.selection import bpe_train_local
-
-        merges = bpe_train_local(docs, n_merges=1000)
-        return docs.sparkSession.createDataFrame(
-            [(r, l, rh, c) for r, l, rh, c in merges],
-            "merge_rank int, lhs string, rhs string, pair_count long",
-        )
 
     def target_lm_probe(docs):
         # lm2: stupid-backoff LM fit on the target split, pool scored —
@@ -690,11 +678,14 @@ def main() -> int:
             "sel3_dsir_gumbel": lambda: dsir_select_gumbel(
                 docs, F.col("lang") == "en", n_buckets=4096, k=100, seed=7
             ),
-            "tok4_bpe_train": lambda: bpe_train_probe(docs),
+            "tok4_bpe_train": lambda: bpe_train_probe(docs, 4),
             "tok5_bpe_encode": lambda: bpe_encode_probe(docs),
             "dedup15_semdedup_fitted": lambda: semdedup_fitted_probe(emb),
             "pipe6_bpe_pack": lambda: bpe_pack_probe(docs),
-            "tok_bpe_train_local_1k": lambda: bpe_local_probe(docs),
+            # production merge count: n_merges=1000 ≫ the 4-merge
+            # contract; the rotated copies give the big corpus a ~26×
+            # vocabulary, so the driver-side loop has real work
+            "tok_bpe_train_1k": lambda: bpe_train_probe(docs, 1000),
             "lm2_target_ppl": lambda: target_lm_probe(docs),
             "lm3_ppl_buckets": lambda: ppl_buckets_probe(docs),
             "eval6_score_correlation": lambda: score_corr_probe(docs),
